@@ -51,8 +51,7 @@ def test_read_new_runs_delta_only(spark, tmp_path):
     assert got == ["new1", "new2"]  # the 0101 run is NOT re-read
     assert len(folders) == 2
     assert max_ts == dt.datetime(2024, 1, 2, 3)
-    # provenance column present for downstream partition recovery
-    assert "__run_folder" in df.columns
+    assert df.columns == [f.name for f in schemas.RAW_MEDIA.fields]
 
 
 def test_read_new_runs_empty_delta(spark, tmp_path):

@@ -88,3 +88,88 @@ def test_fact_schema_matches_declared(spark, raw_visitors):
     want = {f.name: f.dataType.simpleString()
             for f in schemas.FACT_MEDIA_ENGAGEMENT.fields}
     assert got == want
+
+
+def _old_dim_media(raw_media, run_ts):
+    """The pre-simplification form: full-row distinct before the key dedup."""
+    from pyspark.sql import functions as F
+
+    from wistia_video_analytics_project_spark.operators import conform
+
+    ts = F.lit(run_ts).cast("timestamp")
+    dim = conform.select_rename(
+        raw_media,
+        {
+            "media_id": "hashed_id",
+            "title": F.coalesce(F.col("name"), F.lit("Untitled")),
+            "url": conform.media_url("hashed_id"),
+            "channel": conform.classify_channel("name"),
+            "created_at": conform.epoch_to_timestamp("created", fallback=ts),
+            "processed_at": ts,
+        },
+    ).distinct()
+    dim = conform.repair_key(dim, "media_id", "media", ["title", "url", "created_at"])
+    return quality.dedup_keep_first(dim, ["media_id"], order_by=["created_at", "title"])
+
+
+def _old_dim_visitor(raw_visitors, run_ts):
+    from pyspark.sql import functions as F
+
+    from wistia_video_analytics_project_spark.operators import conform
+
+    dim = conform.select_rename(
+        raw_visitors,
+        {
+            "visitor_id": "visitor_key",
+            "ip_address": F.coalesce(F.col("ip_address"), F.lit("Unknown")),
+            "country": F.coalesce(F.col("country"), F.lit("Unknown")),
+            "processed_at": F.lit(run_ts).cast("timestamp"),
+        },
+    ).distinct()
+    dim = conform.repair_key(dim, "visitor_id", "visitor", ["ip_address", "country"])
+    return quality.dedup_keep_first(dim, ["visitor_id"], order_by=["ip_address", "country"])
+
+
+def _old_fact(raw_visitors, run_ts):
+    """The pre-simplification form: a keep-first dedup after the groupBy."""
+    return quality.dedup_keep_first(
+        model.build_fact_engagement(raw_visitors, run_ts),
+        ["media_id", "visitor_id", "date"],
+        order_by=["loaded_at", "play_count"],
+    )
+
+
+def _rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("extra", ["none", "blank_key", "duplicated_null_key"])
+def test_builders_match_old_distinct_and_dedup_forms(spark, raw_media, raw_visitors, extra):
+    """Dropping the dims' full-row distinct and the fact's trailing dedup
+    changes no row: ``repair_key`` is a function of the row, so exact
+    duplicates share a key, and the groupBy keys are already unique."""
+    ev = {"type": "play", "time": 1704067200, "duration_watched": 5.0,
+          "percent_watched": 25.0}
+    media_extra = {
+        "none": [],
+        "blank_key": [("  ", "blank key video", 1700000400)],
+        "duplicated_null_key": [(None, "orphan video", 1700000300)],
+    }[extra]
+    visitor_extra = {
+        "none": [],
+        "blank_key": [("", "2.2.2.2", "GB", "m1", [ev])],
+        "duplicated_null_key": [(None, "3.3.3.3", "IT", "m2", [ev])] * 2,
+    }[extra]
+    media = raw_media.unionByName(spark.createDataFrame(media_extra, schemas.RAW_MEDIA))
+    visitors = raw_visitors.unionByName(
+        spark.createDataFrame(visitor_extra, schemas.RAW_VISITOR)
+    )
+    assert _rows(model.build_dim_media(media, RUN_TS)) == _rows(_old_dim_media(media, RUN_TS))
+    assert _rows(model.build_dim_visitor(visitors, RUN_TS)) == _rows(
+        _old_dim_visitor(visitors, RUN_TS)
+    )
+    assert _rows(model.build_fact_engagement(visitors, RUN_TS)) == _rows(
+        _old_fact(visitors, RUN_TS)
+    )

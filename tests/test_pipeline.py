@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 
 from wistia_video_analytics_project_spark import schemas
+from wistia_video_analytics_project_spark.cache import release_caches
 from wistia_video_analytics_project_spark.pipeline import (
     Pipeline,
     Stage,
@@ -17,7 +18,7 @@ RUN_TS = dt.datetime(2024, 6, 1, 2, 0)
 
 
 def test_toposort_and_cycle_detection():
-    with pytest.raises(ValueError, match="cycle"):
+    with pytest.raises(ValueError, match="declared earlier"):
         Pipeline([Stage("a", lambda c: None, ("b",)), Stage("b", lambda c: None, ("a",))])
     with pytest.raises(ValueError, match="unknown"):
         Pipeline([Stage("a", lambda c: None, ("ghost",))])
@@ -79,26 +80,24 @@ def test_wistia_pipeline_end_to_end(spark):
     assert fact.play_count == 1 and str(fact.date) == "2024-01-01"
 
 
-def test_stage_retries_until_success(spark):
-    attempts = {"n": 0}
-
-    def flaky(ctx):
-        attempts["n"] += 1
-        if attempts["n"] < 3:
-            raise RuntimeError("transient")
-        return None
-
-    p = Pipeline([Stage("flaky", flaky, retries=3)])
-    _, results = p.run(spark, RUN_TS)
-    assert results[0].status == "succeeded" and attempts["n"] == 3
-
-
-def test_stage_retries_exhausted(spark):
-    def always(ctx):
-        raise RuntimeError("permanent")
-
-    p = Pipeline([Stage("bad", always, retries=2),
-                  Stage("child", lambda c: None, ("bad",))])
-    _, results = p.run(spark, RUN_TS)
-    status = {r.name: r.status for r in results}
-    assert status == {"bad": "failed", "child": "skipped"}
+def test_shared_stage_output_is_cached(spark):
+    """A stage feeding two or more stages is cached; a single-consumer
+    stage is not (``ingest_visitors`` feeds dim_visitor and the fact)."""
+    ev = {"type": "play", "time": 1704067200, "duration_watched": 1.0,
+          "percent_watched": 1.0}
+    pipe = wistia_pipeline(
+        raw_media=lambda ctx: ctx.spark.createDataFrame(
+            [("m1", "intro", 1700000000)], schemas.RAW_MEDIA
+        ),
+        raw_visitors=lambda ctx: ctx.spark.createDataFrame(
+            [("v1", "1.1.1.1", "US", "m1", [ev])], schemas.RAW_VISITOR
+        ),
+        sink=lambda table, df, ctx: None,
+    )
+    ctx, results = pipe.run(spark, RUN_TS)
+    try:
+        assert all(r.status == "succeeded" for r in results), results
+        assert ctx.outputs["ingest_visitors"].is_cached
+        assert not ctx.outputs["ingest_media"].is_cached
+    finally:
+        release_caches()

@@ -59,8 +59,8 @@ def test_shipping_priority_customer_join_unhinted(spark):
 
 
 def test_fact_dedup_reuses_groupby_partitioning(spark):
-    """model.build_fact_engagement: the dedup window must NOT add a second
-    shuffle after the groupBy on the same keys."""
+    """model.build_fact_engagement: the groupBy is the only shuffle and
+    no dedup window follows it (its keys are already unique)."""
     import datetime as dt
 
     from wistia_video_analytics_project_spark import schemas
@@ -77,6 +77,27 @@ def test_fact_dedup_reuses_groupby_partitioning(spark):
 
     n_shuffles = len(re.findall(r"\bExchange hashpartitioning", plan))
     assert n_shuffles == 1, f"expected exactly 1 shuffle, got {n_shuffles}:\n{plan}"
+    assert "Window" not in plan, plan
+
+
+def test_dim_builders_single_shuffle(spark):
+    """model.build_dim_media / build_dim_visitor: the key dedup is the
+    only shuffle — no full-row distinct in front of it."""
+    import datetime as dt
+    import re
+
+    from wistia_video_analytics_project_spark import schemas
+    from wistia_video_analytics_project_spark.operators import model
+
+    run_ts = dt.datetime(2024, 1, 1)
+    media = spark.createDataFrame([("m1", "intro", 1700000000)], schemas.RAW_MEDIA)
+    visitors = spark.createDataFrame(
+        [("v1", "1.1.1.1", "US", "m1", [])], schemas.RAW_VISITOR
+    )
+    for dim in (model.build_dim_media(media, run_ts),
+                model.build_dim_visitor(visitors, run_ts)):
+        plan = plans.executed_plan(dim)
+        assert len(re.findall(r"\bExchange hashpartitioning", plan)) == 1, plan
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):

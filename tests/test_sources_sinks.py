@@ -1,16 +1,14 @@
-"""Sources (REST ingester, watermark) and sinks (parquet/json)."""
+"""Sources (REST ingester, watermark) and sinks (parquet, CSV, JDBC)."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 
 import pytest
 from pyspark.sql import types as T
 
 from wistia_video_analytics_project_spark import sinks
-from wistia_video_analytics_project_spark.sources import readers
 from wistia_video_analytics_project_spark.sources.rest import (
     RestIngester,
     fetch_distributed,
@@ -172,30 +170,6 @@ def test_parquet_sink_partitioned(spark, tmp_path):
     assert back.count() == 2
 
 
-def test_json_sink_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([("m1", 7)], "media_id string, n int")
-    out = str(tmp_path / "raw")
-    sinks.write_json(df, out)
-    lines = [
-        line
-        for f in os.listdir(out)
-        if f.endswith(".json")
-        for line in open(os.path.join(out, f)).read().splitlines()
-        if line
-    ]
-    assert [json.loads(l) for l in lines] == [{"media_id": "m1", "n": 7}]
-
-
-def test_read_json_with_schema(spark, tmp_path):
-    p = tmp_path / "m.json"
-    p.write_text('{"hashed_id": "m1", "name": "t", "created": 1700000000}')
-    from wistia_video_analytics_project_spark import schemas
-
-    df = readers.read_json(spark, str(p), schemas.RAW_MEDIA)
-    r = df.collect()[0]
-    assert (r.hashed_id, r.created) == ("m1", 1700000000)
-
-
 def test_jdbc_truncate_load_roundtrip(spark):
     """S8 gold load against Spark's bundled Derby: write, overwrite with
     truncate semantics (idempotent rerun), read back."""
@@ -338,53 +312,6 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 10_000
     assert back.agg(F.sum("v")).collect()[0][0] == 2 * sum(range(10_000))
-
-
-def test_sorted_write_clusters_rows_within_files(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from wistia_video_analytics_project_spark.sinks import write_parquet
-
-    path = str(tmp_path / "sorted_out")
-    df = spark.range(0, 5_000).withColumn(
-        "k", (F.col("id") * 7919) % 1000
-    ).repartition(4)
-    write_parquet(df, path, sort_within_partitions_by=["k"])
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        ks = [r.k for r in spark.read.parquet(f"file://{f}").select("k").collect()]
-        assert ks == sorted(ks), f
-
-
-def test_orc_roundtrip_partitioned(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from wistia_video_analytics_project_spark.sinks import write_orc
-    from wistia_video_analytics_project_spark.sources import read_orc
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("grp", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", -2.0), (3, "a", 0.25)], schema
-    )
-    path = str(tmp_path / "orc_out")
-    write_orc(df, path, partition_by=["grp"])
-    import os
-
-    assert any(d.startswith("grp=") for d in os.listdir(path))
-    back = read_orc(spark, path, schema).select("id", "grp", "score")
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in df.collect()
-    )
-    # partition pruning: a grp filter must prune to one partition dir
-    pruned = read_orc(spark, path).filter("grp = 'a'")
-    assert pruned.count() == 2
 
 
 def _page_server(records_by_path, per_page=2, since_filter=None):
@@ -586,28 +513,6 @@ def test_rest_sink_retries_then_fails_loudly(spark):
             )
     finally:
         srv.shutdown()
-
-
-def test_read_xml_native(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from wistia_video_analytics_project_spark.sources import read_xml
-
-    (tmp_path / "m.xml").write_text(
-        "<medias><media><id>7</id><name>clip</name><plays>42</plays></media>"
-        "<media><id>8</id><name>promo</name><plays>3</plays></media></medias>"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("plays", T.LongType()),
-        ]
-    )
-    got = sorted(
-        tuple(r) for r in read_xml(spark, str(tmp_path), "media", schema).collect()
-    )
-    assert got == [(7, "clip", 42), (8, "promo", 3)]
 
 
 def test_read_text_docs_wholefile_ids_stable(spark, tmp_path):

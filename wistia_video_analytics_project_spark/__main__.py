@@ -79,8 +79,8 @@ def main() -> None:
           f"visitor run folders newer than {since}")
 
     pipe = wistia_pipeline(
-        raw_media=lambda ctx: raw_media.drop("__run_folder"),
-        raw_visitors=lambda ctx: raw_visitors.drop("__run_folder"),
+        raw_media=lambda ctx: raw_media,
+        raw_visitors=lambda ctx: raw_visitors,
         sink=lambda table, df, ctx: sinks.write_parquet(
             df,
             os.path.join(out, "silver", table),
@@ -89,7 +89,7 @@ def main() -> None:
     )
     ctx, results = pipe.run(spark, run_ts)
     for r in results:
-        print(f"  stage {r.name}: {r.status} ({r.duration_s:.2f}s)")
+        print(f"  stage {r.name}: {r.status}")
     quality.assert_unique(ctx["fact_engagement"], ["media_id", "visitor_id", "date"])
 
     # --- gold: SQL surface ----------------------------------------------

@@ -35,8 +35,11 @@ def _ts_lit(run_ts: dt.datetime):
 def build_dim_media(raw_media: DataFrame, run_ts: dt.datetime) -> DataFrame:
     """Raw media records -> ``dim_media`` (`notebool-03.py:133-154, 279-319`).
 
-    select/rename -> channel classification -> epoch cast -> distinct ->
-    PK repair -> keep-first dedup on media_id.
+    select/rename -> channel classification -> epoch cast -> PK repair ->
+    keep-first dedup on media_id. The reference's full-row ``distinct``
+    is not needed: ``repair_key`` is a function of the row, so exact
+    duplicates share a key and the key dedup drops them, leaving one
+    shuffle.
     """
     dim = conform.select_rename(
         raw_media,
@@ -48,13 +51,16 @@ def build_dim_media(raw_media: DataFrame, run_ts: dt.datetime) -> DataFrame:
             "created_at": conform.epoch_to_timestamp("created", fallback=_ts_lit(run_ts)),
             "processed_at": _ts_lit(run_ts),
         },
-    ).distinct()
+    )
     dim = conform.repair_key(dim, "media_id", "media", ["title", "url", "created_at"])
     return quality.dedup_keep_first(dim, ["media_id"], order_by=["created_at", "title"])
 
 
 def build_dim_visitor(raw_visitors: DataFrame, run_ts: dt.datetime) -> DataFrame:
-    """Raw visitor records -> ``dim_visitor`` (`notebool-03.py:170-183`)."""
+    """Raw visitor records -> ``dim_visitor`` (`notebool-03.py:170-183`).
+
+    Same shape as :func:`build_dim_media`: PK repair, then keep-first
+    dedup on visitor_id, which also drops exact duplicates."""
     dim = conform.select_rename(
         raw_visitors,
         {
@@ -63,7 +69,7 @@ def build_dim_visitor(raw_visitors: DataFrame, run_ts: dt.datetime) -> DataFrame
             "country": F.coalesce(F.col("country"), F.lit("Unknown")),
             "processed_at": _ts_lit(run_ts),
         },
-    ).distinct()
+    )
     dim = conform.repair_key(dim, "visitor_id", "visitor", ["ip_address", "country"])
     return quality.dedup_keep_first(dim, ["visitor_id"], order_by=["ip_address", "country"])
 
@@ -85,11 +91,12 @@ def build_fact_engagement(
        play_count, play_rate = round(count/10, 2),
        total_watch_time = round(sum(coalesce(duration, 0)), 2),
        avg_percent = round(avg(coalesce(percent, 0)), 2)   (A1-A3)
-    6. key-not-null filter, deterministic keep-first dedup.
+    6. key-not-null filter. The reference's keep-first dedup after it
+       (`notebool-03.py:321-322`) is not needed: the groupBy already makes
+       (media_id, visitor_id, date) unique and only filters follow it;
+       reruns that union several run folders do so before the groupBy.
 
-    Shuffle profile at scale: ONE shuffle (the groupBy). The dedup window
-    partitions by the same keys as the groupBy, so Catalyst reuses the
-    aggregation's hash partitioning — no second shuffle.
+    Shuffle profile at scale: ONE shuffle (the groupBy).
     """
     events = (
         raw_visitors
@@ -116,11 +123,6 @@ def build_fact_engagement(
         )
         .withColumn("loaded_at", _ts_lit(run_ts))
     )
-    fact = conform.all_keys_present(fact, ["media_id", "visitor_id"]).filter(
+    return conform.all_keys_present(fact, ["media_id", "visitor_id"]).filter(
         F.col("date").isNotNull()
-    )
-    # Keys are unique post-groupBy by construction; the dedup guards reruns
-    # that union multiple run folders (`notebool-03.py:321-322`).
-    return quality.dedup_keep_first(
-        fact, ["media_id", "visitor_id", "date"], order_by=["loaded_at", "play_count"]
     )

@@ -4,15 +4,15 @@ The reference's ``pl_wistia_main_pipeline`` is a declarative ADF DAG of 6
 activities with success-edges (`wistia-Azure-Data-Factory-ETL-Pipeline.
 json:5-509`): ingest-00 -> ingest-01 -> transform -> 3 parallel SQL
 copies. Ours is the same topology as plain Python: named stages with
-dependencies, run in dependency order.
+dependencies, run in declared order (a stage may depend only on stages
+declared before it, so the declared order is a topological order).
 
 Engine-level corrections over the reference (SURVEY.md §4.2):
 
 - **One action per stage.** The reference interleaves ≥20 ``count()``/
-  ``display()`` calls, each re-executing lineage. Stages here cache
-  their output once when it feeds multiple consumers, and QC metrics
-  ride along via ``observe()`` (collected by a listener-free
-  ``Observation``) instead of separate passes.
+  ``display()`` calls, each re-executing lineage. Here a stage's output
+  is cached exactly when two or more stages depend on it, so shared
+  lineage runs once.
 - Failures stop dependents, independent branches still run —
   ADF's success-edge semantics.
 """
@@ -20,7 +20,8 @@ Engine-level corrections over the reference (SURVEY.md §4.2):
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Callable, Mapping, Sequence
+from collections import Counter
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,18 +32,11 @@ from .cache import track
 @dataclass
 class Stage:
     """One pipeline activity: reads upstream outputs from ``ctx``,
-    returns its own output (a DataFrame or None for pure sinks).
-
-    ``retries``/``retry_wait_s`` mirror the ADF per-activity policy
-    (`...ETL-Pipeline.json:10-15` declares retry/timeout per activity;
-    the reference ships retry: 0)."""
+    returns its own output (a DataFrame or None for pure sinks)."""
 
     name: str
     fn: Callable[["PipelineContext"], DataFrame | None]
     depends_on: Sequence[str] = ()
-    cache: bool = False  # cache output when >1 downstream consumer
-    retries: int = 0
-    retry_wait_s: float = 0.0
 
 
 @dataclass
@@ -50,7 +44,6 @@ class PipelineContext:
     spark: SparkSession
     run_ts: dt.datetime
     outputs: dict[str, DataFrame | None] = field(default_factory=dict)
-    params: dict[str, object] = field(default_factory=dict)
 
     def __getitem__(self, stage_name: str) -> DataFrame:
         out = self.outputs[stage_name]
@@ -63,89 +56,53 @@ class StageResult:
     name: str
     status: str  # succeeded | failed | skipped
     error: str | None = None
-    duration_s: float = 0.0
 
 
 class Pipeline:
-    """Success-edge DAG runner (topological order, fail-fast per branch)."""
+    """Success-edge DAG runner (declared order, fail-fast per branch)."""
 
     def __init__(self, stages: Sequence[Stage]):
-        names = [s.name for s in stages]
-        if len(set(names)) != len(names):
-            raise ValueError("duplicate stage names")
-        known = set(names)
+        names = {s.name for s in stages}
+        declared: set[str] = set()
         for s in stages:
-            missing = set(s.depends_on) - known
-            if missing:
-                raise ValueError(f"stage {s.name} depends on unknown {missing}")
+            if s.name in declared:
+                raise ValueError(f"duplicate stage name {s.name!r}")
+            for dep in s.depends_on:
+                if dep not in names:
+                    raise ValueError(f"stage {s.name} depends on unknown {dep!r}")
+                if dep not in declared:
+                    raise ValueError(
+                        f"stage {s.name} depends on {dep!r}, which is not declared earlier"
+                    )
+            declared.add(s.name)
         self.stages = list(stages)
-        self._order = self._toposort()
-
-    def _toposort(self) -> list[Stage]:
-        done: set[str] = set()
-        ordered: list[Stage] = []
-        pending = list(self.stages)
-        while pending:
-            progressed = False
-            for s in list(pending):
-                if set(s.depends_on) <= done:
-                    ordered.append(s)
-                    done.add(s.name)
-                    pending.remove(s)
-                    progressed = True
-            if not progressed:
-                raise ValueError(f"dependency cycle among {[s.name for s in pending]}")
-        return ordered
+        consumers = Counter(dep for s in stages for dep in set(s.depends_on))
+        self._shared = {name for name, n in consumers.items() if n >= 2}
 
     def run(
-        self,
-        spark: SparkSession,
-        run_ts: dt.datetime | None = None,
-        params: Mapping[str, object] | None = None,
+        self, spark: SparkSession, run_ts: dt.datetime | None = None
     ) -> tuple[PipelineContext, list[StageResult]]:
-        import time
-
         ctx = PipelineContext(
             spark=spark,
             run_ts=run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            params=dict(params or {}),
         )
         results: list[StageResult] = []
         failed: set[str] = set()
-        for s in self._order:
-            if set(s.depends_on) & failed:
+        for s in self.stages:
+            if failed.intersection(s.depends_on):
                 results.append(StageResult(s.name, "skipped"))
                 failed.add(s.name)  # propagate downstream
                 continue
-            t0 = time.perf_counter()
-            last_err: Exception | None = None
-            for attempt in range(s.retries + 1):
-                try:
-                    out = s.fn(ctx)
-                    if s.cache and out is not None:
-                        out = track(out.cache())
-                    ctx.outputs[s.name] = out
-                    results.append(
-                        StageResult(
-                            s.name, "succeeded", duration_s=time.perf_counter() - t0
-                        )
-                    )
-                    last_err = None
-                    break
-                except Exception as e:  # noqa: BLE001 — stage isolation by design
-                    last_err = e
-                    if attempt < s.retries and s.retry_wait_s:
-                        time.sleep(s.retry_wait_s)
-            if last_err is not None:
+            try:
+                out = s.fn(ctx)
+            except Exception as e:  # noqa: BLE001 — stage isolation by design
+                results.append(StageResult(s.name, "failed", error=str(e)))
                 failed.add(s.name)
-                results.append(
-                    StageResult(
-                        s.name,
-                        "failed",
-                        error=str(last_err),
-                        duration_s=time.perf_counter() - t0,
-                    )
-                )
+                continue
+            if out is not None and s.name in self._shared:
+                out = track(out.cache())
+            ctx.outputs[s.name] = out
+            results.append(StageResult(s.name, "succeeded"))
         return ctx, results
 
 
@@ -180,7 +137,7 @@ def wistia_pipeline(
     return Pipeline(
         [
             Stage("ingest_media", raw_media),
-            Stage("ingest_visitors", raw_visitors, cache=True),  # feeds dim + fact
+            Stage("ingest_visitors", raw_visitors),  # feeds dim + fact: cached
             Stage("dim_media", t_dim_media, depends_on=("ingest_media",)),
             Stage("dim_visitor", t_dim_visitor, depends_on=("ingest_visitors",)),
             Stage("fact_engagement", t_fact, depends_on=("ingest_visitors",)),

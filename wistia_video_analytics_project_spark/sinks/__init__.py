@@ -1,4 +1,4 @@
-"""Sinks: parquet (partitioned), JSON, JDBC truncate-load (S6-S8).
+"""Sinks: parquet (partitioned), JDBC truncate-load (S7-S8).
 
 The reference writes unpartitioned overwrite-mode Parquet for silver
 (`wistia-Databricks notebool-03.py:356-370`) and copies it to Azure SQL
@@ -23,36 +23,14 @@ from pyspark.sql import DataFrame
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-    max_records_per_file: int | None = None,
-    sort_within_partitions_by: Sequence[str] | None = None,
+    df: DataFrame, path: str, partition_by: Sequence[str] | None = None
 ) -> None:
-    """S7: columnar sink. ``partition_by`` enables partition pruning;
-    ``max_records_per_file`` bounds file sizes against skewed partitions.
-
-    ``sort_within_partitions_by``: cluster rows inside each task's
-    output file by these columns (no shuffle — a per-partition sort).
-    Tightens parquet row-group min/max ranges so point/range predicates
-    on those columns skip row groups at read time — the poor man's
-    Z-order, and the single cheapest read-amplification fix for a
-    100 TB table queried by a non-partition key."""
-    if sort_within_partitions_by:
-        df = df.sortWithinPartitions(*sort_within_partitions_by)
-    w = df.write.mode(mode)
+    """S7: columnar overwrite sink. ``partition_by`` enables partition
+    pruning."""
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
     w.parquet(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S6: raw-zone JSON landing (`notebool-02.py:182`). Raw payload
-    fidelity over efficiency — bronze only; silver+ is always parquet."""
-    df.write.mode(mode).json(path)
 
 
 def compact_parquet(
@@ -115,20 +93,6 @@ def write_csv(
         .option("delimiter", delimiter)
         .csv(path)
     )
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """ORC sink — interop with Hive/Trino estates; same partitioned
-    layout contract as :func:`write_parquet`."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
 
 
 def jdbc_truncate_load(

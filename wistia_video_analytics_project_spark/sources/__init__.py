@@ -7,9 +7,6 @@ from .readers import (  # noqa: F401
     load_table,
     load_tables,
     read_csv,
-    read_json,
-    read_orc,
     read_parquet,
     read_text_docs,
-    read_xml,
 )

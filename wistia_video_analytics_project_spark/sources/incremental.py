@@ -21,9 +21,7 @@ import datetime as dt
 import os
 import re
 
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 RUN_TS_PATTERN = re.compile(r"_(\d{8}_\d{6})$")
@@ -65,9 +63,8 @@ def read_new_runs(
     base_path: str,
     since: dt.datetime,
     schema: T.StructType,
-    format: str = "json",
 ) -> tuple[DataFrame, list[str], dt.datetime | None]:
-    """(delta frame, folders read, max run ts) — the incremental read.
+    """(delta frame, folders read, max run ts) — the incremental JSON read.
 
     Returns an empty frame when nothing is new. Caller advances the
     watermark to ``max_ts`` AFTER a successful downstream write, so a
@@ -77,12 +74,6 @@ def read_new_runs(
     folders = list_new_run_folders(base_path, since)
     if not folders:
         return spark.createDataFrame([], schema), [], None
-    df = (
-        spark.read.schema(schema)
-        .option("multiLine", "true")
-        .format(format)
-        .load(folders)
-        .withColumn("__run_folder", F.col("_metadata.file_path"))
-    )
+    df = spark.read.schema(schema).option("multiLine", "true").json(folders)
     max_ts = max(t for t in (parse_run_ts(f) for f in folders) if t is not None)
     return df, folders, max_ts

@@ -1,9 +1,10 @@
-"""Schema-enforced file readers (S1-S3, SURVEY.md §2.1).
+"""Schema-enforced file readers (SURVEY.md §2.1).
 
 The reference reads raw JSON with multiline inference over glob paths
 (`wistia-Databricks notebool-03.py:89-105`). Inference costs an extra
 full scan and can flip types between runs (SURVEY.md §1.3), so the engine
-makes an explicit schema the default and inference an opt-in.
+makes an explicit schema the default and inference an opt-in. The raw
+JSON read itself (S1/S2) is ``incremental.read_new_runs``.
 """
 
 from __future__ import annotations
@@ -12,21 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .. import schemas
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    multiline: bool = True,
-) -> DataFrame:
-    """S1/S2: JSON source. Glob patterns in ``path`` are supported
-    (``.../media/*/*.json``). Pass ``schema=None`` only for exploratory
-    ingest — production paths must declare one."""
-    reader = spark.read.option("multiLine", "true" if multiline else "false")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 def read_parquet(
@@ -75,36 +61,6 @@ def read_csv(
     )
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """ORC source — same columnar posture as parquet (predicate
-    pushdown, column pruning, min/max stripe skipping all apply);
-    optional schema assertion mirrors :func:`read_parquet` minus the
-    nanos special-case (ORC timestamps are not nanos-encoded here)."""
-    df = spark.read.orc(path)
-    if schema is not None:
-        df = df.select(
-            *[df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-    return df
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """XML source (native in Spark 4 — no external package): one row per
-    ``row_tag`` element.  Schema strongly recommended for the same
-    reasons as CSV (inference costs an extra full scan)."""
-    r = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(path)
-
-
 def read_text_docs(
     spark: SparkSession, path: str, wholetext: bool = True
 ) -> DataFrame:
@@ -128,11 +84,6 @@ def read_text_docs(
         "text",
         "source_path",
     )
-
-
-def from_rows(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
-    """S3: in-memory rows -> DataFrame (`notebool-02.py:176-181`)."""
-    return spark.createDataFrame(rows, schema=schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
