@@ -915,8 +915,8 @@ def q_sequential_pattern_support(
     (user × ~5 types) level-1 frame, level 3 to the (user × ~25 pairs)
     level-2 frame — intermediate sizes are fact × type-count, never
     fact², and type-count is small and fixed at any corpus scale.
-    Timestamps compare as integer micros on both engines (CLAUDE.md:
-    the events parquet is nanos in DuckDB, micros in Spark)."""
+    Timestamps compare as integer micros on both engines, so the two
+    engines' timestamp-to-double rounding never enters the result."""
     events = _t(spark, sf_dir, "events")
     ev = events.select(
         "user_id",
@@ -5233,10 +5233,10 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staged_event_stream(spark: SparkSession, sf_dir: str):
-    """Micros-converted events staged to a pid-scoped temp parquet dir
-    (file streams can't read NANOS timestamps), returned as a streaming
-    frame. Reuses the staged copy only behind Spark's _SUCCESS commit
-    marker — a torn write never leaves the marker."""
+    """Schema-conformed events (``schemas.TPCH`` types) staged to a
+    pid-scoped temp parquet dir, returned as a streaming frame. Reuses
+    the staged copy only behind Spark's _SUCCESS commit marker — a torn
+    write never leaves the marker."""
     import os
     import re as _re
     import tempfile
@@ -5339,7 +5339,7 @@ def q_streaming_view_purchase_join(
     stream-stream join's append output inside the stream would need a
     second watermark chain for no semantic gain).  Lead times are exact
     integer micros divided once (CLAUDE.md timestamp rule); the oracle
-    mirrors Spark's nanos->micros truncation via epoch_ns//1000."""
+    takes the same integer micros via epoch_ns//1000."""
     configure_runtime(spark)
     from wistia_video_analytics_project_spark.streaming import (
         run_to_memory_sink,

@@ -65,18 +65,6 @@ def test_all_gold_queries_run(spark, star):
         assert sql.run_gold(spark, name).collect() is not None
 
 
-def test_register_testdata_sql_surface(spark):
-    from conftest import SF_SMOKE
-
-    sql.register_testdata(spark, SF_SMOKE)
-    got = spark.sql(
-        "SELECT count(*) AS n FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-    ).collect()[0].n
-    assert got > 0
-    # events view carries the micros-converted timestamp (nanos handled)
-    assert spark.sql("SELECT max(ts) FROM events").collect()[0][0] is not None
-
-
 def test_sql_scripting_bisection_threshold(spark):
     """SQL-scripting WHILE bisection converges to the order statistic:
     largest integer-cent T with count(cents > T) >= N equals the N-th

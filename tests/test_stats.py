@@ -363,7 +363,7 @@ def test_circadian_profile_matches_numpy_circular_stats(spark):
     ev = _events()
     rows = entrymod.q_circadian_profile(spark, SF_SMOKE).collect()
     got = {r.event_type: r for r in rows}
-    # pandas reads the nanos parquet as datetime64[us]: int64 IS micros
+    # pandas reads the parquet ts as datetime64[us]: int64 IS micros
     assert str(ev.ts.dtype) == "datetime64[us]"
     us = ev.ts.astype("int64") % 86_400_000_000
     theta = us.to_numpy() * 2 * np.pi / 86_400_000_000

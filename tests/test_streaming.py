@@ -611,123 +611,6 @@ def test_streaming_state_refresh_matches_batch_and_replays(spark, tmp_path, even
     assert got2 == expect
 
 
-def test_rest_stream_datasource_incremental_polling(spark, tmp_path):
-    """rest_api_stream: micro-batches poll with since=<offset>; records
-    appended between batches arrive exactly once."""
-    import http.server
-    import json as jsonlib
-    import threading
-    import urllib.parse
-
-    records = [{"id": i, "name": f"r{i}", "cursor": f"c{i:04d}"} for i in range(3)]
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):
-            parsed = urllib.parse.urlparse(self.path)
-            qs = dict(urllib.parse.parse_qsl(parsed.query))
-            recs = list(records)
-            if "since" in qs:
-                recs = [r for r in recs if r["cursor"] >= qs["since"]]
-            page = int(qs.get("page", "1"))
-            pp = int(qs.get("per_page", "100"))
-            chunk = recs[(page - 1) * pp : page * pp]
-            body = jsonlib.dumps(chunk).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        from wistia_video_analytics_project_spark.sources.pyds import (
-            RestStreamDataSource,
-        )
-
-        spark.dataSource.register(RestStreamDataSource)
-        base = f"http://127.0.0.1:{srv.server_address[1]}"
-        stream = (
-            spark.readStream.format("rest_api_stream")
-            .schema("id long, name string, cursor string")
-            .option("base_url", base)
-            .option("paths", "events")
-            .option("since_col", "cursor")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("rest_stream_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got1 = {r.id for r in spark.sql("SELECT * FROM rest_stream_out").collect()}
-            assert got1 == {0, 1, 2}
-
-            records.extend(
-                {"id": i, "name": f"r{i}", "cursor": f"c{i:04d}"}
-                for i in range(3, 5)
-            )
-            q.processAllAvailable()
-            rows = spark.sql("SELECT * FROM rest_stream_out").collect()
-            assert {r.id for r in rows} == {0, 1, 2, 3, 4}
-            assert len(rows) == 5  # exactly once — no boundary re-reads
-        finally:
-            q.stop()
-    finally:
-        srv.shutdown()
-
-
-def test_rest_stream_sink_posts_micro_batches(spark, tmp_path, event_dir):
-    """writeStream.format('rest_api_sink'): every streamed row POSTs to
-    the endpoint across micro-batch epochs."""
-    import http.server
-    import json as jsonlib
-    import threading
-
-    received, lock = [], threading.Lock()
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers["Content-Length"])
-            with lock:
-                received.extend(jsonlib.loads(self.rfile.read(n)))
-            self.send_response(200)
-            self.end_headers()
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        from wistia_video_analytics_project_spark.sources.pyds import (
-            RestWriteDataSource,
-        )
-
-        spark.dataSource.register(RestWriteDataSource)
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(event_dir)
-        q = (
-            stream.select("user_id", "event_type")
-            .writeStream.format("rest_api_sink")
-            .option("url", f"http://127.0.0.1:{srv.server_address[1]}/hook")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        assert len(received) == 5  # all fixture rows delivered
-        assert {r["event_type"] for r in received} == {"view", "click"}
-    finally:
-        srv.shutdown()
-
-
 def test_sliding_window_traffic_equals_batch(spark, tmp_path):
     """The streaming sliding-window aggregate over a bounded input must
     equal the batch recompute (explode each event into its two window

@@ -13,8 +13,9 @@ Layout (see SURVEY.md §7.1):
 
 - ``session``    — SparkSession construction with scale-aware defaults
 - ``schemas``    — explicit StructTypes for every table (no silent inference)
-- ``sources``    — readers: parquet/json/in-memory, REST ingester, watermark
-- ``sinks``      — parquet (partitioned), json, jdbc truncate-load
+- ``sources``    — schema-enforced parquet reader, incremental bronze JSON
+  reads, REST ingester, watermark
+- ``sinks``      — parquet (partitioned), jdbc truncate-load
 - ``operators``  — named, tested DataFrame -> DataFrame operators:
   ``conform`` (projections/casts/scalar funcs), ``model`` (dim/fact
   builders), ``quality`` (Q1-Q5), ``analytics`` (gold queries, windows,

@@ -857,8 +857,8 @@ def _ivf_meta_read(path: str) -> dict:
 
 
 def _ivf_meta_write(path: str, meta: dict) -> None:
-    """Torn-writer-safe commit: write-temp, fsync, atomic rename —
-    the same manifest-commit protocol as :func:`sinks.publish_snapshot`.
+    """Torn-writer-safe commit: write-temp, fsync, atomic rename, so a
+    reader sees either the old manifest or the new one, never a mix.
     The payload carries its own sha256 so a reader can detect a torn
     file (non-atomic filesystem, partial copy) and fall back to
     :func:`_ivf_meta_rebuild`."""

@@ -44,14 +44,6 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Read TIMESTAMP(NANOS) parquet columns as raw int64 (Spark has no
-    # nanosecond timestamp type); readers.read_parquet converts them to
-    # microsecond timestamps, matching DuckDB's truncation.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Python DataSource filter pushdown (sources/pyds.py): a reader that
-    # implements pushFilters FAILS to initialize while this is false, so
-    # the engine's sessions keep it on.
-    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

@@ -1,12 +1,7 @@
-"""Sources: schema-enforced readers, REST ingestion, watermark store.
+"""Sources: schema-enforced parquet reader, REST ingestion, incremental
+bronze reads, watermark store.
 
-Covers S1-S5 and S9-S10 from SURVEY.md §2.1.
+Covers S1, S2, S4, S5 and S9 from SURVEY.md §2.1.
 """
 
-from .readers import (  # noqa: F401
-    load_table,
-    load_tables,
-    read_csv,
-    read_parquet,
-    read_text_docs,
-)
+from .readers import load_table, read_parquet  # noqa: F401

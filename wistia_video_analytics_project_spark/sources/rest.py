@@ -9,69 +9,19 @@ Differences by design:
 - **Injectable transport.** ``transport(url, params) -> (status, payload)``
   — production wires ``urllib``; tests inject fakes. No hard dependency
   on any HTTP client package.
-- **Two execution tiers.** The reference fetches everything on the
-  driver. :meth:`RestIngester.fetch_rows` keeps that (correct for small
-  id sets); :func:`fetch_distributed` fans the (media_id, page) task list
-  out across executors with ``mapInPandas`` so ingestion scales with the
-  cluster, not the driver.
 - Rate-limit sleeps are parameters (0 in tests), not hardcoded.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 import urllib.parse
 import urllib.request
-from collections.abc import Callable, Iterator, Mapping, Sequence
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
 Transport = Callable[[str, dict], tuple[int, object]]
-
-
-def _env_name(key: str) -> str:
-    return key.upper().replace(".", "_").replace("-", "_")
-
-
-def resolve_config(
-    key: str,
-    *,
-    explicit: str | None = None,
-    spark: SparkSession | None = None,
-    env: Mapping[str, str] | None = None,
-) -> str:
-    """Credential/config resolution chain, re-expressing the reference's
-    secret-scope → Spark-conf → hard-error lookup (`wistia-Databricks
-    notebool-02.py:54-82`) with open equivalents:
-
-    1. ``explicit`` argument — the caller already holds the value;
-    2. environment variable (``key`` upper-cased, ``.``/``-`` → ``_``) —
-       the open stand-in for a managed secret scope;
-    3. Spark conf ``key`` verbatim (cluster-level config);
-    4. otherwise a hard error naming every location probed — config
-       problems must fail the job loudly, not surface later as 401s.
-    """
-    if explicit is not None:
-        return explicit
-    env_map = os.environ if env is None else env
-    env_key = _env_name(key)
-    val = env_map.get(env_key)
-    if val is not None:
-        return val
-    if spark is not None:
-        conf_val = spark.conf.get(key, None)
-        if conf_val is not None:
-            return conf_val
-    probed = [f"argument explicit=", f"env ${env_key}"]
-    probed.append(f"spark.conf[{key!r}]" if spark is not None else "(no spark session)")
-    raise KeyError(
-        f"config {key!r} not found; probed: {', '.join(probed)}. "
-        f"Set the env var or Spark conf, or pass the value explicitly."
-    )
 
 
 def urllib_transport(url: str, params: dict) -> tuple[int, object]:
@@ -100,41 +50,10 @@ class RestIngester:
     max_pages: int = 100
     max_retries: int = 3
     backoff_base_s: float = 5.0
-    page_sleep_s: float = 0.0
     sleeper: Callable[[float], None] = field(default=time.sleep)
     #: merged under every request's params — the auth slot
     #: (`notebool-02.py` passes api_password on each call)
     default_params: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_conf(
-        cls,
-        spark: SparkSession | None = None,
-        *,
-        url_key: str = "wistia.api.url",
-        token_key: str = "wistia.api.token",
-        token_param: str = "api_password",
-        base_url: str | None = None,
-        token: str | None = None,
-        env: Mapping[str, str] | None = None,
-        **kwargs,
-    ) -> "RestIngester":
-        """Build an ingester with base URL and API token resolved through
-        :func:`resolve_config` (explicit → env → Spark conf → error),
-        mirroring the reference's secret-scope bootstrap
-        (`notebool-02.py:54-82`). The token rides ``default_params`` as
-        ``token_param`` on every request (`notebool-02.py:97-103`)."""
-        return cls(
-            base_url=resolve_config(
-                url_key, explicit=base_url, spark=spark, env=env
-            ),
-            default_params={
-                token_param: resolve_config(
-                    token_key, explicit=token, spark=spark, env=env
-                )
-            },
-            **kwargs,
-        )
 
     def _get_with_retry(self, url: str, params: dict) -> object | None:
         """GET with 429 backoff (2^attempt * backoff_base_s,
@@ -152,7 +71,6 @@ class RestIngester:
                 self.sleeper((2**attempt) * self.backoff_base_s)
                 continue
             raise IOError(f"GET {url} failed with status {status}")
-        raise IOError(f"GET {url} exhausted {self.max_retries} retries (429)")
 
     def fetch_one(self, path: str, params: dict | None = None) -> object | None:
         """Single-resource GET (media stats, `notebool-02.py:128-139`)."""
@@ -178,65 +96,3 @@ class RestIngester:
             yield from records
             if len(records) < self.per_page:
                 return
-            if self.page_sleep_s:
-                self.sleeper(self.page_sleep_s)
-
-    def fetch_rows(
-        self,
-        spark: SparkSession,
-        path: str,
-        schema: T.StructType,
-        params: dict | None = None,
-        since: str | None = None,
-    ) -> DataFrame:
-        """Driver-side fetch -> DataFrame (the reference tier,
-        `notebool-02.py:170-181`). Use for small id sets; see
-        :func:`fetch_distributed` for fan-out."""
-        rows = [_project(r, schema) for r in self.fetch_pages(path, params, since)]
-        return spark.createDataFrame(rows, schema)
-
-
-def _project(record: object, schema: T.StructType) -> tuple:
-    if not isinstance(record, dict):
-        raise ValueError(f"expected JSON object, got {type(record).__name__}")
-    return tuple(record.get(f.name) for f in schema.fields)
-
-
-def fetch_distributed(
-    spark: SparkSession,
-    make_ingester: Callable[[], RestIngester],
-    paths: Sequence[str],
-    schema: T.StructType,
-    since: str | None = None,
-    tasks_per_partition: int = 1,
-) -> DataFrame:
-    """Executor-side fan-out: one task per resource path.
-
-    The task list (tiny) becomes a DataFrame, repartitioned so each
-    executor slot pulls a disjoint set of resources; ``mapInPandas``
-    executes the paginated fetch per task and yields Arrow batches.
-    ``make_ingester`` is a zero-arg factory so transports/credentials are
-    constructed ON the executor (closures must not capture sockets).
-
-    This is the 1000-executor shape of S4: ingestion throughput scales
-    with cluster size while retry/backoff stays per-task.
-    """
-    import pandas as pd
-
-    field_names = [f.name for f in schema.fields]
-    n_parts = max(1, len(paths) // max(tasks_per_partition, 1))
-    tasks = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(n_parts)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ing = make_ingester()
-        for pdf in batches:
-            out: list[tuple] = []
-            for path in pdf["path"]:
-                for rec in ing.fetch_pages(path, since=since):
-                    out.append(_project(rec, schema))
-            if out:
-                yield pd.DataFrame(out, columns=field_names)
-
-    return tasks.mapInPandas(run, schema=schema)

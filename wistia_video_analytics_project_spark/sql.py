@@ -72,15 +72,6 @@ GOLD_QUERIES: dict[str, str] = {
 }
 
 
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every driver testdata table as a temp view so the whole
-    engine surface is reachable from plain ``spark.sql`` too."""
-    from .sources import load_tables
-
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def register_star_schema(
     spark: SparkSession,
     dim_media: DataFrame,
