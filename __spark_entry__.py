@@ -745,7 +745,7 @@ def q_theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cents")
         )
     )
-    daily = cache.track(daily.cache())
+    daily = cache.persist(daily)
     a = daily.select(
         F.col("day").alias("d1"), F.col("cents").alias("c1")
     )
@@ -842,7 +842,7 @@ def q_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("purchases"),
     )
-    daily = cache.track(daily.cache())
+    daily = cache.persist(daily)
     a = daily.select(
         F.col("day").alias("d1"),
         F.col("views").alias("x1"),
@@ -923,7 +923,7 @@ def q_sequential_pattern_support(
         "event_type",
         F.unix_micros("ts").alias("us"),
     )
-    ev = cache.track(ev.cache())
+    ev = cache.persist(ev)
     lvl1 = ev.groupBy(
         "user_id", F.col("event_type").alias("a")
     ).agg(F.min("us").alias("ta"))
@@ -2146,7 +2146,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (chaining them would nest their internal caches three deep —
     # the CLAUDE.md nested-InMemoryRelation hazard) and join back on
     # the customer key.
-    per_cust = cache.track(per_cust.cache())
+    per_cust = cache.persist(per_cust)
 
     def tile(lead: str, out: str) -> DataFrame:
         return scale.binned_ntile(
@@ -4252,10 +4252,10 @@ def q_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached once (r14): the IRLS passes AND the post-train scoring
     # read the same (embedding, y) projection — uncached, the scoring
     # aggregate re-scanned the parquet a second time
-    labeled = cache.track(
+    labeled = cache.persist(
         emb.select(
             "embedding", (F.col("label") >= 5).cast("double").alias("y")
-        ).cache()
+        )
     )
     w, b, losses = linalg.logistic_train(
         labeled, "embedding", "y", 64, iterations=4, ridge=1e-3
@@ -4608,7 +4608,7 @@ def q_haar_revenue_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily.crossJoin(F.broadcast(d0))
         .select(F.datediff("day", "d0").alias("i"), "cents")
     )
-    idx = cache.track(idx.cache())
+    idx = cache.persist(idx)
     levels = []
     for k in range(1, 9):
         half = 1 << (k - 1)
@@ -4716,7 +4716,7 @@ def q_cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
-    per_user = cache.track(per_user.cache())
+    per_user = cache.persist(per_user)
     means = per_user.agg(
         F.avg("x").alias("mx"), F.avg("y").alias("my")
     )
@@ -4992,7 +4992,7 @@ def q_brand_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lx"),
         )
     )
-    rows = cache.track(rows.cache())
+    rows = cache.persist(rows)
     means = rows.groupBy("p_brand").agg(
         F.avg("lx").alias("mx"),
         F.avg("ly").alias("my"),
@@ -5058,7 +5058,7 @@ def q_revenue_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
         ).alias("cents")
     )
-    daily = cache.track(daily.cache())
+    daily = cache.persist(daily)
     stats = daily.agg(
         F.min("day").alias("d0"),
         F.sum("cents").alias("tot"),
@@ -5439,7 +5439,7 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: same bounded-pairing posture as `theilsen` — the
     O(days²) stage runs over the per-day aggregate, never raw orders."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     a = daily.select(F.col("day").alias("d1"), F.col("cents").alias("c1"))
     b = daily.select(F.col("day").alias("d2"), F.col("cents").alias("c2"))
     s_stat = (
@@ -5491,10 +5491,10 @@ def q_binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     daily = _daily_cents_1995(spark, sf_dir)
     wd = Window.orderBy("day")
-    indexed = cache.track(
+    indexed = cache.persist(
         daily.select(
             F.row_number().over(wd).alias("idx"), "day", "cents"
-        ).cache()
+        )
     )
     splits = changepoint.binary_segmentation(
         indexed, idx_col="idx", val_col="cents", depth=2
@@ -5535,10 +5535,10 @@ def q_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bounded per-day spine."""
     daily = _daily_cents_1995(spark, sf_dir)
     wd = Window.orderBy("day")
-    indexed = cache.track(
+    indexed = cache.persist(
         daily.select(
             (F.row_number().over(wd) - 1).alias("i"), "cents"
-        ).cache()
+        )
     )
     sizes = spark.createDataFrame(
         [(8, 3), (16, 4), (32, 5), (64, 6)], "b long, e long"
@@ -5589,8 +5589,8 @@ def q_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_log2_rs"),
         )
     )
-    per_b = cache.track(
-        per_b.join(F.broadcast(sizes), "b").cache()
+    per_b = cache.persist(
+        per_b.join(F.broadcast(sizes), "b")
     )
     # regress on the exact integer exponent e (= log2 b), not a libm
     # log2 of b — engines may differ in the last ulp even on powers of 2
@@ -5713,7 +5713,7 @@ def q_copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__pc") >= 2)
         .select("u", "v")
     )
-    edges = cache.track(edges.cache())
+    edges = cache.persist(edges)
     adj = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -5795,13 +5795,12 @@ def q_growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded 4 with a churn=0 guard.  Weeks truncate Monday-anchored on
     both engines (`date_trunc('week')` parity)."""
     events = _t(spark, sf_dir, "events")
-    act = cache.track(
+    act = cache.persist(
         events.select(
             "user_id",
             F.date_trunc("week", F.col("ts")).cast("date").alias("week"),
         )
         .distinct()
-        .cache()
     )
     firstw = act.groupBy("user_id").agg(F.min("week").alias("fw"))
     prev = act.select(
@@ -6006,7 +6005,7 @@ def q_source_log_odds_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("y_sw"))
     )
-    wcounts = cache.track(wcounts.cache())
+    wcounts = cache.persist(wcounts)
     totals = wcounts.groupBy("source").agg(
         F.sum("y_sw").cast("long").alias("n_s")
     )
@@ -6105,7 +6104,7 @@ def q_revenue_anova_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines; the ≤12-term outer sums carry ~1e-15 relative
     noise vs the 1e-4 rounding).  Weekday parity: Spark weekday()+1 ==
     DuckDB isodow (CLAUDE.md date-part rule)."""
-    daily = cache.track(
+    daily = cache.persist(
         _daily_cents_1995(spark, sf_dir)
         .select(
             "day",
@@ -6113,7 +6112,6 @@ def q_revenue_anova_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.weekday("day") + 1).cast("long").alias("wd"),
             F.month("day").cast("long").alias("mo"),
         )
-        .cache()
     )
 
     def one_way(col: str, label: str) -> DataFrame:
@@ -6180,12 +6178,12 @@ def q_categorical_mi_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan per pair over a 3-column projection; joint tables are
     tiny (≤5×12) and the marginals broadcast."""
     orders = _t(spark, sf_dir, "orders")
-    base = cache.track(
+    base = cache.persist(
         orders.select(
             F.substring("o_orderpriority", 1, 1).alias("prio"),
             F.col("o_orderstatus").alias("status"),
             F.year("o_orderdate").cast("string").alias("oyear"),
-        ).cache()
+        )
     )
 
     def mi(a: str, b: str) -> DataFrame:
@@ -6362,7 +6360,7 @@ def q_inequality_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cents") > 0)
     )
-    per = cache.track(per.cache())
+    per = cache.persist(per)
     tot = per.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cents").cast("long").alias("x_tot"),
@@ -6427,7 +6425,7 @@ def q_views_purchases_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     `corr` aggregate per lag (15 bounded aggregates over the per-day
     frame — no raw-event work after the first reduction)."""
     events = _t(spark, sf_dir, "events")
-    daily = cache.track(
+    daily = cache.persist(
         events.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
@@ -6439,7 +6437,6 @@ def q_views_purchases_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_buy"),
         )
-        .cache()
     )
     lags = spark.createDataFrame(
         [(lag,) for lag in range(-7, 8)], "lag long"
@@ -6478,12 +6475,11 @@ def q_newsvendor_stock_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolates identical doubles; top-5 selection ties break on
     partkey."""
     li = _t(spark, sf_dir, "lineitem")
-    daily = cache.track(
+    daily = cache.persist(
         li.groupBy(
             F.col("l_partkey"), F.to_date("l_shipdate").alias("day")
         )
         .agg(F.sum("l_quantity").cast("long").alias("demand"))
-        .cache()
     )
     top5 = (
         daily.groupBy("l_partkey")
@@ -6582,7 +6578,7 @@ def q_residual_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_g"),
     )
     wdx = Window.orderBy("day")
-    resid = cache.track(
+    resid = cache.persist(
         wd.join(F.broadcast(grp), "wd")
         .select(
             F.row_number().over(wdx).alias("idx"),
@@ -6591,7 +6587,6 @@ def q_residual_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.col("s_g").cast("double") / F.col("n_g").cast("double")
             ).alias("r"),
         )
-        .cache()
     )
     base = resid.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
@@ -6780,10 +6775,10 @@ def q_bootstrap_ci_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     day index — bounded by the day count, independent of fact volume."""
     daily = _daily_cents_1995(spark, sf_dir)
     wd = Window.orderBy("day")
-    indexed = cache.track(
+    indexed = cache.persist(
         daily.select(
             F.row_number().over(wd).alias("idx"), "cents"
-        ).cache()
+        )
     )
     n_row = indexed.agg(F.count(F.lit(1)).cast("long").alias("n"))
     grid = (
@@ -7077,7 +7072,7 @@ def q_wilcoxon_halfyear_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-corrected variance numerator 2n(n+1)(2n+1) − Σ(t³−t) is one
     integer — both engines divide identical integers exactly once for
     z.  The pair stage is day-bounded (≤182 rows)."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wi = Window.orderBy("day")
     idx = daily.select(
         F.row_number().over(wi).alias("i"), F.col("cents")
@@ -7221,7 +7216,7 @@ def q_theil_u2_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs once each, and the two ≤358-term square sums round at 6 far
     above accumulation noise.  Day-bounded lag self-joins on the cached
     spine — fact volume never enters the pair stage."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wi = Window.orderBy("day")
     idx = daily.select(F.row_number().over(wi).alias("i"), "cents")
     a = idx.alias("a")
@@ -7269,7 +7264,7 @@ def q_spectral_entropy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the periodogram (mod-reduced phase, exact-cents mean, round 6);
     the entropy adds five more ln terms."""
     two_pi = 6.283185307179586
-    daily = cache.track(
+    daily = cache.persist(
         _t(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
@@ -7279,7 +7274,6 @@ def q_spectral_entropy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("cents")
         )
-        .cache()
     )
     stats = daily.agg(
         F.min("day").alias("d0"),
@@ -7471,7 +7465,7 @@ def q_kn_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 10 != 0)
     eval_docs = docs.filter(F.col("doc_id") % 10 == 0)
-    bc = cache.track(ngram_lm.bigram_counts(train).cache())
+    bc = cache.persist(ngram_lm.bigram_counts(train))
     ctx = bc.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count(F.lit(1)).cast("long").alias("n_follow"),
@@ -7800,7 +7794,7 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pair table against itself.  Basket-size semantics unchanged:
     # baskets over 50 DISTINCT parts are dropped entirely (a filter,
     # not the truncation cooccurrence_pairs' cap applies).
-    baskets = cache.track(
+    baskets = cache.persist(
         li.select("l_orderkey", "l_partkey")
         .repartition("l_orderkey")
         .groupBy("l_orderkey", "l_partkey")
@@ -7808,7 +7802,6 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_list("l_partkey")).alias("__items"))
         .filter(F.size("__items") <= 50)
-        .cache()
     )
     deg = (
         baskets.select(F.explode("__items").alias("l_partkey"))
@@ -7871,7 +7864,7 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     double square-sums carry ~1e-13 relative noise against round-4
     outputs.  Flag at the 5% critical value 0.463 on the rounded
     statistic."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     stats = daily.agg(
         F.sum("cents").cast("long").alias("__tot"),
         F.count(F.lit(1)).cast("long").alias("__n"),
@@ -7885,13 +7878,13 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_upto = Window.orderBy("i").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    scaled = cache.track(
+    scaled = cache.persist(
         base.select(
             "i",
             "__n",
             F.col("__ne").cast("double").alias("e"),
             F.sum("__ne").over(w_upto).cast("double").alias("s"),
-        ).cache()
+        )
     )
     nd = F.col("__n").cast("double")
     # Σ S_t² and γ0 from the same frame; S and e carry the ×n scale,
@@ -7945,7 +7938,7 @@ def q_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums (the haar lesson applied proactively) — and β̂/t are
     then elementwise double arithmetic on identical inputs, so even the
     catastrophic cancellation in Sxx is identical on both engines."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wi = Window.orderBy("day")
     idx = daily.select(F.row_number().over(wi).alias("i"), "cents")
     pairs = (
@@ -8250,7 +8243,7 @@ def q_perplexity_filter_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     |docs| skinny rows."""
     configure_runtime(spark)
     docs = load_table(spark, sf_dir, "documents")
-    bc = cache.track(ngram_lm.bigram_counts(docs).cache())
+    bc = cache.persist(ngram_lm.bigram_counts(docs))
     ctx = bc.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count(F.lit(1)).cast("long").alias("n_follow"),
@@ -8358,11 +8351,10 @@ def q_centroid_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", "label", "dim", F.col("__v").cast("double").alias("v")
     )
-    cents = cache.track(
+    cents = cache.persist(
         e.groupBy("label", "dim")
         .agg((F.round(F.avg("v"), 6) + F.lit(0.0)).alias("cv"))
         .withColumnRenamed("label", "c_label")
-        .cache()
     )
     cnorm = cents.groupBy("c_label").agg(
         F.sqrt(F.sum(F.col("cv") * F.col("cv"))).alias("__cn")
@@ -8462,7 +8454,7 @@ def q_breusch_pagan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     dickey_fuller pattern), so (a, b) are elementwise-identical doubles;
     residuals and the auxiliary moments are then identical elementwise
     arithmetic with ~1e-13 summation noise against round-4 outputs."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wi = Window.orderBy("day")
     idx = daily.select(
         F.row_number().over(wi).cast("long").alias("i"), "cents"
@@ -8594,7 +8586,7 @@ def q_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED to 6 before the tail-selection comparison (the CLAUDE.md
     computed-threshold rule), so both engines select the same tail
     rows; CVaR then divides two exact integers."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wi = Window.orderBy("day")
     idx = daily.select(F.row_number().over(wi).alias("i"), "cents")
     chg = (
@@ -8602,7 +8594,7 @@ def q_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(idx.alias("b"), F.col("a.i") == F.col("b.i") + 1)
         .select((F.col("a.cents") - F.col("b.cents")).alias("d"))
     )
-    chg = cache.track(chg.cache())
+    chg = cache.persist(chg)
     var5 = chg.agg(
         (
             F.round(F.expr("percentile(d, 0.05)") / F.lit(100.0), 6)
@@ -8818,7 +8810,7 @@ def q_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("nrm"),
     )
-    norms = cache.track(norms.cache())
+    norms = cache.persist(norms)
     med = norms.groupBy("label").agg(
         F.expr("percentile(nrm, 0.5)").alias("__med")
     )
@@ -8951,7 +8943,7 @@ def q_jarque_bera_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios are scale-free O(1) and round at 4.  χ²(2) 5% critical =
     5.991 (fixed literal).  Scale: the fact reduces to the ≤365-row
     day spine before any moment pass."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     mu = daily.agg(
         (F.sum("cents").cast("double") / F.count(F.lit(1)).cast("double"))
         .alias("__mu")
@@ -8988,7 +8980,7 @@ def q_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     elementwise-identical doubles; the two quadratic sums carry ~1e-13
     relative noise and DW rounds at 4.  Conventional bands as fixed
     literals: <1.5 positive, >2.5 negative, else none."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wi = Window.orderBy("day")
     idx = daily.select(
         F.row_number().over(wi).cast("long").alias("i"), "cents"
@@ -9052,7 +9044,7 @@ def q_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation z = (R − μ)/σ uses μ = 2·n1·n2/(n1+n2) + 1 and
     σ² = 2·n1·n2·(2·n1·n2 − n1 − n2)/((n1+n2)²·(n1+n2−1)) — double
     arithmetic over exact integers, identical cross-engine; round 4."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     wv = Window.orderBy("cents", "day")
     med = (
         daily.select(
@@ -9121,7 +9113,7 @@ def q_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ρ_k are O(1) ratios rounded into Q at 4.  χ²(7) 5% = 14.067.
     Scale: lags ride 7 window-lag columns over the ≤365-row spine —
     one pass, no self-join."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     mu = daily.agg(
         (F.sum("cents").cast("double") / F.count(F.lit(1)).cast("double"))
         .alias("__mu")
@@ -9171,7 +9163,7 @@ def q_grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     operational 3.0 threshold (3-sigma rule) rather than the n-dependent
     t-quantile (no t tables cross-engine).  Scale: two passes over the
     ≤365-row spine."""
-    daily = cache.track(_daily_cents_1995(spark, sf_dir).cache())
+    daily = cache.persist(_daily_cents_1995(spark, sf_dir))
     mu = daily.agg(
         (F.sum("cents").cast("double") / F.count(F.lit(1)).cast("double"))
         .alias("__mu"),
@@ -9239,10 +9231,9 @@ def q_kruskal_wallis_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("r_name", "cents")
     )
-    by_rc = cache.track(
+    by_rc = cache.persist(
         labeled.groupBy("r_name", "cents")
         .agg(F.count(F.lit(1)).cast("long").alias("t_rc"))
-        .cache()
     )
     by_c = by_rc.groupBy("cents").agg(
         F.sum("t_rc").cast("long").alias("t_all")
@@ -9327,24 +9318,22 @@ def q_brown_forsythe_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.12 (fixed literal).  Day-of-week parity: Spark weekday()+1 ==
     DuckDB isodow (CLAUDE.md).  Scale: all stages over the ≤365-row
     day spine."""
-    daily = cache.track(
+    daily = cache.persist(
         _daily_cents_1995(spark, sf_dir)
         .select(
             (F.weekday("day") + F.lit(1)).cast("int").alias("isodow"),
             "cents",
         )
-        .cache()
     )
     med = daily.groupBy("isodow").agg(
         F.expr("percentile(cents, 0.5)").alias("__med")
     )
-    z = cache.track(
+    z = cache.persist(
         daily.join(F.broadcast(med), "isodow")
         .select(
             "isodow",
             F.abs(F.col("cents").cast("double") - F.col("__med")).alias("__z"),
         )
-        .cache()
     )
     grp = z.groupBy("isodow").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
@@ -9550,7 +9539,7 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     wcust = Window.partitionBy("o_custkey")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    o2 = cache.track(
+    o2 = cache.persist(
         orders.select(
             "o_custkey",
             F.year("o_orderdate").cast("int").alias("__yr"),
@@ -9559,7 +9548,6 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "cohort_year", F.min("__yr").over(wcust).cast("int")
         )
-        .cache()
     )
     sizes = o2.groupBy("cohort_year").agg(
         F.countDistinct("o_custkey").cast("long").alias("cohort_size")
@@ -9655,10 +9643,9 @@ def q_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__w").alias("__w1"),
         F.lead("__w").over(wd).alias("__w2"),
     ).filter(F.col("__w2").isNotNull())
-    c12 = cache.track(
+    c12 = cache.persist(
         bg.groupBy("source", "__w1", "__w2")
         .agg(F.count(F.lit(1)).cast("long").alias("__c12"))
-        .cache()
     )
     wc1 = Window.partitionBy("source", "__w1")
     terms = c12.select(
@@ -9697,7 +9684,7 @@ def q_unigram_sampling_075(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothed vs raw probability.  Scale: one grouped count of the
     corpus, a broadcast scalar for the normalizer."""
     docs = _t(spark, sf_dir, "documents")
-    counts = cache.track(
+    counts = cache.persist(
         docs.select(
             F.explode(
                 F.split(F.trim(F.lower(F.col("text"))), r"\s+")
@@ -9706,7 +9693,6 @@ def q_unigram_sampling_075(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .cache()
     )
     wgt = F.exp(F.lit(0.75) * F.log(F.col("c").cast("double")))
     tot = counts.agg(
@@ -9934,7 +9920,7 @@ def q_cramers_v_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("__a", "__b")
             .agg(F.count(F.lit(1)).cast("long").alias("__o"))
         )
-        cells = cache.track(cells.cache())
+        cells = cache.persist(cells)
         wa = Window.partitionBy("__a")
         wb = Window.partitionBy("__b")
         tot = cells.select(
@@ -10020,10 +10006,9 @@ def q_kendall_w_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.row_number().over(wr).cast("long").alias("__rank"),
     )
-    sums = cache.track(
+    sums = cache.persist(
         ranked.groupBy("event_type")
         .agg(F.sum("__rank").cast("long").alias("rank_sum"))
-        .cache()
     )
     tot = sums.agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
@@ -10164,14 +10149,13 @@ def q_lift_table_purchase_propensity(
     ).select(
         F.col("decile").cast("int").alias("decile"), "__score", "__pos"
     )
-    per = cache.track(
+    per = cache.persist(
         dec.groupBy("decile")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_users"),
             F.sum("__pos").cast("long").alias("n_pos"),
             F.sum("__score").cast("long").alias("__ssum"),
         )
-        .cache()
     )
     tot = per.agg(
         F.sum("n_users").cast("long").alias("__tu"),
@@ -10309,14 +10293,13 @@ def q_embedding_dim_variance_screen(
         )
         / (F.max("__n").cast("double") - F.lit(1.0))
     )
-    per_dim = cache.track(
+    per_dim = cache.persist(
         dev.groupBy("dim")
         .agg(
             F.max("__n").cast("long").alias("n_vectors"),
             F.max("__mu").alias("__mu"),
             var_col.alias("__var"),
         )
-        .cache()
     )
     thr = per_dim.agg(
         (
@@ -10446,13 +10429,12 @@ def q_mmd_drift_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.select(
         "label", F.posexplode("embedding").alias("dim", "__v")
     ).select("label", "dim", F.col("__v").cast("double").alias("__v"))
-    per = cache.track(
+    per = cache.persist(
         e.groupBy("label", "dim")
         .agg(
             F.sum("__v").alias("__s"),
             F.count(F.lit(1)).cast("long").alias("__n"),
         )
-        .cache()
     )
     glob = per.groupBy("dim").agg(
         F.sum("__s").alias("__gs"),
@@ -10619,7 +10601,7 @@ def q_shapley_channel_attribution(
         F.sum("__p").cast("long").alias("__conv"),
     )
     spine = spark.range(16).select(F.col("id").cast("int").alias("mask"))
-    full = cache.track(
+    full = cache.persist(
         spine.join(F.broadcast(counts), "mask", "left")
         .select(
             "mask",
@@ -10632,7 +10614,6 @@ def q_shapley_channel_attribution(
             .otherwise(F.lit(0.0))
             .alias("__rate"),
         )
-        .cache()
     )
     chans = [(1, "view"), (2, "click"), (4, "signup"), (8, "error")]
     out = None
@@ -10727,13 +10708,12 @@ def q_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = scale.binned_ntile(
         per, ["__cents", "o_custkey"], 10, out_col="decile"
     ).select("decile", "__cents")
-    agg = cache.track(
+    agg = cache.persist(
         dec.groupBy("decile")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.sum("__cents").cast("long").alias("__s"),
         )
-        .cache()
     )
     tot = agg.agg(F.sum("__s").cast("long").alias("__t"))
     wc = Window.orderBy("decile")
@@ -10924,7 +10904,7 @@ def q_lsh_band_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; no non-integer pow).  This turns the usual rule-of-thumb
     (b, r) choice into a measured trade-off.  Scale: one pass over the
     guarded pair frame per config (3 configs, unioned plans)."""
-    pairs = cache.track(_jaccard_pairs_04(spark, sf_dir).cache())
+    pairs = cache.persist(_jaccard_pairs_04(spark, sf_dir))
     s = F.col("__j")
     s2 = s * s
     s4 = s2 * s2
@@ -11091,7 +11071,7 @@ def q_forecast_skill_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap through DECIMAL(18,6) (few-fixed-decimal averages) and the
     ratio divides the exact integer error sums directly.  Scale: two
     self-equi-joins on the shifted day spine."""
-    daily = cache.track(_daily_purchase_cents(spark, sf_dir).cache())
+    daily = cache.persist(_daily_purchase_cents(spark, sf_dir))
     s7 = daily.select(
         F.date_add("day", 7).alias("day"), F.col("cents").alias("__f7")
     )
@@ -11168,10 +11148,9 @@ def q_recsys_ndcg_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey", F.row_number().over(wt).cast("int").alias("__rank")
         )
     )
-    test_items = cache.track(
+    test_items = cache.persist(
         holdout.join(pairs, "o_orderkey")
         .select("o_custkey", "l_partkey")
-        .cache()
     )
     gain = F.lit(1.0) / (
         F.log(F.col("__rank").cast("double") + F.lit(1.0))
@@ -11327,7 +11306,7 @@ def q_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     (survival rounded at 6 identically in both engines) with exact
     integer day-widths.  Scale: arithmetic over the ≤31-row KM
     frame."""
-    km = cache.track(q_purchase_survival_km(spark, sf_dir).cache())
+    km = cache.persist(q_purchase_survival_km(spark, sf_dir))
     wt = Window.orderBy("t")
     steps = km.select(
         "t",
@@ -11370,7 +11349,7 @@ def q_stump_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == t, F.lit(1)).otherwise(F.lit(0))
         )
 
-    users = cache.track(
+    users = cache.persist(
         events.groupBy("user_id")
         .agg(
             has("view").alias("__fv"),
@@ -11378,7 +11357,6 @@ def q_stump_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             has("signup").alias("__fs"),
             has("purchase").alias("__y"),
         )
-        .cache()
     )
 
     def h_bits(pos, n):
@@ -11508,13 +11486,13 @@ def q_quasi_id_uniqueness_ladder(
     budget).  Exact integer counts throughout.  Scale: three grouped
     counts of the dim."""
     customer = _t(spark, sf_dir, "customer")
-    base = cache.track(
+    base = cache.persist(
         customer.select(
             "c_custkey",
             "c_nationkey",
             F.floor(F.col("c_acctbal") / 1000).cast("long").alias("__bal"),
             "c_mktsegment",
-        ).cache()
+        )
     )
     levels = [
         ("nation", ["c_nationkey"]),
@@ -11563,7 +11541,7 @@ def q_kfold_balance_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row fold frame.  Scale: one grouped pass over orders."""
     orders = _t(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    folds = cache.track(
+    folds = cache.persist(
         orders.groupBy(
             F.pmod(F.col("o_custkey"), F.lit(5)).cast("int").alias("fold")
         )
@@ -11571,7 +11549,6 @@ def q_kfold_balance_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum(cents).cast("long").alias("__s"),
         )
-        .cache()
     )
     mean = F.col("__s").cast("double") / F.col("n_orders").cast("double") / F.lit(100.0)
     spread = folds.select(mean.alias("__m")).agg(

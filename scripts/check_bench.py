@@ -3,8 +3,8 @@
 
 The shared box drifts ±30% run-to-run, so TOTAL wall-clock comparisons
 need a human eye — but a >2x single-query regression is almost always a
-real plan change (lost broadcast, lost pushdown, cache.track without
-.cache()), not box noise.  This script makes that check mechanical:
+real plan change (lost broadcast, lost pushdown, lost cache), not box
+noise.  This script makes that check mechanical:
 
     python scripts/check_bench.py                 # run bench.py, compare
     python scripts/check_bench.py CURRENT.json    # compare an existing run

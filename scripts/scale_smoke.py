@@ -1034,7 +1034,7 @@ def main() -> None:
                 best = min(
                     _time(lambda: fn(ev).count()) for _ in range(2)
                 )
-                # operator-internal cache.track registrations must not stay
+                # operator-internal cache.persist registrations must not stay
                 # pinned while the NEXT op is timed (bench.py precedent)
                 release_caches()
                 rows = ev.count()

@@ -276,3 +276,13 @@ def test_recommend_topk_invariants(spark, ratings_df):
         scores = [r["score"] for r in rows]
         assert scores == sorted(scores, reverse=True)
         assert len(rows) <= 2
+    # partial-probe ANN output does not depend on the item factors'
+    # layout: the quantizer seeds are numbered in (hash, id) order
+    def ann(items):
+        out = als.recommend_topk_ann(
+            uf, items, ratings_df, n=2, n_centroids=4, nprobe=2
+        ).collect()
+        return sorted(tuple(r) for r in out)
+
+    itf = itf.localCheckpoint(eager=True)
+    assert ann(itf.repartition(7)) == ann(itf.coalesce(1))

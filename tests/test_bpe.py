@@ -109,16 +109,3 @@ def test_merges_frame_shape(spark):
         (1, "a", "b", 5),
         (2, "ab", "c", 3),
     ]
-
-
-def test_tokenizer_save_load_roundtrip(spark, tmp_path):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(40)
-    merges, wt = bpe.train_bpe(docs, num_merges=8)
-    path = str(tmp_path / "tok")
-    bpe.save_tokenizer(path, merges, wt)
-    merges2, wt2 = bpe.load_tokenizer(spark, path)
-    assert merges2 == merges
-    # encoding through the reloaded table is identical
-    a = {r.doc_id: list(r.bpe_tokens) for r in bpe.bpe_encode(docs, wt).collect()}
-    b = {r.doc_id: list(r.bpe_tokens) for r in bpe.bpe_encode(docs, wt2).collect()}
-    assert a == b

@@ -4,14 +4,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wistia_video_analytics_project_spark.cache import release_caches, track
+from wistia_video_analytics_project_spark.cache import persist, release_caches
 
 from conftest import SF_SMOKE
 
 
 def test_release_caches_unpersists_tracked_frames(spark):
-    df = spark.range(100).withColumn("x", F.col("id") * 2).cache()
-    track(df)
+    df = persist(spark.range(100).withColumn("x", F.col("id") * 2))
     df.count()
     assert df.storageLevel.useMemory
     released = release_caches()
@@ -44,6 +43,6 @@ def test_release_caches_survives_frames_with_no_other_reference(spark):
     variable is gone by release time, but the JVM cache is not."""
     import gc
 
-    track(spark.range(10).cache()).count()
+    persist(spark.range(10)).count()
     gc.collect()
     assert release_caches() == 1

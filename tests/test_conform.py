@@ -17,15 +17,6 @@ def test_null_or_empty(spark):
     assert [r.b for r in got] == [False, True, True, True, False]
 
 
-def test_with_defaults_string_and_numeric(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), (None, None), ("", 2.0)], "s string, v double"
-    )
-    out = conform.with_defaults(df, {"s": "Unknown", "v": 0.0}).collect()
-    assert [r.s for r in out] == ["a", "Unknown", "Unknown"]
-    assert [r.v for r in out] == [1.0, 0.0, 2.0]
-
-
 def test_classify_channel(spark):
     df = spark.createDataFrame(
         [("My FaceBook promo",), ("YOUTUBE clip",), ("insta: instagram",),
@@ -67,55 +58,3 @@ def test_all_keys_present(spark):
         [("a", "b"), (None, "b"), ("a", ""), ("x", "y")], "k1 string, k2 string"
     )
     assert conform.all_keys_present(df, ["k1", "k2"]).count() == 2
-
-
-def test_extract_media_id_from_path(spark):
-    df = spark.createDataFrame(
-        [("abfss://raw/visitors/gskhw4w4lm_20240101_020000/part-0.json",),
-         ("raw/visitors/abc123_x.json",)],
-        "file_path string",
-    )
-    got = [r.media_id for r in conform.extract_media_id_from_path(df).collect()]
-    assert got == ["gskhw4w4lm", "abc123"]
-
-
-def test_schema_drift_report(spark):
-    from wistia_video_analytics_project_spark import schemas
-
-    drifted = spark.createDataFrame(
-        [("m1", "t", "1700000000", "extra")],
-        "hashed_id string, name string, created string, new_field string",
-    )
-    got = conform.schema_drift_report(drifted, schemas.RAW_MEDIA)
-    assert got == {
-        "missing": [],
-        "unexpected": ["new_field"],
-        "retyped": {"created": ("bigint", "string")},
-    }
-    clean = spark.createDataFrame([], schemas.RAW_MEDIA)
-    assert conform.schema_drift_report(clean, schemas.RAW_MEDIA) == {
-        "missing": [], "unexpected": [], "retyped": {}}
-
-
-def test_flatten_struct_recursive_and_prunable(spark):
-    df = spark.createDataFrame(
-        [(1, {"b": {"c": 5, "d": "x"}, "e": 7}, [1, 2])],
-        "a long, s struct<b: struct<c: long, d: string>, e: long>, arr array<long>",
-    )
-    flat = conform.flatten_struct(df)
-    assert flat.columns == ["a", "s_b_c", "s_b_d", "s_e", "arr"]
-    row = flat.collect()[0]
-    assert (row.a, row.s_b_c, row.s_b_d, row.s_e, row.arr) == (1, 5, "x", 7, [1, 2])
-
-
-def test_flatten_struct_detects_name_collision(spark):
-    """Top-level `s_b` next to struct field `s.b` would produce an
-    ambiguous frame that only fails on later reference — flatten must
-    raise up front (round-2 ADVICE)."""
-    import pytest
-
-    df = spark.createDataFrame(
-        [(1, {"b": 2})], "s_b long, s struct<b: long>"
-    )
-    with pytest.raises(ValueError, match="collision"):
-        conform.flatten_struct(df)

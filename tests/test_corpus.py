@@ -84,24 +84,6 @@ def test_pack_sequences_invariants(spark):
     assert again == {(r.doc_id, r.pack_id) for r in rows}
 
 
-def test_write_training_shards_roundtrip(spark, tmp_path):
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(300)
-    path = str(tmp_path / "shards")
-    manifest = corpus.write_training_shards(docs, path, n_shards=4)
-    m = {r.shard: r.n_rows for r in manifest.collect()}
-    assert sorted(m) == [0, 1, 2, 3]
-    assert sum(m.values()) == 300
-    back = spark.read.parquet(path)
-    assert back.count() == 300
-    # shard assignment is content-derived: rewriting yields byte-equal
-    # shard membership
-    path2 = str(tmp_path / "shards2")
-    corpus.write_training_shards(docs.repartition(9), path2, n_shards=4)
-    a = {(r.doc_id, r.shard) for r in spark.read.parquet(path).select("doc_id", "shard").collect()}
-    b = {(r.doc_id, r.shard) for r in spark.read.parquet(path2).select("doc_id", "shard").collect()}
-    assert a == b
-
-
 def test_mixture_sample_respects_budget_and_caps(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     weights = {"src0": 3.0, "src1": 1.0, "src2": 1.0}

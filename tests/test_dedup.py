@@ -218,41 +218,6 @@ def test_incremental_exact_matches_full_dedup(spark, docs):
     assert incremental_ids == full_ids
 
 
-def test_incremental_minhash_dedup(spark, docs):
-    """A batch doc near-duplicating a store doc is dropped; novel content
-    and the earliest member of a within-batch near-dup group survive."""
-    store_docs = docs.filter("doc_id < 250")
-    seen_sigs = dedup.minhash_signatures(store_docs)
-    # batch: copies of 3 store docs (shifted ids) + genuinely new docs
-    copies = store_docs.filter("doc_id < 3").withColumn(
-        "doc_id", F.col("doc_id") + 9_000
-    )
-    novel = docs.filter("doc_id >= 250 AND doc_id < 270")
-    novel_dup = docs.filter("doc_id = 250").withColumn(
-        "doc_id", F.col("doc_id") + 9_500
-    )
-    batch = copies.unionByName(novel).unionByName(novel_dup)
-    kept = dedup.incremental_minhash_dedup(batch, seen_sigs, threshold=0.5)
-    kept_ids = {r.doc_id for r in kept.collect()}
-    assert kept_ids & set(range(250, 270))  # novel content survives
-    assert not kept_ids & {9000, 9001, 9002}  # store near-dups dropped
-    assert 9750 not in kept_ids  # within-batch dup of doc 250 dropped
-    assert "sig" in kept.columns  # ready to append to the store
-
-
-def test_incremental_minhash_rejects_wrong_sig_width(spark, docs):
-    """A store persisted under a different N_MINHASH would silently
-    deflate est_jaccard (zip_with truncates to the shorter array) —
-    the probe must fail loudly instead (round-2 ADVICE)."""
-    store_docs = docs.filter("doc_id < 50")
-    bad_store = dedup.minhash_signatures(store_docs).withColumn(
-        "sig", F.slice("sig", 1, 16)  # half the expected width
-    )
-    batch = docs.filter("doc_id >= 50 AND doc_id < 60")
-    with pytest.raises(Exception, match="signature width"):
-        dedup.incremental_minhash_dedup(batch, bad_store).collect()
-
-
 def test_winnow_guarantee_and_candidates(spark):
     """Winnowing guarantee: a shared run of >= w + k - 1 tokens always
     shares a fingerprint; disjoint docs share none. k=4, w=4 -> any

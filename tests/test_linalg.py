@@ -252,6 +252,19 @@ def test_logistic_train_matches_numpy_reference(spark):
         labeled.repartition(13), "embedding", "y", 64, iterations=4, ridge=1e-3
     )
     np.testing.assert_allclose(again_w, got_w, rtol=1e-7, atol=1e-9)
+    # an already-cached input is not cached again: the
+    # quality_classifier_train binding persists one frame, not two
+    import __spark_entry__ as entrymod
+    from wistia_video_analytics_project_spark.cache import release_caches
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    release_caches()
+    before = persisted()
+    entrymod.q_quality_classifier_train(spark, SF_SMOKE).collect()
+    assert len(persisted() - before) == 1
+    release_caches()
 
 
 def test_logistic_train_separates_linear_data(spark):

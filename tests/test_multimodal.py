@@ -47,12 +47,6 @@ def test_sample_frames_grid(spark, assets):
     assert sorted(by_asset[5]) == [0]
 
 
-def test_dedup_by_content(spark, assets):
-    out = multimodal.dedup_by_content(assets.filter("payload IS NOT NULL"))
-    canon = {r.asset_id: r.is_canonical for r in out.collect()}
-    assert canon == {1: True, 2: False, 3: True, 4: True}
-
-
 def test_codecs_absent_stub_raises():
     if not multimodal.HAVE_CODECS:
         with pytest.raises(NotImplementedError, match="codec"):
@@ -1525,31 +1519,6 @@ def test_video_features_motion_and_static():
     assert static[5] == round(25 / 120, 6)  # features round to 6 dp
 
 
-def test_extract_video_frames_real_rows(spark):
-    frames = _avi_frames(n=4)
-    avi = _avi_bytes([_jpeg_bytes(f) for f in frames], fps=10)
-    assets = spark.createDataFrame(
-        [
-            (1, "video", avi, 16, 16, 400, "mjpg"),
-            (2, "video", b"\x00\x00\x00\x18ftypmp42-not-decodable", 0, 0,
-             1000, "h264"),
-            (3, "image", _bmp_bytes(), 2, 2, None, "bmp"),
-        ],
-        "asset_id long, media_type string, payload binary, width int, "
-        "height int, duration_ms int, codec string",
-    )
-    rows = multimodal.extract_video_frames(assets, every_n=2).collect()
-    # decodable video only; every 2nd frame of 4; ms follows the 10 fps clock
-    assert [(r.asset_id, r.frame_idx, r.frame_ms) for r in rows] == [
-        (1, 0, 0),
-        (1, 2, 200),
-    ]
-    want = multimodal._pixel_features(
-        multimodal.decode_image(_jpeg_bytes(frames[2]))
-    )
-    assert list(rows[1].feature) == want
-
-
 def test_video_codec_stub_and_malformed_avi():
     # non-AVI video containers keep the documented codec-absent branch
     with pytest.raises(NotImplementedError, match="codec"):
@@ -1784,21 +1753,6 @@ def test_gif_malformed_raises():
     for cut in (good[:37] + b"\x21", good[: len(good) - 3]):
         with pytest.raises(ValueError):
             multimodal._decode_gif(bytes(cut))
-
-
-def test_extract_video_frames_null_payload_skipped(spark):
-    """A NULL video payload degrades to zero rows like an undecodable
-    one — it must not crash the batch (bytes(None) is a TypeError)."""
-    frames = _avi_frames(n=2)
-    avi = _avi_bytes([_jpeg_bytes(f) for f in frames], fps=10)
-    assets = spark.createDataFrame(
-        [(1, "video", None, 0, 0, 0, "mjpg"),
-         (2, "video", avi, 16, 16, 200, "mjpg")],
-        "asset_id long, media_type string, payload binary, width int, "
-        "height int, duration_ms int, codec string",
-    )
-    rows = multimodal.extract_video_frames(assets, every_n=1).collect()
-    assert sorted({r.asset_id for r in rows}) == [2]
 
 
 def test_extract_features_uses_real_video_path(spark):

@@ -181,40 +181,6 @@ def test_funnel_single_pass_one_shuffle(spark):
     plans.assert_pushed_filter(df, "event_type")
 
 
-def test_runtime_bloom_filter_injects_might_contain(spark):
-    """With bloom pruning scoped on (thresholds shrunk to fire at test
-    scale), a selective dim filter must inject might_contain into the
-    fact side of a shuffle join."""
-    from pyspark.sql import functions as F
-
-    from wistia_video_analytics_project_spark.operators.scale import (
-        runtime_bloom_filter,
-    )
-    from wistia_video_analytics_project_spark.sources import load_table
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    orders = load_table(spark, SF_SMOKE, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with runtime_bloom_filter(
-            spark,
-            creation_side_threshold="10GB",
-            application_side_threshold="0",
-        ):
-            j = (
-                li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-                .groupBy("o_orderpriority")
-                .count()
-            )
-            plan = plans.executed_plan(j)
-        assert "might_contain" in plan.lower(), plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-
-
 def test_cooccurrence_grouped_two_exchanges_and_takeordered(spark):
     """Grouped co-occurrence: exactly basket-shuffle + pair-shuffle,
     top-k as TakeOrdered (never a global sort)."""

@@ -174,24 +174,6 @@ def test_binned_range_join_equals_naive(spark, lts, rts, window):
     assert got == naive
 
 
-@given(
-    xs=st.lists(st.integers(0, 255), min_size=2, max_size=12, unique=True),
-    ys=st.lists(st.integers(0, 255), min_size=2, max_size=12, unique=True),
-)
-@SLOW
-def test_zorder_key_is_injective_on_grid(spark, xs, ys):
-    from wistia_video_analytics_project_spark.operators import scale
-
-    rows = [(x, y) for x in xs for y in ys]
-    df = spark.createDataFrame(rows, "x long, y long")
-    out = df.select(
-        "x", "y", scale.zorder_key([("x", 0, 256), ("y", 0, 256)], bits=8).alias("z")
-    ).collect()
-    zs = [r.z for r in out]
-    assert len(set(zs)) == len(rows)  # distinct cells -> distinct keys
-    assert all(0 <= z < 1 << 16 for z in zs)
-
-
 WORD = st.text(alphabet="abcdefgh", min_size=1, max_size=4)
 DOC = st.lists(WORD, min_size=8, max_size=30).map(" ".join)
 

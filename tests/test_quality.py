@@ -61,13 +61,6 @@ def test_quality_report(spark):
     assert r.row_count == 3 and r.distinct_key == 2 and r.distinct_v == 2
 
 
-def test_referential_orphans(spark):
-    fact = spark.createDataFrame([("m1",), ("mX",)], "media_id string")
-    dim = spark.createDataFrame([("m1",)], "media_id string")
-    got = quality.referential_orphans(fact, dim, "media_id", "media_id").collect()
-    assert [r.media_id for r in got] == ["mX"]
-
-
 def test_approx_count_distinct_close_to_exact(spark):
     """The at-scale HLL++ path stays within its configured rsd."""
     from conftest import SF_ORACLE
@@ -88,14 +81,6 @@ def test_approx_count_distinct_close_to_exact(spark):
     }
     for t, n in exact.items():
         assert abs(approx[t] - n) / n < 0.05, (t, approx[t], n)
-
-
-def test_null_samples(spark):
-    df = spark.createDataFrame(
-        [("a", 1), (None, 2), ("", 3), (None, 4)], "k string, v int"
-    )
-    got = quality.null_samples(df, "k", n=2)
-    assert len(got) == 2 and all(r.k is None or r.k == "" for r in got)
 
 
 def test_sql_string_predicates_and_first(spark):
@@ -142,11 +127,33 @@ def test_chunk_documents_boundaries(spark):
     ]
 
 
+def make_chunk_udtf(chunk_size: int = 50, stride: int = 40):
+    """Python UDTF form of ``text.chunk_documents`` (one input text ->
+    many chunk rows): the independent reference the HOF is checked
+    against. Register then use via LATERAL:
+
+        spark.udtf.register("chunk", make_chunk_udtf())
+        spark.sql("SELECT d.doc_id, c.* FROM docs d, LATERAL chunk(d.text) c")
+    """
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="chunk_id int, chunk_text string, n_tokens int")
+    class Chunker:
+        def eval(self, text: str):  # noqa: D102 - UDTF contract
+            if text is None:
+                return
+            toks = text.strip().split()
+            if not toks:
+                return
+            for ci, s in enumerate(range(0, len(toks), stride)):
+                window = toks[s : s + chunk_size]
+                yield ci, " ".join(window), len(window)
+
+    return Chunker
+
+
 def test_chunk_udtf_matches_hof(spark):
-    from wistia_video_analytics_project_spark.operators.text import (
-        chunk_documents,
-        make_chunk_udtf,
-    )
+    from wistia_video_analytics_project_spark.operators.text import chunk_documents
     from wistia_video_analytics_project_spark.session import configure_runtime
     from wistia_video_analytics_project_spark.sources import load_table
 

@@ -1,5 +1,5 @@
-"""Scale helpers: salted join correctness, bucketed-join exchange
-elision, observe-based single-pass metrics."""
+"""Scale helpers: observe-based single-pass metrics, skew report,
+incremental join deltas, binned ladders."""
 
 from __future__ import annotations
 
@@ -9,102 +9,18 @@ from pyspark.sql import functions as F
 from wistia_video_analytics_project_spark.operators import scale
 
 
-def test_salted_join_matches_plain_join(spark):
-    # hot key: 'viral' carries 90% of rows
-    skewed = spark.createDataFrame(
-        [("viral", i) for i in range(90)] + [(f"k{i}", i) for i in range(10)],
-        "media_id string, n int",
-    )
-    dim = spark.createDataFrame(
-        [("viral", "Hot Video"), ("k1", "Cold 1"), ("k5", "Cold 5")],
-        "media_id string, title string",
-    )
-    plain = skewed.join(dim, "media_id").select("media_id", "n", "title")
-    salted = scale.salted_join(skewed, dim, "media_id", n_salts=8).select(
-        "media_id", "n", "title"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    skewed = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n int")
-    dim = spark.createDataFrame([("a", "x")], "k string, v string")
-    out = scale.salted_join(skewed, dim, "k", n_salts=4, how="left").collect()
-    got = {r.k: r.v for r in out}
-    assert got == {"a": "x", "b": None}
-
-
-def test_salted_join_rejects_replicating_join_types(spark):
-    """right/full joins would emit n_salts copies of every unmatched row
-    on the replicated side — rejected up front."""
-    skewed = spark.createDataFrame([("a", 1)], "k string, n int")
-    dim = spark.createDataFrame([("a", "x"), ("b", "y")], "k string, v string")
-    for how in ("right", "full", "outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            scale.salted_join(skewed, dim, "k", n_salts=4, how=how)
-    # semi/anti stay correct: every key on the replicated side carries
-    # every salt, so membership tests are unaffected
-    semi = scale.salted_join(skewed, dim, "k", n_salts=4, how="left_semi")
-    assert [r.k for r in semi.collect()] == ["a"]
-    anti = scale.salted_join(skewed, dim, "k", n_salts=4, how="left_anti")
-    assert anti.count() == 0
-
-
-def test_bucketed_join_elides_exchange(spark):
-    fact = spark.range(0, 1000).select(
-        (F.col("id") % 50).alias("k"), F.col("id").alias("v")
-    )
-    dim = spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-    )
-    scale.write_bucketed(fact, "b_fact", ["k"], n_buckets=8)
-    scale.write_bucketed(dim, "b_dim", ["k"], n_buckets=8)
-    # disable broadcast so the join would otherwise shuffle both sides
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("b_fact").join(spark.table("b_dim"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_fact")
-        spark.sql("DROP TABLE IF EXISTS b_dim")
-
-
 def test_observed_metrics_single_pass(spark):
     df = spark.createDataFrame(
         [("a", 1), (None, 2), ("c", None)], "k string, v int"
     )
-    out, obs = scale.observed(df, "qc", scale.qc_metrics(["k", "v"]))
+    metrics = {
+        "rows": F.count(F.lit(1)),
+        "null_k": F.sum(F.col("k").isNull().cast("long")),
+        "null_v": F.sum(F.col("v").isNull().cast("long")),
+    }
+    out, obs = scale.observed(df, "qc", metrics)
     assert out.count() == 3  # the one real action
     assert obs.get == {"rows": 3, "null_k": 1, "null_v": 1}
-
-
-def test_two_phase_agg_equals_direct(spark):
-    df = spark.createDataFrame(
-        [("hot", i, float(i)) for i in range(500)]
-        + [(f"k{i}", i, float(i)) for i in range(20)],
-        "key string, n int, v double",
-    )
-    measures = lambda: {
-        "cnt": F.count(F.lit(1)),
-        "total": F.sum("v"),
-        "lo": F.min("n"),
-        "hi": F.max("n"),
-    }
-    direct = {tuple(r) for r in df.groupBy("key").agg(
-        *[m.alias(k) for k, m in measures().items()]).collect()}
-    two = {tuple(r) for r in scale.two_phase_agg(df, ["key"], measures()).collect()}
-    assert two == direct
-
-
-def test_two_phase_agg_rejects_nondecomposable(spark):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([("a", 1.0)], "key string, v double")
-    with _pytest.raises(ValueError, match="sum/count/min/max"):
-        scale.two_phase_agg(df, ["key"], {"bad": F.avg("v")})
 
 
 def test_skew_report_identifies_hot_key(spark):
@@ -129,16 +45,6 @@ def test_skew_report_uniform_ratio_near_one(spark):
     )
     rows = scale.skew_report(df, ["key"], top_n=8).collect()
     assert all(r.skew_ratio == 1.0 for r in rows)
-
-
-def test_partition_stats_balanced_after_repartition(spark):
-    df = spark.range(10_000).repartition(8)
-    rows = scale.partition_stats(df).collect()
-    assert len(rows) == 8
-    assert all(r.n_partitions == 8 for r in rows)
-    # round-robin repartition is near-uniform
-    assert max(r.n_rows for r in rows) - min(r.n_rows for r in rows) < 2000
-    assert abs(sum(r.n_rows for r in rows) - 10_000) == 0
 
 
 def test_incremental_join_delta_completeness(spark):

@@ -163,26 +163,6 @@ def test_ivf_lloyd_refinement_runs_and_improves_or_holds(spark, emb):
     assert full == brute3
 
 
-def test_ivf_persisted_index_prunes_and_matches(spark, emb, tmp_path):
-    """Persisted-index path: results equal the in-memory IVF, and the
-    index scan is partition-pruned to the probed cells."""
-    from wistia_video_analytics_project_spark import plans
-
-    idx = str(tmp_path / "ivf")
-    similarity.ivf_write_index(emb, idx, n_centroids=8)
-    queries = emb.filter("vec_id < 5")
-    from_index = similarity.ivf_query_index(spark, idx, queries, k=5, nprobe=2)
-    in_memory = similarity.ann_ivf_topk(queries, emb, k=5, n_centroids=8, nprobe=2)
-    assert sorted(map(tuple, from_index.collect())) == sorted(
-        map(tuple, in_memory.collect())
-    )
-    plan = plans.executed_plan(from_index)
-    import re
-
-    all_pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("cell" in pf for pf in all_pf), plan
-
-
 def test_semantic_dedup_keep_invariants(spark, emb):
     """Dominated-by-earlier rule on a bounded slice: every dropped id has
     an earlier id within the threshold; no kept id does."""
@@ -307,89 +287,6 @@ def test_topk_deterministic_at_score_ties(spark):
     assert run(corpus.repartition(17, "vec_id")) == want
 
 
-def test_ivf_add_to_index_incremental(spark, tmp_path):
-    """Incremental add: new vectors join the frozen-centroid index, are
-    findable at cosine 1.0 by an identical query vector, and the index
-    grows by exactly the batch size with assignments matching
-    ivf_assign against the frozen centroids."""
-    import json
-    import os
-
-    from wistia_video_analytics_project_spark.operators import similarity
-    from wistia_video_analytics_project_spark.sources import load_table
-
-    from conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf")
-    similarity.ivf_write_index(half_a, path, n_centroids=8)
-    n_a = spark.read.parquet(os.path.join(path, "cells")).count()
-
-    similarity.ivf_add_to_index(spark, path, half_b)
-    cells = spark.read.parquet(os.path.join(path, "cells"))
-    assert cells.count() == n_a + half_b.count()
-
-    # assignments of the added batch match the frozen centroid table
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = [(int(c), v) for c, v in json.load(f)]
-    expect = {
-        (r.vec_id, r.cell)
-        for r in similarity.ivf_assign(half_b, cents, nprobe=1).collect()
-    }
-    got = {
-        (r.vec_id, r.cell)
-        for r in cells.join(half_b.select("vec_id"), "vec_id").select(
-            "vec_id", "cell"
-        ).collect()
-    }
-    assert got == expect
-
-    # a query identical to an added vector finds it at cosine 1.0
-    probe = half_b.orderBy("vec_id").limit(1).collect()[0]
-    q = spark.createDataFrame(
-        [(999999, probe.embedding)], "vec_id long, embedding array<float>"
-    )
-    top = similarity.ivf_query_index(spark, path, q, k=1, nprobe=1).collect()
-    assert top and top[0].neighbor_id == probe.vec_id
-    assert top[0].cosine_sim == 1.0
-
-
-def test_pq_index_persist_query_recall(spark, tmp_path):
-    """Persisted PQ index: shortlist+re-rank recall@5 vs exact brute
-    force stays high, and with shortlist == corpus size the result
-    EQUALS brute force (re-rank is exact)."""
-    from wistia_video_analytics_project_spark.operators import similarity
-    from wistia_video_analytics_project_spark.sources import load_table
-
-    from conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    path = str(tmp_path / "pq")
-    similarity.pq_write_index(emb, path, m=8, n_codes=16)
-
-    queries = emb.orderBy("vec_id").limit(8)
-    exact = similarity.brute_force_topk(queries, emb, k=5)
-    exact_sets = {}
-    for r in exact.collect():
-        exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    got = similarity.pq_query_index(spark, path, queries, k=5, shortlist=32)
-    got_sets = {}
-    for r in got.collect():
-        got_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(len(exact_sets[q] & got_sets.get(q, set())) for q in exact_sets)
-    total = sum(len(s) for s in exact_sets.values())
-    assert hits / total >= 0.6, f"recall {hits}/{total}"
-
-    n = emb.count()
-    full = similarity.pq_query_index(spark, path, queries, k=5, shortlist=n)
-    full_rows = {(r.query_id, r.neighbor_id, r.cosine_sim) for r in full.collect()}
-    exact_rows = {(r.query_id, r.neighbor_id, r.cosine_sim) for r in exact.collect()}
-    assert full_rows == exact_rows
-
-
 def test_hard_negatives_labels_always_differ(spark):
     """Every mined pair crosses a label boundary, ranks are dense per
     query, and each negative is at least as similar as the next rank."""
@@ -409,134 +306,6 @@ def test_hard_negatives_labels_always_differ(spark):
         assert [r.rnk for r in rows] == [1, 2, 3]
         sims = [r.cosine_sim for r in rows]
         assert sims == sorted(sims, reverse=True)
-
-
-def test_ivf_compaction_policy_restores_recall(spark, emb, tmp_path):
-    """Continuous-ingestion maintenance: a skewed incremental batch
-    (near-duplicates piling into one frozen cell) trips the health
-    thresholds; compaction re-trains and the rebuilt index's recall
-    equals a from-scratch build on the same corpus (same deterministic
-    training pipeline)."""
-    idx = str(tmp_path / "ivf_maint")
-    base = emb.filter("vec_id < 80")
-    similarity.ivf_write_index(base, idx, n_centroids=8, refine_iterations=2)
-    h0 = similarity.ivf_index_health(spark, idx)
-    assert h0["n_vectors"] == 80 and h0["n_cells"] == 8
-
-    # adversarial batch: 60 jittered copies of one base vector -> all
-    # land in that vector's (frozen) cell
-    seed_vec = base.filter("vec_id = 0").collect()[0]["embedding"]
-    jitter = [
-        (
-            10_000 + i,
-            [float(v) + 1e-4 * ((i + j) % 7) for j, v in enumerate(seed_vec)],
-            0,
-        )
-        for i in range(60)
-    ]
-    batch = spark.createDataFrame(
-        jitter, "vec_id long, embedding array<float>, label long"
-    ).select("vec_id", "embedding", "label")
-    similarity.ivf_add_to_index(spark, idx, batch.select("vec_id", "embedding"))
-
-    h1 = similarity.ivf_index_health(spark, idx)
-    assert h1["n_vectors"] == 140
-    assert h1["skew_ratio"] > h0["skew_ratio"]
-    assert h1["max_cell"] >= 60
-
-    # below-threshold call is a no-op
-    noop = similarity.ivf_compact_index(
-        spark, idx, skew_threshold=h1["skew_ratio"] + 1
-    )
-    assert noop["rebuilt"] is False
-
-    res = similarity.ivf_compact_index(spark, idx, skew_threshold=3.0)
-    assert res["rebuilt"] is True
-    h2 = similarity.ivf_index_health(spark, idx)
-    assert h2["n_vectors"] == 140
-    assert h2["skew_ratio"] <= h1["skew_ratio"]
-
-    # recall after incremental adds + rebuild == from-scratch build on
-    # the union corpus (identical deterministic training pipeline)
-    union = base.select("vec_id", "embedding").unionByName(
-        batch.select("vec_id", "embedding")
-    )
-    fresh = str(tmp_path / "ivf_fresh")
-    similarity.ivf_write_index(union, fresh, n_centroids=8, refine_iterations=2)
-    queries = emb.filter("vec_id < 10").select("vec_id", "embedding")
-
-    def topk(path):
-        return sorted(
-            map(
-                tuple,
-                similarity.ivf_query_index(
-                    spark, path, queries, k=5, nprobe=2
-                ).collect(),
-            )
-        )
-
-    assert topk(idx) == topk(fresh)
-
-
-def test_ivf_ingest_loop_full_maintenance_cycle(spark, emb, tmp_path):
-    """Round-5 VERDICT item: the full degrade -> compact -> recover
-    cycle under a REAL ingestion loop, not one adversarial batch.
-    Sequential ``ivf_add_to_index`` batches of drifted vectors pile
-    into frozen cells until the health policy trips; compaction then
-    rebuilds, and partial-probe recall on the drifted region must come
-    back to exactly the fresh-index level (deterministic pipeline)."""
-    idx = str(tmp_path / "ivf_loop")
-    base = emb.filter("vec_id < 80").select("vec_id", "embedding")
-    similarity.ivf_write_index(base, idx, n_centroids=8, refine_iterations=2)
-    h0 = similarity.ivf_index_health(spark, idx)
-
-    # ingestion: batches of vectors jittered around one seed, i.e. a
-    # drifting workload the frozen centroids never trained on
-    seed_vec = [float(v) for v in base.filter("vec_id = 0").collect()[0]["embedding"]]
-    tripped = False
-    batch_no = 0
-    while batch_no < 6 and not tripped:
-        rows = [
-            (
-                20_000 + 100 * batch_no + i,
-                [v + 2e-4 * ((batch_no + i + j) % 5) for j, v in enumerate(seed_vec)],
-            )
-            for i in range(20)
-        ]
-        batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        similarity.ivf_add_to_index(spark, idx, batch)
-        batch_no += 1
-        h = similarity.ivf_index_health(spark, idx)
-        tripped = h["skew_ratio"] > 3.0
-    assert tripped, f"6 drift batches never tripped the skew policy: {h}"
-    assert h["n_vectors"] == 80 + 20 * batch_no
-    assert h["skew_ratio"] > h0["skew_ratio"]
-
-    res = similarity.ivf_compact_index(spark, idx, skew_threshold=3.0)
-    assert res["rebuilt"] is True
-    h2 = similarity.ivf_index_health(spark, idx)
-    assert h2["n_vectors"] == h["n_vectors"]
-    assert h2["skew_ratio"] < h["skew_ratio"]
-
-    # recovery: rebuilt index == from-scratch build on the same corpus,
-    # compared on actual partial-probe query results over the drifted
-    # region (the workload the stale centroids served worst)
-    union = spark.read.parquet(f"{idx}/cells").drop("cell")
-    fresh = str(tmp_path / "ivf_loop_fresh")
-    similarity.ivf_write_index(
-        union, fresh, n_centroids=8, refine_iterations=2
-    )
-    queries = emb.filter("vec_id < 10").select("vec_id", "embedding")
-
-    def topk(path):
-        return sorted(
-            (r.query_id, r.rnk, r.neighbor_id)
-            for r in similarity.ivf_query_index(
-                spark, path, queries, k=5, nprobe=2
-            ).collect()
-        )
-
-    assert topk(idx) == topk(fresh)
 
 
 def test_mmr_lambda_one_equals_plain_topk(spark, emb):
@@ -647,144 +416,6 @@ def test_ivf_quality_operating_point_recall(spark, emb):
     assert r_adc >= 0.7, f"ivf_pq quality-point recall {r_adc}"
 
 
-def test_ivf_delete_tombstones_and_compaction(spark, emb, tmp_path):
-    """Full delete lifecycle: tombstoned ids vanish from queries
-    IMMEDIATELY (no rewrite), health reports the tombstone debt,
-    compaction triggered by tombstone fraction physically removes the
-    rows and clears the set, and the post-compact index equals a fresh
-    build on the surviving corpus."""
-    path = str(tmp_path / "ivf_del")
-    corpus = emb.filter("vec_id < 400")
-    similarity.ivf_write_index(corpus, path, n_centroids=8)
-    queries = emb.filter("vec_id >= 400 AND vec_id < 410")
-
-    before = similarity.ivf_query_index(
-        spark, path, queries, k=5, nprobe=8
-    ).collect()
-    victim_ids = sorted({r.neighbor_id for r in before})[:10]
-    similarity.ivf_delete_from_index(spark, path, victim_ids)
-
-    # 1) deletes visible immediately, no cell rewrite
-    after = similarity.ivf_query_index(
-        spark, path, queries, k=5, nprobe=8
-    ).collect()
-    assert not {r.neighbor_id for r in after} & set(victim_ids)
-
-    # 2) health reports the debt
-    h = similarity.ivf_index_health(spark, path)
-    assert h["n_tombstones"] == len(victim_ids)
-    assert h["tombstone_frac"] > 0
-
-    # 3) compaction triggered by tombstone fraction alone (skew/empty
-    # thresholds set un-trippable) physically removes rows + clears set
-    res = similarity.ivf_compact_index(
-        spark, path,
-        skew_threshold=1e9, empty_frac_threshold=1.1,
-        tombstone_frac_threshold=h["tombstone_frac"] / 2,
-    )
-    assert res["rebuilt"] is True
-    h2 = similarity.ivf_index_health(spark, path)
-    assert h2["n_tombstones"] == 0
-    assert h2["n_vectors"] == h["n_vectors"] - len(victim_ids)
-
-    # 4) post-compact equals a fresh build on the surviving corpus
-    fresh = str(tmp_path / "ivf_fresh")
-    surviving = corpus.filter(~F.col("vec_id").isin(victim_ids))
-    similarity.ivf_write_index(
-        surviving, fresh, n_centroids=8, refine_iterations=2
-    )
-    got = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in similarity.ivf_query_index(
-            spark, path, queries, k=5, nprobe=8
-        ).collect()
-    }
-    want = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in similarity.ivf_query_index(
-            spark, fresh, queries, k=5, nprobe=8
-        ).collect()
-    }
-    assert got == want
-
-    # 5) deleting via a DataFrame also works and no-ops on absent ids
-    df_ids = spark.createDataFrame([(99999,)], "vec_id long")
-    similarity.ivf_delete_from_index(spark, path, df_ids)
-    again = similarity.ivf_query_index(
-        spark, path, queries, k=5, nprobe=8
-    ).collect()
-    assert {
-        (r.query_id, r.rnk, r.neighbor_id) for r in again
-    } == {
-        (q, r, n) for (q, r), n in got.items()
-    }
-
-
-def test_ivf_delete_then_readd_resurrects(spark, emb, tmp_path):
-    """Round-7 ADVICE (medium): tombstones are epoch-sequenced, so
-    re-adding a previously deleted id (a) serves the NEW vector
-    immediately, (b) keeps the pre-delete rows of that id hidden, and
-    (c) survives compaction (the old anti-join-on-id design hid the
-    fresh rows and the next compaction physically stripped them)."""
-    path = str(tmp_path / "ivf_readd")
-    corpus = emb.filter("vec_id < 200").select("vec_id", "embedding")
-    similarity.ivf_write_index(corpus, path, n_centroids=8)
-    queries = emb.filter("vec_id >= 400 AND vec_id < 405").select(
-        "vec_id", "embedding"
-    )
-
-    # pick a victim that actually serves: the top-1 neighbor of q0
-    full = similarity.ivf_query_index(spark, path, queries, k=3, nprobe=8)
-    victim = sorted(
-        (r.rnk, r.neighbor_id) for r in full.collect() if r.rnk == 1
-    )[0][1]
-    similarity.ivf_delete_from_index(spark, path, [victim])
-    gone = similarity.ivf_query_index(spark, path, queries, k=3, nprobe=8)
-    assert victim not in {r.neighbor_id for r in gone.collect()}
-
-    # re-add the SAME id with the exact embedding of one query vector:
-    # if the new row serves, it must rank at cosine ~1.0 for that query
-    q0 = queries.orderBy("vec_id").collect()[0]
-    readd = spark.createDataFrame(
-        [(int(victim), [float(v) for v in q0.embedding])],
-        "vec_id long, embedding array<float>",
-    )
-    similarity.ivf_add_to_index(spark, path, readd)
-    back = similarity.ivf_query_index(
-        spark, path, queries.filter(F.col("vec_id") == q0.vec_id),
-        k=1, nprobe=8,
-    ).collect()
-    assert len(back) == 1 and back[0].neighbor_id == victim
-    assert back[0].cosine_sim == pytest.approx(1.0, abs=1e-5)
-    # exactly ONE row of the victim id serves (old pre-delete row stays
-    # tombstoned), so no duplicate id can appear in a k=3 result either
-    k3 = similarity.ivf_query_index(
-        spark, path, queries.filter(F.col("vec_id") == q0.vec_id),
-        k=3, nprobe=8,
-    ).collect()
-    assert sum(1 for r in k3 if r.neighbor_id == victim) == 1
-
-    # compaction physically strips the dead row but KEEPS the re-added
-    # one, and its return value is post-rebuild health (ADVICE: the old
-    # return showed the pre-rebuild tombstone debt)
-    h = similarity.ivf_index_health(spark, path)
-    res = similarity.ivf_compact_index(
-        spark, path,
-        skew_threshold=1e9, empty_frac_threshold=1.1,
-        tombstone_frac_threshold=h["tombstone_frac"] / 2,
-    )
-    assert res["rebuilt"] is True
-    assert res["n_tombstones"] == 0 and res["tombstone_frac"] == 0.0
-    assert res["trigger_health"]["n_tombstones"] == 1
-    assert res["n_vectors"] == 200  # 200 - 1 deleted + 1 re-added
-    still = similarity.ivf_query_index(
-        spark, path, queries.filter(F.col("vec_id") == q0.vec_id),
-        k=1, nprobe=8,
-    ).collect()
-    assert still[0].neighbor_id == victim
-    assert still[0].cosine_sim == pytest.approx(1.0, abs=1e-5)
-
-
 def test_ivf_assign_preserves_id_type(spark):
     """Round-7 ADVICE (als auto-ANN routing): ivf_assign's output id
     column inherits the INPUT id type instead of a hard-coded long, so
@@ -798,70 +429,6 @@ def test_ivf_assign_preserves_id_type(spark):
     assert dict(out.dtypes)["vec_id"] == "string"
     got = {r.vec_id for r in out.collect()}
     assert got == {f"doc-{i}" for i in range(12)}
-
-
-def test_ivf_meta_torn_write_self_heals(spark, tmp_path):
-    """Round-8 VERDICT item 3: a torn / lost / garbage ``meta.json``
-    must never leave ``next_epoch`` behind existing row or tombstone
-    epochs.  Verify-on-read (sha256) detects corruption and rebuilds
-    the counter from the data itself; a stray ``meta.json.tmp`` from a
-    crash before the atomic rename is ignored."""
-    import json
-    import os
-
-    from wistia_video_analytics_project_spark.operators.similarity import (
-        _ivf_meta_read,
-    )
-    from wistia_video_analytics_project_spark.sources import load_table
-
-    from conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < 100)
-    path = str(tmp_path / "ivf_torn")
-    similarity.ivf_write_index(base, path, n_centroids=8)          # next=1
-    batch = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 120))
-    similarity.ivf_add_to_index(spark, path, batch)                # epoch 1
-    victim = batch.orderBy("vec_id").limit(1).collect()[0]
-    similarity.ivf_delete_from_index(spark, path, [victim.vec_id])  # del 2
-    meta_path = os.path.join(path, "meta.json")
-    with open(meta_path) as f:
-        committed = json.load(f)
-    assert committed["next_epoch"] == 3
-    assert committed["sha"]  # checksum stored
-
-    # 1. torn file (truncated mid-write on a non-atomic filesystem)
-    blob = json.dumps(committed)
-    with open(meta_path, "w") as f:
-        f.write(blob[: len(blob) // 2])
-    assert _ivf_meta_read(path)["next_epoch"] == 3  # rebuilt, not reset
-
-    # 2. valid JSON but stale payload smuggled in (checksum mismatch)
-    with open(meta_path, "w") as f:
-        json.dump({"next_epoch": 1, "sha": committed["sha"]}, f)
-    assert _ivf_meta_read(path)["next_epoch"] == 3
-
-    # 3. meta lost entirely + a garbage .tmp left by a crashed writer
-    os.remove(meta_path)
-    with open(meta_path + ".tmp", "w") as f:
-        f.write("{half a wri")
-    assert _ivf_meta_read(path)["next_epoch"] == 3
-
-    # 4. end-to-end: with meta still lost, re-adding the deleted id
-    # must stamp an epoch >= the tombstone's del_epoch so the row
-    # RESURRECTS (a reset counter would stamp 1 < del_epoch 2 and the
-    # tombstone would silently hide the fresh row)
-    readd = emb.filter(F.col("vec_id") == victim.vec_id)
-    similarity.ivf_add_to_index(spark, path, readd)
-    q = spark.createDataFrame(
-        [(999999, victim.embedding)], "vec_id long, embedding array<float>"
-    )
-    top = similarity.ivf_query_index(spark, path, q, k=1, nprobe=8).collect()
-    assert top and top[0].neighbor_id == victim.vec_id
-    # the heal re-committed a checksummed meta via the add
-    with open(meta_path) as f:
-        healed = json.load(f)
-    assert healed["next_epoch"] == 4 and "sha" in healed
 
 
 def test_ivf_assign_carry_passthrough(spark):

@@ -63,37 +63,3 @@ def test_gold_slices(spark, star):
 def test_all_gold_queries_run(spark, star):
     for name in sql.GOLD_QUERIES:
         assert sql.run_gold(spark, name).collect() is not None
-
-
-def test_sql_scripting_bisection_threshold(spark):
-    """SQL-scripting WHILE bisection converges to the order statistic:
-    largest integer-cent T with count(cents > T) >= N equals the N-th
-    largest cents - 1."""
-    from wistia_video_analytics_project_spark.operators import analytics
-    from wistia_video_analytics_project_spark.sources import load_table
-
-    from conftest import SF_SMOKE
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    orders.createOrReplaceTempView("__orders_bisect")
-    n = 25
-    got = analytics.bisect_threshold_script(
-        spark, "__orders_bisect", "o_totalprice", n
-    )
-    cents = sorted(
-        (int(r[0]) for r in orders.selectExpr(
-            "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-        ).collect()),
-        reverse=True,
-    )
-    assert got == cents[n - 1] - 1
-    # verify the defining property directly
-    assert sum(1 for c in cents if c > got) >= n
-    assert sum(1 for c in cents if c > got + 1) < n
-    # infeasible target -> None
-    assert (
-        analytics.bisect_threshold_script(
-            spark, "__orders_bisect", "o_totalprice", 10**9
-        )
-        is None
-    )

@@ -81,32 +81,6 @@ def test_streaming_sessionize_emits_closed_sessions(spark, tmp_path):
     assert r.session_end == T0 + dt.timedelta(minutes=10)
 
 
-@pytest.mark.skipif(
-    not stateful.HAVE_TWS_DEPS,
-    reason="transformWithState needs protobuf (state-server protocol), "
-    "absent in this container",
-)
-def test_transform_with_state_lifetime_stats(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas: ValueState accumulates across
-    micro-batches; each batch emits the updated per-key snapshot."""
-    stream = _write_batches(
-        spark,
-        tmp_path,
-        [
-            [(T0, 1, 10.0), (T0, 2, 1.0)],
-            [(T0 + dt.timedelta(minutes=5), 1, 2.5)],
-        ],
-    )
-    out = stateful.lifetime_engagement_stats(stream)
-    jobs.run_to_memory_sink(out, "lifetime_out", output_mode="update")
-    rows = spark.sql("SELECT * FROM lifetime_out").collect()
-    snapshots = sorted((r.user_id, r.n_events, r.total_value) for r in rows)
-    # batch 1: user1 (1, 10.0), user2 (1, 1.0); batch 2: user1 -> (2, 12.5)
-    assert (1, 1, 10.0) in snapshots
-    assert (1, 2, 12.5) in snapshots  # state carried across batches
-    assert (2, 1, 1.0) in snapshots
-
-
 def test_timeout_sessionize_flushes_and_bounds_state(spark, tmp_path):
     """Streaming shape eight (round-8 VERDICT item 6): EventTimeTimeout
     sessions.  A gap-closed session emits with the batch that closes it

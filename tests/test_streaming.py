@@ -1,4 +1,4 @@
-"""Streaming tier: windowed fact build, stream dedup, foreachBatch merge.
+"""Streaming tier: windowed fact build, stream joins, foreachBatch merge.
 
 File source (parquet written to tmp) -> memory/foreachBatch sink with
 processAllAvailable() drives each job synchronously (pyspark_guide
@@ -12,12 +12,9 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from wistia_video_analytics_project_spark.streaming import (
-    dedup_stream,
-    foreach_batch_upsert,
     run_to_memory_sink,
     windowed_engagement,
 )
-from wistia_video_analytics_project_spark.streaming.jobs import run_foreach_batch
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -27,6 +24,30 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
+
+
+def run_foreach_batch(stream_df, fn) -> None:
+    """Drive a streaming frame through a foreachBatch sink to completion."""
+    q = stream_df.writeStream.outputMode("append").foreachBatch(fn).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def foreach_batch_upsert(target: dict[tuple, tuple], key_cols):
+    """Dict-backed keyed upsert, a sink double for asserting stream
+    contents. It collects every batch row to the driver; the shipped
+    merge body is ``foreach_batch_parquet_upsert``."""
+
+    def apply(batch, epoch_id: int) -> None:
+        cols = batch.columns
+        key_idx = [cols.index(k) for k in key_cols]
+        for row in batch.collect():
+            t = tuple(row)
+            target[tuple(t[i] for i in key_idx)] = t
+
+    return apply
 
 
 @pytest.fixture()
@@ -61,52 +82,6 @@ def test_windowed_engagement(spark, event_dir):
     assert r.total_watch_time_seconds == 40.0
     assert r.avg_percent_watched == 20.0
     assert ("2024-01-02", 1) not in rows  # still open at end of input
-
-
-def test_dedup_stream_keeps_first_arrival(spark, tmp_path):
-    """"First" in streaming dedup = first ARRIVAL: make arrival order
-    explicit with one file per micro-batch (maxFilesPerTrigger=1)."""
-    import os
-    import time
-
-    t = dt.datetime(2024, 1, 1, 10, 0)
-    path = tmp_path / "dups"
-    path.mkdir()
-    batches = [
-        [(t, 1, "view", 1.0)],  # arrives first -> kept
-        [(t + dt.timedelta(minutes=1), 1, "view", 2.0),  # dup key -> dropped
-         (t + dt.timedelta(minutes=2), 2, "view", 3.0)],
-    ]
-    for i, rows in enumerate(batches):
-        f = str(path / f"b{i}")
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(f)
-        mtime = time.time() - 100 + i * 10  # strictly increasing arrival order
-        for root, _, files in os.walk(f):
-            for name in files:
-                os.utime(os.path.join(root, name), (mtime, mtime))
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(path))
-    )
-    out = dedup_stream(stream, keys=["user_id", "event_type"], watermark="1 hour")
-    run_to_memory_sink(out, "dedup_out")
-    got = spark.sql("SELECT user_id, value FROM dedup_out ORDER BY user_id").collect()
-    assert [(r.user_id, r.value) for r in got] == [(1, 1.0), (2, 3.0)]
-
-
-def test_foreach_batch_upsert(spark, event_dir):
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(event_dir)
-    target: dict[tuple, tuple] = {}
-    plain = stream.filter(F.col("event_type") == "view").select("user_id", "ts", "value")
-    run_foreach_batch(plain, foreach_batch_upsert(target, key_cols=["user_id", "ts"]))
-    assert len(target) == 4  # 4 view events, keyed by (user, ts)
-    # re-running the same data is idempotent (MERGE semantics)
-    stream2 = spark.readStream.schema(EVENT_SCHEMA).parquet(event_dir)
-    plain2 = stream2.filter(F.col("event_type") == "view").select("user_id", "ts", "value")
-    run_foreach_batch(plain2, foreach_batch_upsert(target, key_cols=["user_id", "ts"]))
-    assert len(target) == 4
 
 
 def test_foreach_batch_parquet_upsert_merges_and_replays(spark, tmp_path):
@@ -185,41 +160,6 @@ def test_foreach_batch_parquet_upsert_streaming_end_to_end(spark, tmp_path, even
     assert spark.read.parquet(target).count() == 4  # 4 distinct view events
 
 
-def test_rollup_epoch_replay_does_not_double_count(spark, tmp_path):
-    """ADVICE fix: a replayed foreachBatch epoch (checkpoint commit lost
-    after the partition overwrite landed) must not re-add its partials."""
-    from wistia_video_analytics_project_spark.streaming import rollup_merge_fn
-
-    t = dt.datetime(2024, 1, 1, 10, 0)
-    target = str(tmp_path / "rollup")
-    merge = rollup_merge_fn(target)
-    b0 = spark.createDataFrame([(t, 1, "view", 10.0)], EVENT_SCHEMA)
-    merge(b0, 0)
-    b1 = spark.createDataFrame(
-        [(t + dt.timedelta(hours=1), 1, "view", 5.0),
-         (t + dt.timedelta(days=1), 2, "click", 7.0)],
-        EVENT_SCHEMA,
-    )
-    merge(b1, 1)
-    merge(b1, 1)  # replay of epoch 1 — already applied to both dates
-    got = {
-        (str(r.date), r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {
-        ("2024-01-01", "view"): (2, 15.0),
-        ("2024-01-02", "click"): (1, 7.0),
-    }
-    # a NEW epoch still merges normally after the replay
-    b2 = spark.createDataFrame([(t + dt.timedelta(hours=2), 3, "view", 1.0)], EVENT_SCHEMA)
-    merge(b2, 2)
-    got = {
-        (str(r.date), r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got[("2024-01-01", "view")] == (3, 16.0)
-
-
 def test_checkpoint_restart_no_reprocessing(spark, tmp_path):
     """Checkpointed file-source stream: restart resumes from the
     checkpoint, so rows ingested before the stop are not re-emitted."""
@@ -227,7 +167,6 @@ def test_checkpoint_restart_no_reprocessing(spark, tmp_path):
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
     out: dict[tuple, tuple] = {}
-    from wistia_video_analytics_project_spark.streaming import foreach_batch_upsert
 
     def run_once():
         stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
@@ -256,52 +195,6 @@ def test_checkpoint_restart_no_reprocessing(spark, tmp_path):
     assert list(out) == [(2, t + dt.timedelta(minutes=1))]
 
 
-def test_continuous_daily_rollup_matches_batch_recompute(spark, tmp_path):
-    """The incrementally-maintained rollup equals a full batch groupBy,
-    including when a later micro-batch touches an already-written date."""
-    import os
-    import time
-
-    from wistia_video_analytics_project_spark.streaming.jobs import (
-        continuous_daily_rollup,
-    )
-
-    t = dt.datetime(2024, 1, 1, 10, 0)
-    src = tmp_path / "src"
-    src.mkdir()
-    batches = [
-        [(t, 1, "view", 10.0), (t + dt.timedelta(hours=2), 2, "click", 5.0)],
-        # second batch UPDATES day 1 and adds day 2
-        [(t + dt.timedelta(hours=3), 1, "view", 7.0),
-         (t + dt.timedelta(days=1), 1, "view", 20.0)],
-    ]
-    for i, rows in enumerate(batches):
-        f = str(src / f"b{i}")
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(f)
-        mtime = time.time() - 100 + i * 10
-        for root, _, files in os.walk(f):
-            for name in files:
-                os.utime(os.path.join(root, name), (mtime, mtime))
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    target = str(tmp_path / "rollup")
-    continuous_daily_rollup(stream, target, checkpoint=str(tmp_path / "ck"))
-
-    got = {
-        (str(r.date), r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {
-        ("2024-01-01", "view"): (2, 17.0),
-        ("2024-01-01", "click"): (1, 5.0),
-        ("2024-01-02", "view"): (1, 20.0),
-    }
-
-
 def test_native_session_window_streaming(spark, tmp_path):
     """session_window works on streams: events within the gap merge into
     one session; the closed session emits once the watermark passes."""
@@ -323,22 +216,6 @@ def test_native_session_window_streaming(spark, tmp_path):
     run_to_memory_sink(agg, "sess_out")
     got = {(r.start, r.n_events) for r in spark.sql("SELECT * FROM sess_out").collect()}
     assert got == {(t, 2)}  # merged 2-event session emitted; open one held back
-
-
-def test_enrich_stream_static_broadcast(spark, event_dir):
-    from wistia_video_analytics_project_spark.streaming import (
-        enrich_stream,
-        run_to_memory_sink,
-    )
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(event_dir)
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id long, tier string"
-    )
-    run_to_memory_sink(enrich_stream(stream, dim, "user_id"), "enrich_t")
-    rows = spark.sql("SELECT user_id, tier FROM enrich_t").collect()
-    assert len(rows) == 5
-    assert {(r.user_id, r.tier) for r in rows} == {(1, "gold"), (2, "silver")}
 
 
 def test_stream_stream_join_matches_batch_range_join(spark, tmp_path):
@@ -392,137 +269,6 @@ def test_stream_stream_join_matches_batch_range_join(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_dedup_stream_by_content(spark, tmp_path):
-    """Content-fingerprint streaming dedup: identical (normalized) text
-    arriving under different ids is dropped; distinct text passes."""
-    from wistia_video_analytics_project_spark.streaming import (
-        dedup_stream_by_content,
-        run_to_memory_sink,
-    )
-
-    t = dt.datetime(2024, 1, 1, 10, 0)
-    schema = "doc_id long, text string, ts timestamp"
-    rows = [
-        (1, "hello world", t),
-        (2, "Hello   WORLD", t + dt.timedelta(minutes=1)),  # same normalized
-        (3, "something else", t + dt.timedelta(minutes=2)),
-    ]
-    path = str(tmp_path / "docs")
-    spark.createDataFrame(rows, schema).write.parquet(path)
-    stream = spark.readStream.schema(schema).parquet(path)
-    out = dedup_stream_by_content(stream)
-    run_to_memory_sink(out, "content_dedup_out")
-    got = {r.doc_id for r in spark.sql("SELECT doc_id FROM content_dedup_out").collect()}
-    assert 3 in got
-    assert len(got & {1, 2}) == 1  # exactly one of the dup pair survives
-
-
-def test_foreach_batch_dedup_ingest_and_epoch_replay(spark, tmp_path):
-    """Cross-batch content dedup with replay idempotence: later batches
-    drop content already ingested; re-running an epoch (crash between
-    data write and checkpoint commit) reproduces identical output."""
-    from wistia_video_analytics_project_spark.streaming import (
-        foreach_batch_dedup_ingest,
-    )
-
-    out = str(tmp_path / "corpus")
-    fn = foreach_batch_dedup_ingest(out)
-    schema = "doc_id long, text string"
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha  BETA")], schema
-    )
-    b1 = spark.createDataFrame(
-        [(10, "alpha beta"), (11, "fresh content")], schema
-    )
-    fn(b0, 0)
-    fn(b1, 1)
-    got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {1, 2, 11}  # 3 dups 1 in-batch; 10 dups epoch-0 content
-    # replay epoch 1 (checkpoint commit lost): output unchanged
-    fn(b1, 1)
-    again = {(r.doc_id, r.epoch) for r in spark.read.parquet(out).collect()}
-    assert {d for d, _ in again} == {1, 2, 11}
-    assert len(again) == 3
-
-
-def test_foreach_batch_dedup_ingest_streaming_end_to_end(spark, tmp_path):
-    import time
-
-    from wistia_video_analytics_project_spark.streaming import (
-        foreach_batch_dedup_ingest,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    spark.createDataFrame([(1, "one two"), (2, "three four")], schema) \
-        .coalesce(1).write.mode("append").parquet(str(src))
-    time.sleep(0.1)
-    spark.createDataFrame([(3, "one two"), (4, "five six")], schema) \
-        .coalesce(1).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(str(src))
-    out = str(tmp_path / "corpus2")
-    q = stream.writeStream.outputMode("append").foreachBatch(
-        foreach_batch_dedup_ingest(out)
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    fps = [r.fingerprint for r in spark.read.parquet(out).collect()]
-    assert len(fps) == len(set(fps)) == 3  # "one two" ingested once
-
-
-def test_backfill_then_stream_equals_full_recompute(spark, tmp_path):
-    """Batch-backfill history, stream the remainder under a fresh
-    checkpoint: the rollup must equal a one-shot batch recompute of the
-    full timeline (the documented new-checkpoint handoff)."""
-    from wistia_video_analytics_project_spark.streaming import (
-        backfill_daily_rollup,
-        continuous_daily_rollup,
-    )
-
-    t = dt.datetime(2024, 1, 1)
-    rows = [
-        (t + dt.timedelta(hours=h), h, "view" if h % 2 else "click", float(h))
-        for h in range(96)  # 4 days
-    ]
-    all_events = spark.createDataFrame(
-        [(ts, uid, et, v) for ts, uid, et, v in rows], EVENT_SCHEMA
-    )
-    cutoff = t + dt.timedelta(days=2)
-    hist = all_events.filter(F.col("ts") < cutoff)
-    tail = all_events.filter(F.col("ts") >= cutoff)
-
-    target = str(tmp_path / "rollup")
-    backfill_daily_rollup(hist, target)
-
-    src = tmp_path / "tail"
-    tail.write.parquet(str(src))
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
-    continuous_daily_rollup(
-        stream, target, checkpoint=str(tmp_path / "ckpt")
-    )
-
-    got = {
-        (str(r.date), r.event_type): (r.n_events, round(r.sum_value, 2))
-        for r in spark.read.parquet(target).collect()
-    }
-    want = {
-        (str(r.date), r.event_type): (r.n_events, round(r.sum_value, 2))
-        for r in all_events.withColumn("date", F.to_date("ts"))
-        .groupBy("date", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_session_window_stats_matches_batch_sessionize(spark, tmp_path):
     """The named streaming job agrees with the batch gaps-and-islands
     operator on every closed session (same gap, same cutoff rule)."""
@@ -571,44 +317,6 @@ def test_session_window_stats_matches_batch_sessionize(spark, tmp_path):
     # user1 sessions 1+2 and user2's session are closed by the final
     # watermark (15:00); only the 16:00 event's session stays open
     assert got == want and len(got) == 3
-
-
-def test_streaming_state_refresh_matches_batch_and_replays(spark, tmp_path, event_dir):
-    """The streaming mergeable-state face: end-to-end run must equal the
-    batch daily_state recompute exactly (including exact distinct
-    users), and a replayed epoch must overwrite its own contribution,
-    not double-add."""
-    from wistia_video_analytics_project_spark.operators import mergeable
-    from wistia_video_analytics_project_spark.streaming.jobs import (
-        read_state_report,
-        state_contribution_fn,
-        streaming_state_refresh,
-    )
-
-    state = str(tmp_path / "kpi_state")
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(event_dir)
-    streaming_state_refresh(
-        stream, state, checkpoint=str(tmp_path / "ckpt")
-    )
-
-    batch = spark.read.schema(EVENT_SCHEMA).parquet(event_dir)
-    expect = [
-        (r.day, r.n_events, r.total_value, r.n_users)
-        for r in mergeable.state_report(mergeable.daily_state(batch)).collect()
-    ]
-    got = [
-        (r.day, r.n_events, r.total_value, r.n_users)
-        for r in read_state_report(spark, state).collect()
-    ]
-    assert got == expect and len(got) == 2
-
-    # replay epoch 0 with the same batch: structurally idempotent
-    state_contribution_fn(state)(batch, 0)
-    got2 = [
-        (r.day, r.n_events, r.total_value, r.n_users)
-        for r in read_state_report(spark, state).collect()
-    ]
-    assert got2 == expect
 
 
 def test_sliding_window_traffic_equals_batch(spark, tmp_path):

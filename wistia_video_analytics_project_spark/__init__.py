@@ -23,6 +23,9 @@ Layout (see SURVEY.md §7.1):
   (LLM-pipeline extensions)
 - ``pipeline``   — the orchestrated DAG (bronze -> silver -> gold)
 - ``streaming``  — Structured Streaming tier over the same event schema
+
+Top-level defs need a caller outside the tests; see
+``tests/test_reachability.py``.
 """
 
 __version__ = "0.1.0"

@@ -10,7 +10,8 @@ storage memory (round-2 ADVICE, analytics.py item).
 
 This module makes the lifetime explicit instead of leaky:
 
-- operators register every internally cached frame via :func:`track`;
+- operators cache and register every internal frame in one call,
+  :func:`persist`, so a frame cannot be registered without being cached;
 - callers release them all after their terminal action with
   :func:`release_caches` (bench.py does this between queries; a
   long-lived service would do it per request/batch).
@@ -30,14 +31,12 @@ from pyspark.sql import DataFrame
 _LIVE: list[DataFrame] = []
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an internally cached DataFrame for later bulk release.
-
-    Returns ``df`` unchanged so call sites read
-    ``track(frame.cache())``.
-    """
-    _LIVE.append(df)
-    return df
+def persist(df: DataFrame) -> DataFrame:
+    """Cache ``df`` and register it for later bulk release; returns the
+    cached frame."""
+    cached = df.cache()
+    _LIVE.append(cached)
+    return cached
 
 
 def release_caches() -> int:

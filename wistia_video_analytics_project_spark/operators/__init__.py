@@ -13,4 +13,9 @@ Each module groups one family from the operator inventory:
 - ``similarity`` — embedding similarity search (extensions)
 - ``text``       — text analysis: lang-id, quality, tokens, fingerprints
 - ``multimodal`` — binary-column decode/feature plumbing (extensions)
+
+An operator needs a caller other than a test: the registry in
+``__spark_entry__.py``, the pipeline, ``bench.py``, ``scripts/`` or
+``perfbench/``.  ``tests/test_reachability.py`` checks this and lists
+the reviewed exceptions.
 """

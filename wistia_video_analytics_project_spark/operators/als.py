@@ -427,14 +427,19 @@ def recommend_topk_ann(
     # the same job as the broadcast global max-norm aggregate, and the
     # norm augmentation of the seeds happens on the driver with the
     # SAME float ops (IEEE sqrt of the same doubles) the previous
-    # two-job shape computed JVM-side.
-    seed_rows = (
+    # two-job shape computed JVM-side.  The join does not preserve the
+    # limit's order, so the seeds are re-sorted on the driver: the
+    # centroid ids (and with them nprobe's tie-break) must not depend on
+    # the join's output order.
+    seed_rows = sorted(
         item_f.select(F.col(item_col).alias("__id"), "factors",
-                      norm2.alias("__n2"))
-        .orderBy(F.xxhash64(F.col("__id")), F.col("__id"))
+                      norm2.alias("__n2"),
+                      F.xxhash64(F.col(item_col)).alias("__h"))
+        .orderBy("__h", "__id")
         .limit(n_centroids)
         .crossJoin(F.broadcast(item_f.agg(F.max(norm2).alias("__m2"))))
-        .collect()
+        .collect(),
+        key=lambda r: (r["__h"], r["__id"]),
     )
     m2 = float(seed_rows[0]["__m2"] or 0.0) if seed_rows else 0.0
     cents = [
@@ -531,7 +536,7 @@ def q_als_ann_recommender(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed twice — the training select and the serve-time ``seen``
     # anti-join; uncached, serving re-ran the full lineitem/orders
     # join+aggregate subtree (r14)
-    ratings = cache.track(_bounded_ratings(spark, sf_dir).cache())
+    ratings = cache.persist(_bounded_ratings(spark, sf_dir))
     user_f, item_f, _ = als_train(
         # accumulation pinned: the id slice bounds every degree by
         # construction (<=5000 items/user, <=1000 users/item), so the
@@ -556,7 +561,7 @@ def q_als_part_recommender(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import cache
 
     # same two-consumer caching as the ANN binding (r14)
-    ratings = cache.track(_bounded_ratings(spark, sf_dir).cache())
+    ratings = cache.persist(_bounded_ratings(spark, sf_dir))
     user_f, item_f, _ = als_train(
         # accumulation pinned — same degree-bound argument as the ANN
         # binding above (r13)

@@ -23,7 +23,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 
 # ---------------------------------------------------------------------------
 # Joins (J1-J3)
@@ -40,16 +40,6 @@ def enrich(
     """J1: fact ⋈ dim equi-join, dimension broadcast by default."""
     d = F.broadcast(dim) if broadcast_dim else dim
     return fact.join(d, on=on, how=how)
-
-
-def orphans(fact: DataFrame, dim: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """J2: fact keys with no dimension row (referential-integrity audit)."""
-    return fact.join(F.broadcast(dim), on=on, how="left_anti")
-
-
-def with_engagement(dim: DataFrame, fact: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """J3: dimension rows that have at least one fact row (left semi)."""
-    return dim.join(fact, on=on, how="left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -630,9 +620,9 @@ def sliding_distinct(
     """
     # cached: the spine derives from the SAME pairs frame — without the
     # cache its lineage (a full raw-stream scan + distinct) runs twice
-    pairs = track(df.select(
+    pairs = persist(df.select(
         F.col(entity_col).alias("__e"), F.col(date_col).alias("__d")
-    ).distinct().cache())
+    ).distinct())
     spine = pairs.select(F.col("__d").alias("__day")).distinct()
     delta = F.datediff(F.col("__day"), F.col("__d"))
     j = pairs.join(
@@ -642,64 +632,3 @@ def sliding_distinct(
         j.groupBy(F.col("__day").alias(date_col))
         .agg(F.count_distinct(F.col("__e")).alias(out_col))
     )
-
-
-def bisect_threshold_script(
-    spark,
-    view: str,
-    value_col: str,
-    target_n: int,
-    max_iter: int = 64,
-):
-    """Spark 4 SQL-scripting (BEGIN/DECLARE/WHILE) demo with real
-    semantics: binary-search the largest integer-cent threshold T such
-    that at least ``target_n`` rows have ``value_col`` cents > T.
-
-    Each WHILE iteration runs one distributed COUNT against the view —
-    the procedural driver loop is control flow only (the equivalent of
-    a small Airflow/stored-proc job, now expressible inside Spark SQL).
-    Converges to (target_n-th largest cents) - 1 in <= log2(range)
-    iterations — asserted against a direct order-statistic in tests.
-
-    Returns the integer cent threshold, or None when even the minimum
-    cannot satisfy ``target_n``.
-    """
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        [row] = spark.sql(f"""
-        BEGIN
-          DECLARE lo BIGINT;
-          DECLARE hi BIGINT;
-          DECLARE mid BIGINT;
-          DECLARE cnt BIGINT;
-          DECLARE it INT = 0;
-          SET lo = (SELECT min(CAST(floor({value_col} * 100 + 0.5) AS BIGINT)) - 1
-                    FROM {view});
-          SET hi = (SELECT max(CAST(floor({value_col} * 100 + 0.5) AS BIGINT))
-                    FROM {view});
-          -- invariant: count(> lo) >= target_n, count(> hi) < target_n
-          IF (SELECT count(*) FROM {view}
-              WHERE CAST(floor({value_col} * 100 + 0.5) AS BIGINT) > lo)
-             < {target_n} THEN
-            SELECT CAST(NULL AS BIGINT) AS threshold_cents;
-          ELSE
-            WHILE lo + 1 < hi AND it < {max_iter} DO
-              SET mid = (lo + hi) DIV 2;
-              SET cnt = (SELECT count(*) FROM {view}
-                         WHERE CAST(floor({value_col} * 100 + 0.5) AS BIGINT)
-                               > mid);
-              IF cnt >= {target_n} THEN
-                SET lo = mid;
-              ELSE
-                SET hi = mid;
-              END IF;
-              SET it = it + 1;
-            END WHILE;
-            SELECT lo AS threshold_cents;
-          END IF;
-        END
-        """).collect()
-        return row[0]
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)

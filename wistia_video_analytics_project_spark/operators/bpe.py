@@ -155,7 +155,7 @@ def train_bpe(
     level — at 25 merges that is a 2^25-sized plan string and a driver
     OOM inside AQE's plan logging (observed in round 4).  Checkpoint
     block lifetime is GC-managed: ``DataFrame.unpersist`` is a no-op on
-    checkpointed plans, so nothing here is ``track``-registered (a
+    checkpointed plans, so nothing here is ``persist``-registered (a
     registry entry would PIN the superseded tables via its strong
     reference); dropping the loop reference each iteration lets the
     ContextCleaner free the old blocks, keeping at most two word tables
@@ -229,30 +229,3 @@ def merges_frame(
         [(i + 1, a, b, n) for i, (a, b, n) in enumerate(merges)],
         "rank int, left string, right string, pair_count long",
     )
-
-
-def save_tokenizer(
-    path: str,
-    merges: Sequence[tuple[str, str, int]],
-    word_table: DataFrame,
-) -> None:
-    """Persist the trained tokenizer artifact: the ordered merge list
-    and the word->symbols table, as two parquet datasets.  The word
-    table is what encoding actually joins against; the merge list is
-    kept for audit/portability (it fully determines the table)."""
-    spark = word_table.sparkSession
-    merges_frame(spark, merges).write.mode("overwrite").parquet(
-        f"{path}/merges"
-    )
-    word_table.select("word", "freq", "symbols").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/words")
-
-
-def load_tokenizer(spark, path: str):
-    """Load a tokenizer saved by :func:`save_tokenizer`.  Returns
-    (merges list, word table) with the merge list in rank order."""
-    mdf = spark.read.parquet(f"{path}/merges").orderBy("rank").collect()
-    merges = [(r.left, r.right, int(r.pair_count)) for r in mdf]
-    words = spark.read.parquet(f"{path}/words")
-    return merges, words

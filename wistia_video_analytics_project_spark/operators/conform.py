@@ -1,4 +1,4 @@
-"""Conform operators: projections, renames, defaults, casts, key repair.
+"""Conform operators: projections, renames, casts, key repair.
 
 Re-expresses the reference's transform expressions (P1-P8 and the scalar
 function surface, SURVEY.md §2.2/§2.8) as composable, named operators.
@@ -38,7 +38,7 @@ def all_keys_present(df: DataFrame, keys: Sequence[str]) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Projections / renames / defaults (P1-P3)
+# Projections / renames
 # ---------------------------------------------------------------------------
 
 
@@ -54,23 +54,6 @@ def select_rename(df: DataFrame, mapping: Mapping[str, Column | str]) -> DataFra
         for out, src in mapping.items()
     ]
     return df.select(*cols)
-
-
-def with_defaults(df: DataFrame, defaults: Mapping[str, object]) -> DataFrame:
-    """Coalesce each column to a default (`notebool-03.py:135, 172-173`:
-    ``coalesce(col, lit("Unknown"))``). Blank strings count as missing."""
-    out = df
-    for col, default in defaults.items():
-        out = out.withColumn(
-            col,
-            F.when(null_or_empty(col) if _is_string(df, col) else F.col(col).isNull(),
-                   F.lit(default)).otherwise(F.col(col)),
-        )
-    return out
-
-
-def _is_string(df: DataFrame, col: str) -> bool:
-    return dict(df.dtypes).get(col) == "string"
 
 
 # ---------------------------------------------------------------------------
@@ -146,88 +129,3 @@ def parse_json_column(df: DataFrame, col: str, schema, out: str | None = None) -
     string-embedded payloads (SURVEY.md §2.8 json row).
     """
     return df.withColumn(out or col, F.from_json(F.col(col), schema))
-
-
-def schema_drift_report(df: DataFrame, expected) -> dict[str, list[str] | dict[str, tuple[str, str]]]:
-    """Compare an incoming frame's schema against the declared StructType:
-    {'missing': [...], 'unexpected': [...], 'retyped': {col: (want, got)}}.
-
-    The engine's answer to raw-JSON drift (§2.7): the reference silently
-    absorbs drift through whole-glob inference; ours detects and reports
-    it so ingest can quarantine or evolve deliberately.
-    """
-    actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    want = {f.name: f.dataType.simpleString() for f in expected.fields}
-    return {
-        "missing": sorted(set(want) - set(actual)),
-        "unexpected": sorted(set(actual) - set(want)),
-        "retyped": {
-            c: (want[c], actual[c])
-            for c in sorted(set(want) & set(actual))
-            if want[c] != actual[c]
-        },
-    }
-
-
-def extract_media_id_from_path(df: DataFrame, path_col: str = "file_path") -> DataFrame:
-    """S10 file-provenance recovery: pull ``media_id`` out of a raw-zone
-    folder path ``.../visitors/<media_id>_<YYYYMMDD_HHMMSS>/...``
-    (`notebool-03.py:199-205`: two regexp_extract patterns + coalesce).
-
-    Kept for reading reference-layout data; our own writer makes
-    ``media_id`` a real partition column instead (the scalable form).
-    """
-    pat_folder = r"visitors/([^/_]+)_\d{8}_\d{6}"
-    pat_loose = r"visitors/([^/_]+)_"
-    return df.withColumn(
-        "media_id",
-        F.coalesce(
-            F.nullif(F.regexp_extract(F.col(path_col), pat_folder, 1), F.lit("")),
-            F.nullif(F.regexp_extract(F.col(path_col), pat_loose, 1), F.lit("")),
-        ),
-    )
-
-
-def flatten_struct(df: DataFrame, sep: str = "_") -> DataFrame:
-    """Recursively lift nested struct fields to top-level columns
-    (``a.b.c`` -> ``a_b_c``) — the generic face of the reference's
-    hand-written nested-JSON projections (`notebool-03.py:224-233`).
-
-    Pure projection: Catalyst prunes untouched nested fields at the
-    scan, so flattening a wide struct you then select two fields from
-    still reads two leaf columns. Arrays are left intact (explode is a
-    semantic decision, not a rename).
-    """
-    from pyspark.sql.types import StructType
-
-    def leaves(schema: StructType, prefix: tuple[str, ...]) -> list:
-        out = []
-        for f in schema.fields:
-            path = prefix + (f.name,)
-            if isinstance(f.dataType, StructType):
-                out.extend(leaves(f.dataType, path))
-            else:
-                out.append(path)
-        return out
-
-    cols = []
-    names: list[str] = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, StructType):
-            for path in leaves(f.dataType, (f.name,)):
-                cols.append(F.col(".".join(path)).alias(sep.join(path)))
-                names.append(sep.join(path))
-        else:
-            cols.append(F.col(f.name))
-            names.append(f.name)
-    # a flattened path can collide with an existing column (top-level
-    # `a_b` next to struct `a.b`) — that would yield an ambiguous frame
-    # that only fails on later reference; fail loudly here instead
-    seen: set[str] = set()
-    dups = {n for n in names if n in seen or seen.add(n)}
-    if dups:
-        raise ValueError(
-            f"flatten_struct name collision(s) {sorted(dups)}; "
-            f"pick a different sep or rename before flattening"
-        )
-    return df.select(*cols)

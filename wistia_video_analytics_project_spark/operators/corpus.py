@@ -14,7 +14,7 @@ from collections.abc import Callable, Iterator, Mapping
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 from ..session import configure_runtime
 from ..sources import load_table
 from .text import tokens
@@ -241,8 +241,8 @@ def temperature_mixture_sample(
     # the count aggregate feeds BOTH the broadcast join and the z
     # normalizer — cache the (tiny, per-source) frame so the corpus
     # scan happens once, not twice
-    counts = track(
-        df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n")).cache()
+    counts = persist(
+        df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n"))
     )
     z = counts.agg(
         F.sum(F.pow(F.col("__n").cast("double"), F.lit(float(alpha)))).alias(
@@ -349,54 +349,6 @@ def pack_sequences(
         pack,
         schema="doc_id long, n_tokens int, bucket int, pack_id string, "
                "pack_slot long, oversize boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Reproducible shard writing
-# ---------------------------------------------------------------------------
-
-
-def assign_shards(
-    df: DataFrame, n_shards: int, key_col: str = "doc_id"
-) -> DataFrame:
-    """Content-derived shard id: ``xxhash64(key) % n_shards``. The same
-    row lands in the same shard on every rerun and cluster layout —
-    unlike ``repartition(n)`` round-robin, which is partition-layout
-    dependent."""
-    return df.withColumn(
-        "shard",
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int"),
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key_col: str = "doc_id",
-    order_col: str | None = None,
-) -> DataFrame:
-    """Write a corpus as ``n_shards`` deterministic parquet shards
-    (``shard=K/`` partitions), rows clustered within each shard file by
-    ``order_col`` (default: the shard key) for reproducible read order.
-
-    Returns the per-shard manifest (shard, n_rows) — the writer's
-    contract check; readers can verify shard completeness against it.
-    """
-    sharded = assign_shards(df, n_shards, key_col)
-    (
-        sharded.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions(order_col or key_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    spark = df.sparkSession
-    return (
-        spark.read.parquet(path)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
     )
 
 

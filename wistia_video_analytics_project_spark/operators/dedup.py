@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 from ..session import configure_runtime
 from ..sources import load_table
 from .text import fingerprint, tokens
@@ -142,8 +142,9 @@ def ngram_jaccard_pairs(
     with array HOFs — ONE corpus pass, the ``max_df`` guard becomes a
     free ``size(members)`` filter, and the pair stream is exactly the
     intersection multiset (no join probe overhead). ~6× faster than the
-    self-join at sf0.1. Per-task memory holds one shingle's doc list —
-    bounded by ``max_df`` when set.
+    self-join at sf0.1. Per-task memory holds one shingle's full doc
+    list: ``max_df`` filters the lists after aggregation, so it bounds
+    the pair output, not the buffer.
 
     ``strategy='join'``: shingle self-join that streams instead of
     materializing per-shingle doc lists — the fallback when ``max_df``
@@ -360,7 +361,7 @@ def minhash_lsh_pairs(
     minhash lineage three times (~2.5x wall-clock at sf0.1). At cluster
     scale this would be ``persist(MEMORY_AND_DISK)`` or a written table.
     """
-    sigs = track(minhash_signatures(docs, text_col, id_col, n).cache())
+    sigs = persist(minhash_signatures(docs, text_col, id_col, n))
     cand = minhash_lsh_candidates(sigs)
     sa, sb = sigs.alias("sa"), sigs.alias("sb")
     return (
@@ -419,88 +420,6 @@ def _sig_overlap(sig_a: Column, sig_b: Column) -> Column:
         lambda acc, x: acc + x,
     )
     return matches.cast("double") / N_MINHASH
-
-
-def incremental_minhash_dedup(
-    new_docs: DataFrame,
-    seen_sigs: DataFrame,
-    threshold: float = 0.1,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-dup dedup of an incoming batch against a persisted signature
-    store (``seen_sigs``: doc_id, sig array<bigint>[32]).
-
-    A batch row is dropped when its estimated Jaccard reaches
-    ``threshold`` against (a) any store doc sharing an LSH band bucket,
-    or (b) an earlier batch row (dominated-by-earlier, like the
-    semantic dedup rule). Candidates in both directions come from band
-    equi-joins — the batch never scans the store, and the store-side
-    band frame is exactly :func:`minhash_bands` output, which a real
-    deployment persists bucketed by band_hash so this probe join
-    elides its shuffle. Returns kept rows WITH their ``sig`` column —
-    append those to the store for the next batch.
-    """
-    # a store persisted under a different signature width would silently
-    # deflate est_jaccard (_sig_overlap divides by N_MINHASH and zip_with
-    # truncates to the shorter array) — fail loudly instead
-    seen_sigs = seen_sigs.withColumn(
-        "sig",
-        F.when(F.size("sig") == N_MINHASH, F.col("sig")).otherwise(
-            F.raise_error(
-                F.concat_ws(
-                    " ",
-                    F.lit("seen_sigs signature width"),
-                    F.size("sig").cast("string"),
-                    F.lit(f"!= N_MINHASH={N_MINHASH}; rebuild the store"),
-                )
-            )
-        ),
-    )
-    sigs_new = track(minhash_signatures(new_docs, text_col, id_col, n).cache())
-
-    # (a) cross-store: band collision -> signature-overlap verify
-    cand = (
-        minhash_bands(sigs_new)
-        .withColumnRenamed("doc_id", "new_id")
-        .join(
-            minhash_bands(seen_sigs).withColumnRenamed("doc_id", "old_id"),
-            ["band_id", "band_hash"],
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    store_hits = (
-        cand.join(
-            sigs_new.select(F.col("doc_id").alias("new_id"), F.col("sig").alias("__sa")),
-            "new_id",
-        )
-        .join(
-            seen_sigs.select(F.col("doc_id").alias("old_id"), F.col("sig").alias("__sb")),
-            "old_id",
-        )
-        .filter(_sig_overlap(F.col("__sa"), F.col("__sb")) >= threshold)
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-
-    # (b) within-batch: earlier near-dup wins
-    sa, sb = sigs_new.alias("sa"), sigs_new.alias("sb")
-    batch_hits = (
-        minhash_lsh_candidates(sigs_new)
-        .join(sa, F.col("doc_id_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_id_b") == F.col("sb.doc_id"))
-        .filter(_sig_overlap(F.col("sa.sig"), F.col("sb.sig")) >= threshold)
-        .select(F.col("doc_id_b").alias(id_col))
-        .distinct()
-    )
-
-    drops = store_hits.unionByName(batch_hits).distinct()
-    return (
-        new_docs.join(drops, id_col, "left_anti")
-        .join(sigs_new.select(F.col("doc_id").alias(id_col), "sig"), id_col)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -765,10 +684,14 @@ def winnow_candidate_pairs(
 
     r14: grouped in-place pair generation (the ``ngram_jaccard_pairs``
     /``containment_pairs`` strategy) — groupBy(fp) collects each
-    fingerprint's sorted doc list (``2 <= size <= max_df``, one buffer
-    per fp bounded by ``max_df``) and emits its C(df, 2) pairs with
-    array HOFs.  ONE pass over the fingerprint stream instead of the
-    previous df-count + join-back + self-join, which re-derived the
+    fingerprint's sorted doc list, keeps the lists with
+    ``2 <= size <= max_df`` and emits their C(df, 2) pairs with array
+    HOFs.  The ``max_df`` filter bounds the OUTPUT, not the aggregation
+    buffer: each fingerprint's buffer holds its full doc list before the
+    filter runs, so memory per fingerprint is bounded only by the
+    corpus's fingerprint document-frequency distribution.  ONE pass
+    over the fingerprint stream instead of the previous df-count +
+    join-back + self-join, which re-derived the
     md5 explode subtree three times; row-identical because
     ``winnow_fingerprints`` emits each (doc_id, fp) once
     (``array_distinct`` per doc), so each fp's doc list is a set.
@@ -915,7 +838,7 @@ def incremental_winnow_dedup(
     Returns kept rows; append their :func:`winnow_fingerprints` to the
     store for the next batch.
     """
-    fps_new = track(winnow_fingerprints(new_docs, k, w, text_col, id_col).cache())
+    fps_new = persist(winnow_fingerprints(new_docs, k, w, text_col, id_col))
 
     store_hits = (
         fps_new.join(seen_fps.select("fp").distinct(), "fp")

@@ -104,7 +104,7 @@ def pagerank(
     # query.)
     from pyspark.sql import Window
 
-    norm = cache.track(
+    norm = cache.persist(
         e.repartition("__src")
         .withColumn(
             "__out", F.sum("__w").over(Window.partitionBy("__src"))
@@ -112,14 +112,12 @@ def pagerank(
         .select(
             "__src", "__dst", (F.col("__w") / F.col("__out")).alias("__frac")
         )
-        .cache()
     )
     if handle_dangling:
-        nodes = cache.track(
+        nodes = cache.persist(
             e.select(F.col("__src").alias("node"))
             .union(e.select(F.col("__dst").alias("node")))
             .distinct()
-            .cache()
         )
     else:
         # symmetric contract: every node has an out-edge, so the node
@@ -145,7 +143,7 @@ def pagerank(
         n_seeds = seed_nodes.count()
         if n_seeds == 0:
             raise ValueError("no seed node appears in the edge set")
-        tele = cache.track(
+        tele = cache.persist(
             nodes.join(
                 seed_nodes.select("node", F.lit(1.0 / float(n_seeds)).alias("__tu")),
                 "node",
@@ -155,7 +153,6 @@ def pagerank(
             # pin node order in the cache: the per-iteration contrib
             # join then sort-merges against it without re-sorting (r14)
             .sortWithinPartitions("node")
-            .cache()
         )
         ranks = tele.select("node", F.col("__tu").alias("rank"))
         teleport = F.lit(1.0 - damping) * F.col("__tu")
@@ -165,13 +162,13 @@ def pagerank(
         )
         teleport = F.lit(1.0 - damping) / F.lit(float(n_nodes))
     dangling_nodes = (
-        cache.track(
+        cache.persist(
             nodes.join(
                 # distinct out-edge sources, off the cached norm layout
                 norm.select(F.col("__src").alias("node")).distinct(),
                 "node",
                 "left_anti",
-            ).cache()
+            )
         )
         if handle_dangling
         else None
@@ -328,8 +325,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str):
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    pairs = cache.track(
-        cooccurrence_pairs(li, "l_orderkey", "l_partkey", distinct_items=True).cache()
+    pairs = cache.persist(
+        cooccurrence_pairs(li, "l_orderkey", "l_partkey", distinct_items=True)
     )
     half = pairs.select(
         F.col("item_a").alias("src"),
@@ -657,12 +654,11 @@ def hits_bipartite(
     """
     if int(iterations) < 1:
         raise ValueError("iterations must be >= 1")
-    e = cache.track(
+    e = cache.persist(
         edges.select(
             F.col(hub_col).alias("__h"), F.col(auth_col).alias("__a")
         )
         .distinct()
-        .cache()
     )
     h = e.select("__h").distinct().select("__h", F.lit(1.0).alias("hs"))
     a = None
@@ -708,7 +704,7 @@ def q_part_authority_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _, auths = hits_bipartite(edges, iterations=_HITS_ITERS,
                               hub_col="c", auth_col="p")
-    auths = cache.track(auths.cache())
+    auths = cache.persist(auths)
     row = auths.agg(
         F.sum("auth_score").alias("t"), F.count(F.lit(1)).alias("n")
     ).collect()[0]
@@ -970,7 +966,7 @@ def label_propagation(
         else F.lit(1.0)
     )
     half = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"), w.alias("w"))
-    edges = cache.track(
+    edges = cache.persist(
         half.unionByName(
             half.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -978,7 +974,6 @@ def label_propagation(
         )
         .repartition("src")
         .sortWithinPartitions("src")
-        .cache()
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -1068,17 +1063,16 @@ def q_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the pair build (basket self-join + count agg) feeds BOTH the
     # propagation's edge frame and the summary's — cache it once
-    pairs = cache.track(
+    pairs = cache.persist(
         cooccurrence_pairs(li, "l_orderkey", "l_partkey", distinct_items=True)
         .filter(F.col("pair_count") >= 2)
-        .cache()
     )
     # the summary joins the label frame twice (src + dst side): cache
     # the END of the lazy propagation chain once (not per round)
-    labels = cache.track(
+    labels = cache.persist(
         label_propagation(
             pairs, a="item_a", b="item_b", weight="pair_count", rounds=5
-        ).cache()
+        )
     )
     edges = pairs.select(
         F.col("item_a").alias("src"),
@@ -1137,12 +1131,11 @@ def triangle_stats(
     (wedges = Σ C(deg, 2) over the UNDIRECTED degrees).
     """
     e = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-    deg = cache.track(
+    deg = cache.persist(
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .cache()
     )
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
@@ -1150,12 +1143,12 @@ def triangle_stats(
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = cache.track(
+    oriented = cache.persist(
         ed.select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
             F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("ddeg"),
-        ).cache()
+        )
     )
     o1 = oriented.select(
         "src", F.col("dst").alias("w1"), F.col("ddeg").alias("g1")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 from .text import tokens
 
 __all__ = ["STOPWORDS", "rake_keyphrases", "q_rake_keyphrases", "oracle_sql"]
@@ -87,7 +87,7 @@ def rake_keyphrases(
             " ",
         ).alias("phrase"),
     ).filter(F.col("n_words") <= max_phrase_len)
-    phrase_rows = track(phrase_rows.cache())
+    phrase_rows = persist(phrase_rows)
     member_rows = islands.join(
         phrase_rows.select("doc_id", "grp", "n_words"), ["doc_id", "grp"]
     )

@@ -195,7 +195,7 @@ def langid_train(
     n_h = aug * aug
     per_cls = n_h + aug + 1
     n_cls = len(langs)
-    cached = cache.track(feats.select(vec_col, label_col).cache())
+    cached = cache.persist(feats.select(vec_col, label_col))
     w = np.zeros((n_cls, aug))
     losses: list[float] = []
     for _ in range(int(iterations)):
@@ -285,7 +285,7 @@ def q_langid_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ).cast("long"),
     )
-    feats = cache.track(feats.cache())
+    feats = cache.persist(feats)
     w, b, losses = langid_train(
         feats, langs, dim=_TRAIN_DIM, iterations=_TRAIN_ITERS
     )

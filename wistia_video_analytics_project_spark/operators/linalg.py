@@ -466,11 +466,11 @@ def logistic_train(
     d = int(dim)
     aug = d + 1
     n_h = aug * aug
-    feats = cache.track(
-        df.select(
-            F.col(vec_col).alias("__v"), F.col(y_col).cast("double").alias("__y")
-        ).cache()
+    feats = df.select(
+        F.col(vec_col).alias("__v"), F.col(y_col).cast("double").alias("__y")
     )
+    if not df.is_cached:  # a cached input already serves every pass
+        feats = cache.persist(feats)
     w = np.zeros(aug, dtype=np.float64)
     losses: list[float] = []
     for _ in range(int(iterations)):
@@ -555,11 +555,11 @@ def isotonic_fit(
     and return the frame with a ``iso_rate`` column.  The raw corpus is
     never collected; only sufficient statistics cross the driver
     boundary.  The bucket frame is consumed twice (driver collect +
-    the returned join), so it is cached through ``cache.track``."""
-    from ..cache import track
+    the returned join), so it is cached through ``cache.persist``."""
+    from ..cache import persist
     from pyspark.sql import types as T
 
-    buckets = track(buckets.cache())
+    buckets = persist(buckets)
     rows = buckets.select(x_col, y_sum_col, n_col).orderBy(x_col).collect()
     ys = [
         (float(r[y_sum_col]) / float(r[n_col])) if r[n_col] else 0.0

@@ -2146,63 +2146,6 @@ def _video_features(frames, fps: float) -> list[float]:
     return [round(f, 6) for f in feats]
 
 
-def extract_video_frames(
-    assets: DataFrame, every_n: int = 1
-) -> DataFrame:
-    """REAL frame extraction for decodable video payloads: one row per
-    sampled frame (every ``every_n``-th), carrying the frame's pixel
-    features — the decode stage :func:`sample_frames`'s metadata grid
-    plans for.  Arrow ``mapInPandas``; payloads never reach the driver;
-    undecodable payloads degrade to zero rows rather than failing the
-    job (same contract as :func:`extract_features`'s fake-vector
-    fallback, but a frame ROW would be meaningless)."""
-    import pandas as pd
-
-    step = max(int(every_n), 1)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, mss, feats = [], [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:  # NULL payload row: skip, don't crash
-                    continue
-                try:
-                    decoded = decode_video(bytes(payload))
-                except ValueError:
-                    decoded = None
-                if decoded is None:
-                    continue
-                frames, fps = decoded
-                for k in range(0, len(frames), step):
-                    ids.append(aid)
-                    idxs.append(k)
-                    mss.append(
-                        int(round(k * 1000.0 / fps)) if fps else 0
-                    )
-                    feats.append(_pixel_features(frames[k]))
-            if ids:  # an all-undecodable batch yields no rows at all
-                yield pd.DataFrame(
-                    {
-                        "asset_id": ids,
-                        "frame_idx": idxs,
-                        "frame_ms": mss,
-                        # object dtype: Arrow must see python lists, not
-                        # a float64 block, for array<double>
-                        "feature": pd.Series(feats, dtype=object),
-                    }
-                )
-
-    return (
-        assets.filter(F.col("media_type") == "video")
-        .select("asset_id", "payload")
-        .mapInPandas(
-            run,
-            "asset_id long, frame_idx int, frame_ms int, "
-            "feature array<double>",
-        )
-    )
-
-
 def real_decode(payload: bytes, media_type: str) -> list[float]:
     """Real decode path: BMP/PPM/PNG/GIF/TIFF/JPEG (sequential +
     progressive) images decode to pixels (numpy + stdlib zlib/huffman),
@@ -2368,15 +2311,3 @@ def resize_images(
     return assets.select(
         "asset_id", "media_type", "payload", "width", "height"
     ).mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def dedup_by_content(assets: DataFrame) -> DataFrame:
-    """Exact binary dedup: sha2 over the payload, keep min asset_id.
-    Same one-shuffle shape as text exact-dedup."""
-    from pyspark.sql import Window
-
-    hashed = assets.withColumn("content_sha256", F.sha2(F.col("payload"), 256))
-    w = Window.partitionBy("content_sha256")
-    return hashed.withColumn(
-        "is_canonical", F.col("asset_id") == F.min("asset_id").over(w)
-    )

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 from .text import tokens
 
 __all__ = ["bigram_counts", "kneser_ney_bigram", "q_kneser_ney_bigram"]
@@ -76,7 +76,7 @@ def kneser_ney_bigram(
     bigrams by raw count (w1/w2 lexicographic tiebreak) with their
     model quantities: c12, the context total c1, N1+(w1·), the
     continuation probability of w2, and P_kn(w2|w1)."""
-    bc = track(bigram_counts(docs, text_col, id_col).cache())
+    bc = persist(bigram_counts(docs, text_col, id_col))
     ctx = bc.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count(F.lit(1)).cast("long").alias("n_follow"),

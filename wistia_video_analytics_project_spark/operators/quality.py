@@ -19,8 +19,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .conform import null_or_empty
-
 
 def null_empty_audit(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Q1: per-column null / blank counts in ONE aggregation pass.
@@ -52,14 +50,6 @@ def null_empty_audit(df: DataFrame, cols: Sequence[str] | None = None) -> DataFr
         ),
     )
     return stacked.select("column", "null_count", "empty_count", "total_count")
-
-
-def null_samples(df: DataFrame, col: str, n: int = 5) -> list:
-    """Q1 companion: capture up to n offending rows for a bad key column
-    (the reference displays offenders at `notebool-03.py:273-276`).
-    Bounded collect — safe at any scale."""
-    return df.filter(null_or_empty(col) if dict(df.dtypes).get(col) == "string"
-                     else F.col(col).isNull()).limit(n).collect()
 
 
 def dedup_keep_first(
@@ -112,28 +102,11 @@ def assert_unique(df: DataFrame, keys: Sequence[str]) -> None:
 def quality_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Q5: final quality report — row count + exact distinct keys
     (`notebool-03.py:335-346`) in one pass. At 100 TB the exact
-    count-distinct becomes the dominant cost; see
-    :func:`quality_report_approx`."""
+    count-distinct becomes the dominant cost."""
     aggs = [F.count(F.lit(1)).alias("row_count")] + [
         F.countDistinct(F.col(k)).alias(f"distinct_{k}") for k in key_cols
     ]
     return df.agg(*aggs)
-
-
-def quality_report_approx(df: DataFrame, key_cols: Sequence[str], rsd: float = 0.01) -> DataFrame:
-    """Q5 at scale: HyperLogLog++ distinct counts (no exact-distinct
-    shuffle; SURVEY.md §4.3)."""
-    aggs = [F.count(F.lit(1)).alias("row_count")] + [
-        F.approx_count_distinct(F.col(k), rsd).alias(f"distinct_{k}") for k in key_cols
-    ]
-    return df.agg(*aggs)
-
-
-def referential_orphans(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str) -> DataFrame:
-    """J2 audit: fact rows whose key has no dimension row (left anti join).
-    The reference avoids orphans by PK-repair construction
-    (`notebool-03.py:149-154, 208-213`); this operator verifies it."""
-    return fact.join(dim, fact[fact_key] == dim[dim_key], "left_anti")
 
 
 # ---------------------------------------------------------------------------

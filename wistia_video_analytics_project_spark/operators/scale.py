@@ -1,123 +1,27 @@
-"""Scale helpers: skew-salted joins, bucketed tables, single-pass metrics.
+"""Scale helpers: skew diagnostics, single-pass metrics, partitioned ladders.
 
 These encode the 100 TB playbook as reusable operators:
 
-- **Salting** — when one join key carries a disproportionate share of
-  rows (a viral video's media_id), hash partitioning puts the whole key
-  on one task. Salting splits the hot side N ways and replicates the
-  small side N times: the skewed key becomes N tasks. AQE's skew-join
-  handles sort-merge cases automatically; explicit salting still wins
-  for broadcast-ineligible skewed aggregations and deterministic layout.
-- **Bucketing** — pre-shuffling a fact table into N buckets on its join
-  key makes every later join/agg on that key shuffle-free (Exchange
-  elided). Worth it for repeatedly-joined 100 TB facts.
 - **observe()** — QC counters (rows, nulls, sums) collected DURING a
   real action instead of extra passes; the fix for the reference's
   ≥20-separate-actions pattern (SURVEY.md §4.2).
+- **skew_report** — the heaviest keys and their share of the table,
+  the diagnostic to run before choosing AQE skew-join or broadcast.
+- **incremental_join_delta** — insert-only join-view maintenance that
+  never re-joins the two old sides.
+- **binned_* ladders** — global running sums, row numbers, prefix ops,
+  id gaps and ntiles over a bucket spine instead of one
+  unpartitioned-window task.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the skewed side salted N ways.
-
-    skewed side: salt = random-ish but DETERMINISTIC per row (hash of all
-    columns mod N — reproducible, no rand()). other side: replicated N
-    times via explode. Join on (key, salt). Result == plain join, with
-    the hot key spread over ``n_salts`` tasks.
-
-    ``how`` is restricted to the join types where replication cannot
-    surface in the output: inner / left / left_semi / left_anti (each
-    skewed row carries exactly ONE salt, so it appears at most once; the
-    replicated side only ever matches). right/full would emit every
-    unmatched replicated copy of ``other`` — ``n_salts`` duplicates —
-    so they are rejected; swap the sides (the skewed frame must be the
-    left argument anyway) or dedupe downstream.
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports inner/left/left_semi/left_anti, got {how!r}: "
-            f"right/full joins would emit n_salts copies of unmatched rows "
-            f"from the replicated side"
-        )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(n_salts))
-    s = skewed.withColumn("__salt", salt.cast("int"))
-    o = other.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return s.join(o, on=[on, "__salt"], how=how).drop("__salt")
-
-
-def two_phase_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    measures: Mapping[str, Column],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-safe aggregation: aggregate on (keys, salt) first, then merge
-    partials per key.
-
-    Spark's map-side partial aggregation already spreads pre-shuffle
-    work; this adds a REDUCE-side split for keys so hot that even one
-    reducer per key is too much (billions of rows under one group key).
-    Only decomposable aggregates are supported: sum / count / min / max
-    (avg must be expressed as sum+count by the caller).
-
-    ``measures`` maps output name -> one of F.sum(c)/F.count(c)/
-    F.min(c)/F.max(c); the same function re-merges partials.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partial_aggs = []
-    mergers = []
-    for name, col in measures.items():
-        # derive the merge function from the expression head: count->sum,
-        # sum->sum, min->min, max->max
-        head = col._jc.toString().split("(", 1)[0].lower()
-        merge = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}.get(head)
-        if merge is None:
-            raise ValueError(
-                f"two_phase_agg supports sum/count/min/max; got {col._jc.toString()!r} "
-                f"for {name}"
-            )
-        pname = f"__p_{name}"
-        partial_aggs.append(col.alias(pname))
-        mergers.append(merge(F.col(pname)).alias(name))
-    partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*mergers)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (+optionally sorted) managed table. Joins
-    and aggregations on ``bucket_cols`` against another table bucketed
-    the same way elide their Exchange."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
+from ..cache import persist
 
 
 def observed(
@@ -137,56 +41,6 @@ def observed(
     out = df.observe(obs, pairs[0][1].alias(pairs[0][0]),
                      *[c.alias(n) for n, c in pairs[1:]])
     return out, obs
-
-
-def qc_metrics(key_cols: Sequence[str]) -> dict[str, Column]:
-    """Standard per-write QC bundle: row count + per-key null counts
-    (the reference's validate_and_log, one pass instead of N)."""
-    m: dict[str, Column] = {"rows": F.count(F.lit(1))}
-    for k in key_cols:
-        m[f"null_{k}"] = F.sum(F.col(k).isNull().cast("long"))
-    return m
-
-
-@contextmanager
-def runtime_bloom_filter(
-    spark,
-    creation_side_threshold: str = "100MB",
-    application_side_threshold: str = "10GB",
-):
-    """Enable AQE's runtime bloom-filter join pruning for a scope.
-
-    When one join side carries a selective filter, Spark builds a bloom
-    filter from that side's join keys and injects ``might_contain`` into
-    the OTHER side's scan — rows that cannot match are dropped before
-    the shuffle. At 100 TB this is the difference between shuffling the
-    whole fact table and shuffling the ~1% that survives a selective
-    dimension predicate, without bucketing or manual semi-joins.
-
-    Thresholds gate when Spark bothers: ``creation_side_threshold`` is
-    the max size of the filtered build side, ``application_side_*`` the
-    min scan size worth protecting. Defaults here suit a real cluster;
-    tests shrink them to force the rewrite (plan pinned in
-    tests/test_plans.py). Restores prior conf values on exit.
-    """
-    keys = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
-            creation_side_threshold,
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
-            application_side_threshold,
-    }
-    old = {k: spark.conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def skew_report(
@@ -210,7 +64,7 @@ def skew_report(
     100 TB).
     """
     keys = [F.col(c) for c in key_cols]
-    counts = track(df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows")).cache())
+    counts = persist(df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows")))
     totals = counts.agg(
         F.sum("n_rows").alias("__total"),
         F.count(F.lit(1)).alias("__n_keys"),
@@ -241,98 +95,6 @@ def skew_report(
         .orderBy(F.desc("n_rows"), *[F.asc(c) for c in key_cols])
         .limit(top_n)
     )
-
-
-def zorder_key(
-    bounds: Sequence[tuple[str, float, float]],
-    bits: int = 16,
-) -> Column:
-    """Morton (Z-order) key: interleave the bits of N columns, each
-    normalized to ``[0, 2**bits)`` over caller-supplied ``(col, lo, hi)``
-    bounds (a min/max pre-scan would double the IO at 100 TB — same
-    contract as the histogram operator).
-
-    Sorting a table by this key clusters rows that are close in EVERY
-    dimension into the same parquet row groups, so min/max stats prune
-    multi-column range predicates — a linear sort only ever prunes its
-    leading column. Pure JVM expression tree (shift/and/or), fully
-    codegen'd; ``n_cols * bits`` must fit a signed long (<= 63).
-    """
-    n = len(bounds)
-    if n < 1:
-        raise ValueError("zorder_key needs at least one (col, lo, hi)")
-    if n * bits > 63:
-        raise ValueError(f"{n} cols x {bits} bits exceeds a signed long")
-    cells = F.lit(float(1 << bits))
-    quantized = []
-    for c, lo, hi in bounds:
-        if not hi > lo:
-            raise ValueError(f"bad bounds for {c}: ({lo}, {hi})")
-        scaled = F.floor(
-            (F.col(c).cast("double") - F.lit(float(lo)))
-            / F.lit(float(hi - lo))
-            * cells
-        )
-        quantized.append(
-            F.least(F.greatest(scaled, F.lit(0)), F.lit((1 << bits) - 1)).cast("long")
-        )
-    key = F.lit(0).cast("long")
-    for j in range(bits):
-        for i, q in enumerate(quantized):
-            key = key.bitwiseOR(
-                F.shiftleft(F.shiftright(q, j).bitwiseAND(F.lit(1)), j * n + i)
-            )
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    bounds: Sequence[tuple[str, float, float]],
-    bits: int = 16,
-    n_files: int = 16,
-    row_group_bytes: int | None = None,
-) -> None:
-    """Write parquet clustered by Z-order: range-repartition on the
-    Morton key (globally contiguous key ranges per file), sort within
-    each partition, drop the helper column.
-
-    Every downstream range predicate on ANY of the clustered columns
-    skips files/row groups via parquet min/max stats — measured (not
-    assumed) in tests/test_zorder.py against linear-sort and unsorted
-    layouts of the same data.
-    """
-    out = (
-        df.withColumn("__z", zorder_key(bounds, bits))
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    writer = out.write.mode("overwrite")
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)
-
-
-def partition_stats(df: DataFrame) -> DataFrame:
-    """Physical-layout diagnostic: rows per Spark partition plus the
-    min/max/avg summary — the companion to :func:`skew_report` (that one
-    finds hot KEYS; this one shows whether the current PARTITIONING is
-    balanced, e.g. after a repartition/bucketing/AQE decision).
-
-    Engine-layout-dependent by nature (no oracle): one narrow pass using
-    ``spark_partition_id``, aggregating to |partitions| rows.
-    """
-    per = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    total = per.agg(
-        F.count(F.lit(1)).alias("n_partitions"),
-        F.min("n_rows").alias("min_rows"),
-        F.max("n_rows").alias("max_rows"),
-        F.avg("n_rows").alias("avg_rows"),
-    )
-    return per.crossJoin(F.broadcast(total))
 
 
 def incremental_join_delta(
@@ -715,7 +477,7 @@ def binned_running_sum(
     # the ladder consumes df three times (bounds, bucket counts, the
     # join-back) — cache it so a non-trivial input plan computes once;
     # inputs are entity-level aggregates by contract (never raw facts)
-    df = track(df.cache())
+    df = persist(df)
     tie = order_cols[1] if len(order_cols) > 1 else None
     bucketed = _range_bucketed(df, lead, n_buckets, bounds, tie=tie)
     per_bucket = bucketed.groupBy("__bucket").agg(
@@ -769,7 +531,7 @@ def binned_row_number(
     """
     lead = order_cols[0]
     # cached for the same three-consumer reason as binned_running_sum
-    df = track(df.cache())
+    df = persist(df)
     tie = order_cols[1] if len(order_cols) > 1 else None
     bucketed = _range_bucketed(df, lead, n_buckets, bounds, tie=tie)
     per_bucket = bucketed.groupBy("__bucket").agg(
@@ -822,7 +584,7 @@ def binned_prefix_ops(
     if not sum_cols and rank_col is None:
         raise ValueError("binned_prefix_ops: nothing to compute")
     lead = order_cols[0]
-    df = track(df.cache())
+    df = persist(df)
     tie = order_cols[1] if len(order_cols) > 1 else None
     bucketed = _range_bucketed(df, lead, n_buckets, bounds, tie=tie)
     partials = [
@@ -891,7 +653,7 @@ def binned_id_gaps(
     sparse/clustered that fixed-width buckets go fat — rare for dense
     surrogate ids, common for timestamps-as-ids).
     """
-    df = track(df.cache())  # consumed by bounds, the lead, and the spine
+    df = persist(df)  # consumed by bounds, the lead, and the spine
     bucketed = _range_bucketed(df, id_col, n_buckets, bounds).select(
         "__bucket", id_col
     )

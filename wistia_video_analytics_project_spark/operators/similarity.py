@@ -28,7 +28,7 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 from ..session import configure_runtime
 from ..sources import load_table
 
@@ -373,7 +373,7 @@ def ann_lsh_topk(
     # bands feed both join sides: cache to avoid recomputing the
     # signature UDF lineage twice
     sigs = srp_signatures(all_vecs, dim, id_col, vec_col)
-    bands = track(srp_bands(sigs, id_col).cache())
+    bands = persist(srp_bands(sigs, id_col))
 
     q_bands = bands.join(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")),
@@ -665,437 +665,6 @@ def ann_ivf_topk(
     )
 
 
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    refine_iterations: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist an IVF index: the corpus parquet-partitioned BY CELL, with
-    the centroid table as JSON alongside.
-
-    This is the serving layout: a query probing nprobe cells reads only
-    those partitions (partition pruning at the file listing — asserted in
-    tests), so query cost scales with nprobe/n_cells of the corpus
-    regardless of corpus size.
-    """
-    import json
-    import os
-    import shutil
-
-    if refine_iterations > 0:
-        cents = ivf_centroids_refined(corpus, n_centroids, refine_iterations, id_col, vec_col)
-    else:
-        cents = ivf_centroids(corpus, n_centroids, id_col, vec_col)
-    assigned = ivf_assign(corpus, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
-    (
-        corpus.withColumn("__epoch", F.lit(0).cast("long"))
-        .join(assigned, id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(os.path.join(path, "cells"))
-    )
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "centroids.json"), "w") as f:
-        json.dump(cents, f)
-    # a fresh build supersedes any prior lifecycle state at this path
-    tomb_dir = os.path.join(path, "tombstones")
-    if os.path.exists(tomb_dir):
-        shutil.rmtree(tomb_dir)
-    _ivf_meta_write(path, {"next_epoch": 1})
-
-
-def ivf_add_to_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally add vectors to a persisted IVF index: assign them
-    to the EXISTING (frozen) centroids and append to the touched cell
-    partitions only — the standard serving-side IVF update (centroids
-    drift is handled by periodic re-trains, not per-batch; FAISS
-    add-with-ids semantics).  Work is proportional to the batch, never
-    the index; dynamic partition overwrite is NOT needed because
-    appends are additive.
-
-    Rows are stamped with the index's monotone write epoch, so
-    re-adding a previously deleted id RESURRECTS it: a tombstone only
-    hides rows written before the delete (round-7 ADVICE — the plain
-    id anti-join hid the fresh rows too, and the next compaction then
-    physically stripped them).  The epoch counter bumps BEFORE the
-    append commits: a crash in between burns an epoch number, never
-    mis-stamps a row."""
-    import json
-    import os
-
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = [(int(cid), vec) for cid, vec in json.load(f)]
-    meta = _ivf_meta_read(path)
-    epoch = meta["next_epoch"]
-    _ivf_meta_write(path, {**meta, "next_epoch": epoch + 1})
-    assigned = ivf_assign(new_vectors, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
-    (
-        new_vectors.withColumn("__epoch", F.lit(epoch).cast("long"))
-        .join(assigned, id_col)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(os.path.join(path, "cells"))
-    )
-
-
-def ivf_delete_from_index(
-    spark,
-    path: str,
-    ids,
-    id_col: str = "vec_id",
-) -> None:
-    """Delete vectors from a persisted IVF index by TOMBSTONE (the
-    LSM/FAISS-IDSelector pattern): the ids append to
-    ``path/tombstones`` and take effect on the next query — no cell
-    partition is rewritten, so a delete costs O(batch) regardless of
-    index size.  Physical removal happens at the next
-    :func:`ivf_compact_index` (which also triggers on tombstone
-    fraction), keeping the read amplification bounded: a query pays
-    one broadcast join against the tombstone set.
-
-    Tombstones are EPOCH-SEQUENCED: each records the index's write
-    epoch at delete time and hides only rows written before it, so a
-    later :func:`ivf_add_to_index` of the same id is visible again
-    (upsert semantics — the old rows stay hidden, the new row serves).
-    """
-    import os
-
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} long"
-        )
-    meta = _ivf_meta_read(path)
-    epoch = meta["next_epoch"]
-    _ivf_meta_write(path, {**meta, "next_epoch": epoch + 1})
-    ids.select(id_col).withColumn(
-        "del_epoch", F.lit(epoch).cast("long")
-    ).write.mode("append").parquet(os.path.join(path, "tombstones"))
-
-
-def _ivf_meta_digest(meta: dict) -> str:
-    """Content digest over the meta payload (sha field excluded),
-    canonical sorted-keys JSON so the digest is representation-stable."""
-    import hashlib
-    import json
-
-    payload = {k: v for k, v in meta.items() if k != "sha"}
-    return hashlib.sha256(
-        json.dumps(payload, sort_keys=True).encode()
-    ).hexdigest()
-
-
-def _ivf_meta_rebuild(path: str) -> dict:
-    """Reconstruct lifecycle metadata from the index DATA — the
-    self-heal path when ``meta.json`` is missing or fails
-    verify-on-read.  The epoch counter is derivable: every committed
-    row carries ``__epoch`` and every tombstone carries ``del_epoch``,
-    so ``next_epoch = 1 + max(all of them, 0)`` can never sit BEHIND an
-    existing row epoch (the failure the round-8 VERDICT flags: a torn
-    meta that resets the counter would let a stale tombstone hide
-    freshly added rows).  A pre-epoch index (all rows implicit epoch 0,
-    no tombstones) rebuilds to the same ``next_epoch = 1`` the old
-    missing-file default used.
-
-    Reads only the two epoch columns via pyarrow — a footer-and-one-
-    column scan, not a corpus scan; on an object store the same
-    reconstruction runs as a metadata-only Spark job."""
-    import os
-
-    import pyarrow.dataset as pads
-
-    hi = 0
-    for sub, col in (("cells", "__epoch"), ("tombstones", "del_epoch")):
-        d = os.path.join(path, sub)
-        if not os.path.isdir(d):
-            continue
-        dataset = pads.dataset(d, format="parquet", partitioning="hive")
-        if col not in dataset.schema.names:
-            continue  # pre-epoch layout: implicit epoch 0
-        tab = dataset.to_table(columns=[col])
-        if tab.num_rows:
-            import pyarrow.compute as pc
-
-            m = pc.max(tab.column(col)).as_py()
-            if m is not None:
-                hi = max(hi, int(m))
-    return {"next_epoch": hi + 1}
-
-
-def _ivf_meta_read(path: str) -> dict:
-    """Index lifecycle metadata (monotone write-epoch counter) with
-    VERIFY-ON-READ: the stored sha256 must match the payload, else the
-    file is treated as torn and rebuilt from the data itself
-    (:func:`_ivf_meta_rebuild`).  A missing file means a pre-epoch
-    index and rebuilds the same way.  Stray ``meta.json.tmp`` files
-    (crash before the atomic rename) are ignored — only the renamed
-    file is ever read."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        return _ivf_meta_rebuild(path)
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if not isinstance(meta, dict) or "next_epoch" not in meta:
-            raise ValueError("meta.json missing next_epoch")
-        if meta.get("sha") != _ivf_meta_digest(meta):
-            raise ValueError("meta.json checksum mismatch")
-    except (ValueError, json.JSONDecodeError, UnicodeDecodeError):
-        return _ivf_meta_rebuild(path)
-    return meta
-
-
-def _ivf_meta_write(path: str, meta: dict) -> None:
-    """Torn-writer-safe commit: write-temp, fsync, atomic rename, so a
-    reader sees either the old manifest or the new one, never a mix.
-    The payload carries its own sha256 so a reader can detect a torn
-    file (non-atomic filesystem, partial copy) and fall back to
-    :func:`_ivf_meta_rebuild`."""
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    meta = {**{k: v for k, v in meta.items() if k != "sha"}}
-    meta["sha"] = _ivf_meta_digest(meta)
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, "meta.json"))
-
-
-def _ivf_tombstones(spark, path: str, id_col: str = "vec_id"):
-    """The index's tombstone set as an (id, del_epoch) DataFrame with
-    one row per id (latest delete wins), or ``None`` when no delete
-    has ever been issued."""
-    import os
-
-    tomb_dir = os.path.join(path, "tombstones")
-    if not os.path.exists(tomb_dir):
-        return None
-    return (
-        spark.read.parquet(tomb_dir)
-        .groupBy(id_col)
-        .agg(F.max("del_epoch").alias("del_epoch"))
-    )
-
-
-def _ivf_apply_tombstones(index: DataFrame, tomb, id_col: str) -> DataFrame:
-    """Epoch-aware delete filter: keep a row unless a tombstone for its
-    id was issued AFTER the row was written.  Broadcast join — the
-    tombstone set is delete-batch-sized, never index-sized."""
-    if tomb is None:
-        return index
-    if "__epoch" not in index.columns:
-        # pre-epoch index layout: every row predates every tombstone
-        index = index.withColumn("__epoch", F.lit(0).cast("long"))
-    return (
-        index.join(F.broadcast(tomb), id_col, "left")
-        .filter(
-            F.col("del_epoch").isNull()
-            | (F.col("__epoch") >= F.col("del_epoch"))
-        )
-        .drop("del_epoch")
-    )
-
-
-def ivf_index_health(spark, path: str) -> dict:
-    """Cell-occupancy diagnostics for a persisted IVF index — the
-    signal the compaction policy reads.
-
-    One per-cell count aggregate over the cells table (cell is the
-    partition column, so the scan reads no vector bytes after column
-    pruning).  ``skew_ratio`` = max cell size / mean over ALL trained
-    cells (empty included): under continuous ingestion with frozen
-    centroids this drifts upward as new data concentrates in stale
-    cells — the probe cost of the hottest cell grows with it, since a
-    query probing that cell scans ``max_cell`` vectors regardless of
-    nprobe.  ``empty_frac`` counts trained cells that no vector maps to
-    (wasted quantizer resolution)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "centroids.json")) as f:
-        n_cells = len(json.load(f))
-    counts = (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    n_vectors = sum(r["n"] for r in counts)
-    max_cell = max((r["n"] for r in counts), default=0)
-    mean_cell = n_vectors / n_cells if n_cells else 0.0
-    tomb = _ivf_tombstones(spark, path)
-    n_tombstones = tomb.count() if tomb is not None else 0
-    return {
-        "n_vectors": n_vectors,
-        "n_cells": n_cells,
-        "n_cells_nonempty": len(counts),
-        "max_cell": max_cell,
-        "skew_ratio": (max_cell / mean_cell) if mean_cell else 0.0,
-        "empty_frac": (n_cells - len(counts)) / n_cells if n_cells else 0.0,
-        "n_tombstones": n_tombstones,
-        "tombstone_frac": (n_tombstones / n_vectors) if n_vectors else 0.0,
-    }
-
-
-def ivf_compact_index(
-    spark,
-    path: str,
-    skew_threshold: float = 4.0,
-    empty_frac_threshold: float = 0.5,
-    tombstone_frac_threshold: float = 0.2,
-    refine_iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Compaction / re-train policy for a persisted IVF index under
-    continuous ingestion (:func:`ivf_add_to_index` appends against
-    FROZEN centroids, so cell balance degrades over time — the FAISS
-    "periodic retrain" counterpart, made an explicit operator).
-
-    Reads :func:`ivf_index_health`; when ``skew_ratio`` or
-    ``empty_frac`` exceeds its threshold, re-trains the coarse
-    quantizer on the CURRENT index contents (deterministic sample +
-    Lloyd refinement — identical pipeline to a from-scratch
-    :func:`ivf_write_index`, so post-rebuild recall provably equals a
-    fresh build on the same corpus) and rewrites the cell layout,
-    swapping directories only after the rebuild commits (_SUCCESS):
-    readers never see a half-written index, and a crash mid-rebuild
-    leaves the old index live.  At fleet scale the rebuild is one
-    assign pass + one partitioned write over the index — the same cost
-    as the original build, amortized across the ingestion window that
-    caused the drift.
-
-    Returns the CURRENT health dict plus ``{"rebuilt": bool}``: on the
-    no-op path that is the health just measured; after a rebuild it is
-    RECOMPUTED post-rebuild (round-7 ADVICE: returning the pre-rebuild
-    trigger snapshot showed nonzero tombstone debt right after the
-    compaction that cleared it), with the trigger snapshot preserved
-    under ``"trigger_health"``.
-    """
-    import json
-    import os
-    import shutil
-
-    health = ivf_index_health(spark, path)
-    rebuild = (
-        health["skew_ratio"] > skew_threshold
-        or health["empty_frac"] > empty_frac_threshold
-        or health["tombstone_frac"] > tombstone_frac_threshold
-    )
-    if not rebuild:
-        return {**health, "rebuilt": False}
-
-    cells_dir = os.path.join(path, "cells")
-    corpus = spark.read.parquet(cells_dir).drop("cell")
-    # physical removal: epoch-dead rows never enter the rebuild; rows
-    # RE-ADDED after their delete survive it (round-7 ADVICE fix).
-    # Surviving rows keep their write epochs so a crash between the
-    # directory swap and the tombstone clear below stays correct.
-    corpus = _ivf_apply_tombstones(
-        corpus, _ivf_tombstones(spark, path, id_col), id_col
-    )
-    tmp = os.path.join(path, "cells.rebuild")
-    cents = ivf_centroids_refined(
-        corpus, health["n_cells"], refine_iterations, id_col, vec_col
-    )
-    assigned = ivf_assign(corpus, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
-    (
-        corpus.join(assigned, id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    old = os.path.join(path, "cells.old")
-    os.rename(cells_dir, old)
-    os.rename(tmp, cells_dir)
-    with open(os.path.join(path, "centroids.json"), "w") as f:
-        json.dump(cents, f)
-    shutil.rmtree(old)
-    # tombstones are applied — clear them AFTER the swap commits (a
-    # crash before this point leaves them active against the old data,
-    # which is correct either way)
-    tomb_dir = os.path.join(path, "tombstones")
-    if os.path.exists(tomb_dir):
-        shutil.rmtree(tomb_dir)
-    return {
-        **ivf_index_health(spark, path),
-        "rebuilt": True,
-        "trigger_health": health,
-    }
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a persisted IVF index: assign queries to their nprobe
-    nearest cells, read ONLY those cell partitions, exact cosine re-rank.
-    Same output schema as :func:`brute_force_topk`."""
-    import json
-    import os
-
-    from pyspark.sql import Window
-
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = [(int(cid), vec) for cid, vec in json.load(f)]
-    q_cells = ivf_assign(queries, cents, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
-    probed = sorted({r.cell for r in q_cells.select("cell").distinct().collect()})
-    index = spark.read.parquet(os.path.join(path, "cells")).filter(
-        F.col("cell").isin(probed)  # partition-pruned scan
-    )
-    # deletes take effect immediately (epoch-aware broadcast join
-    # against the tombstone set — a re-added id serves its post-delete
-    # rows); physical removal waits for compaction
-    index = _ivf_apply_tombstones(
-        index, _ivf_tombstones(spark, path, id_col), id_col
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    ).join(q_cells.select(F.col(id_col).alias("query_id"), "cell"), "query_id")
-    cand = (
-        q.join(
-            index.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "__qv", "neighbor_id", "__cv")
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rnk")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — compressed-domain ANN
 # ---------------------------------------------------------------------------
@@ -1332,90 +901,6 @@ def _exact_rerank(
     )
     return (
         rerank.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rnk")
-    )
-
-
-def pq_write_index(
-    corpus: DataFrame,
-    path: str,
-    m: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist a PQ index: byte codes + codebooks, with the original
-    vectors in a SEPARATE parquet read only for shortlist re-ranks.
-
-    The 100 TB residency argument made concrete as a layout: a float
-    corpus that cannot stay hot compresses ~32x into ``codes`` (scanned
-    on every query), while ``vectors`` (the full-precision originals)
-    is touched only via a selective semi-join on the ADC shortlist."""
-    import json
-    import os
-
-    books = pq_train(corpus, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col)
-    pq_encode(corpus, books, id_col=id_col, vec_col=vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "codes"))
-    corpus.select(id_col, vec_col).write.mode("overwrite").parquet(
-        os.path.join(path, "vectors")
-    )
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "codebooks.json"), "w") as f:
-        json.dump(books, f)
-
-
-def pq_query_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a persisted PQ index: ADC shortlist over the byte codes,
-    then exact cosine re-rank reading ONLY the shortlisted originals
-    (broadcast semi-join on the shortlist ids)."""
-    import os
-
-    import json
-
-    from pyspark.sql import Window
-
-    with open(os.path.join(path, "codebooks.json")) as f:
-        books = json.load(f)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    short = pq_topk(
-        queries, codes, books, k=shortlist, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    vectors = spark.read.parquet(os.path.join(path, "vectors"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    cand = (
-        short.join(q, "query_id")
-        .join(
-            vectors.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("__cv"),
-            ),
-            "neighbor_id",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine_sim", "rnk")
     )
@@ -1712,7 +1197,7 @@ def truncated_dim_recall(
             lambda acc, x: acc + x,
         )
 
-    sims = _cache.track(
+    sims = _cache.persist(
         corpus.join(
             F.broadcast(queries_side),
             F.col("query_id") != F.col("neighbor_id"),
@@ -1727,7 +1212,6 @@ def truncated_dim_recall(
                 for d in dims
             ],
         )
-        .cache()
     )
     full = dims[-1]
 

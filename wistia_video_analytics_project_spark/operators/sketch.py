@@ -26,7 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 
 DEFAULT_DEPTH = 4
 DEFAULT_WIDTH = 1024
@@ -178,7 +178,7 @@ def hll_rolling_distinct(
     # cache: both the spine and the join consume the sketches frame —
     # uncached, its lineage (full raw scan + sketch build) would run
     # twice; cached it is |days| rows of small binaries
-    sketches = track(sketches.cache())
+    sketches = persist(sketches)
     spine = sketches.select(F.col("day").alias("__day")).distinct()
     delta = F.datediff(F.col("__day"), F.col("day"))
     j = sketches.join(

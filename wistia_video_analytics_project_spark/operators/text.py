@@ -354,9 +354,9 @@ def chunk_documents(
     stride offset < token count, so a short tail window is kept (its
     tokens still get a window that ends the document).
 
-    ``chunk_documents_udtf`` is the same logic as an Arrow-batched
-    Python UDTF (§2.10 surface) — asserted row-identical in tests; use
-    it when the per-chunk logic outgrows SQL expressions (real
+    The tests check it row-identical against an independent Python UDTF
+    (§2.10 surface) with the same windowing; that form is the one to
+    reach for when the per-chunk logic outgrows SQL expressions (real
     tokenizers, sentence boundaries).
     """
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
@@ -376,30 +376,6 @@ def chunk_documents(
             )
         ).alias("__c"),
     ).select(id_col, "__c.chunk_id", "__c.chunk_text", "__c.n_tokens")
-
-
-def make_chunk_udtf(chunk_size: int = 50, stride: int = 40):
-    """Python UDTF form of :func:`chunk_documents` (one input text ->
-    many chunk rows). Register then use via LATERAL:
-
-        spark.udtf.register("chunk", make_chunk_udtf())
-        spark.sql("SELECT d.doc_id, c.* FROM docs d, LATERAL chunk(d.text) c")
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_id int, chunk_text string, n_tokens int")
-    class Chunker:
-        def eval(self, text: str):  # noqa: D102 - UDTF contract
-            if text is None:
-                return
-            toks = text.strip().split()
-            if not toks:
-                return
-            for ci, s in enumerate(range(0, len(toks), stride)):
-                window = toks[s : s + chunk_size]
-                yield ci, " ".join(window), len(window)
-
-    return Chunker
 
 
 def lm_bits_per_token(
@@ -1033,9 +1009,9 @@ def vocab_overlap_sources(
         .filter(F.col("tok") != "")
         .distinct()
     )
-    from ..cache import track
+    from ..cache import persist
 
-    vocab = track(vocab.cache())  # consumed by sizes AND both join sides
+    vocab = persist(vocab)  # consumed by sizes AND both join sides
     sizes = vocab.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_types")
     )

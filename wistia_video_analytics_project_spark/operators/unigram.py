@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import persist
 from .bpe import word_frequencies
 
 __all__ = [
@@ -86,7 +86,7 @@ def candidate_vocab(
     )
     # the chars/multi branches below would otherwise each re-run the
     # substring explode + sum shuffle — cache the aggregate once
-    pieces = track(pieces.cache())
+    pieces = persist(pieces)
     chars = pieces.filter(F.col("is_char"))
     multi = (
         pieces.filter(~F.col("is_char"))

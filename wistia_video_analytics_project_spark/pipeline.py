@@ -26,7 +26,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .cache import track
+from .cache import persist
 
 
 @dataclass
@@ -100,7 +100,7 @@ class Pipeline:
                 failed.add(s.name)
                 continue
             if out is not None and s.name in self._shared:
-                out = track(out.cache())
+                out = persist(out)
             ctx.outputs[s.name] = out
             results.append(StageResult(s.name, "succeeded"))
         return ctx, results

@@ -8,20 +8,11 @@ same semantics onto Structured Streaming:
 |---|---|
 | 7-day lookback + last_run watermark | ``withWatermark(event_time, ...)`` |
 | daily batch agg by event_date | tumbling ``F.window`` groupBy |
-| keep-first dedup | ``dropDuplicatesWithinWatermark`` |
 | overwrite-per-run silver write | append mode + ``foreachBatch`` merge |
 """
 
 from .jobs import (  # noqa: F401
-    backfill_daily_rollup,
-    continuous_daily_rollup,
-    dedup_stream,
-    dedup_stream_by_content,
-    enrich_stream,
-    foreach_batch_dedup_ingest,
     foreach_batch_parquet_upsert,
-    foreach_batch_upsert,
-    rollup_merge_fn,
     run_to_memory_sink,
     session_window_stats,
     sliding_window_traffic,

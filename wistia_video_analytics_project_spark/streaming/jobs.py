@@ -145,106 +145,6 @@ def session_window_stats(
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: Sequence[str],
-    watermark: str = "7 days",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming keep-first dedup (`notebool-03.py:308-317` analog):
-    ``dropDuplicatesWithinWatermark`` keeps the first-arriving row per
-    key and expires dedup state past the watermark — bounded memory,
-    unlike a batch global window."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
-def dedup_stream_by_content(
-    docs: DataFrame,
-    text_col: str = "text",
-    watermark: str = "7 days",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming EXACT CONTENT dedup: fingerprint each document (md5 of
-    normalized text — the same key the batch dedup ladder uses) and keep
-    the first arrival per fingerprint within the watermark horizon.
-
-    The streaming face of ``dedup.incremental_exact_dedup``: state is
-    one fingerprint per kept doc, expired past the watermark — bounded
-    memory on an unbounded corpus stream. Re-ingested/replayed documents
-    inside the horizon are dropped without any store lookup.
-    """
-    from ..operators.text import fingerprint
-
-    return (
-        docs.withColumn("fingerprint", fingerprint(text_col))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-    )
-
-
-def foreach_batch_dedup_ingest(
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> Callable[[DataFrame, int], None]:
-    """Continuous corpus ingestion with exact content dedup: each
-    micro-batch is deduped against EVERYTHING already ingested
-    (``dedup.incremental_exact_dedup``) and written to its own
-    ``epoch=N`` partition of the output corpus.
-
-    Exactly-once without a side store: the fingerprint store IS the
-    output corpus (its ``fingerprint`` column — column-pruned read), and
-    each epoch recomputes its kept set against the corpus EXCLUDING its
-    own partition, then dynamic-partition-overwrites only that
-    partition. A replayed epoch therefore reproduces and overwrites its
-    exact prior output — idempotent even when the crash landed between
-    the data write and the checkpoint commit (asserted in tests).
-    """
-    from pyspark.errors import AnalysisException as _AE
-
-    from ..operators.dedup import incremental_exact_dedup
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            store = (
-                spark.read.parquet(out_path)
-                .filter(F.col("epoch") != epoch_id)
-                .select("fingerprint")
-            )
-        except _AE:
-            store = spark.createDataFrame([], "fingerprint string")
-        kept = incremental_exact_dedup(batch, store, text_col, id_col)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                kept.withColumn("epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .partitionBy("epoch")
-                .parquet(out_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    return apply
-
-
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static join (J1 on a stream): each micro-batch joins
-    against the static dimension — broadcast, so the stream never
-    shuffles for the join. The dim is re-resolved per batch, so a
-    re-loaded dimension table is picked up without restarting the query."""
-    return events.join(F.broadcast(dim), on=on, how=how)
-
-
 def stream_stream_window_join(
     left: DataFrame,
     right: DataFrame,
@@ -353,27 +253,6 @@ def foreach_batch_parquet_upsert(
     return apply
 
 
-def foreach_batch_upsert(
-    target: dict[tuple, tuple],
-    key_cols: Sequence[str],
-) -> Callable[[DataFrame, int], None]:
-    """TEST DOUBLE ONLY: dict-backed keyed upsert for asserting sink
-    contents in pytest. It collects every batch row to the driver, so it
-    must never back a production stream — the shipped merge body is
-    :func:`foreach_batch_parquet_upsert` (fully distributed, partition-
-    pruned, idempotent on epoch replay).
-    """
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        cols = batch.columns
-        key_idx = [cols.index(k) for k in key_cols]
-        for row in batch.collect():  # micro-batch: bounded rows by design
-            t = tuple(row)
-            target[tuple(t[i] for i in key_idx)] = t
-
-    return apply
-
-
 def run_to_memory_sink(
     stream_df: DataFrame,
     query_name: str,
@@ -418,239 +297,3 @@ def run_to_memory_sink(
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     return progress
-
-
-def run_foreach_batch(
-    stream_df: DataFrame, fn: Callable[[DataFrame, int], None]
-) -> None:
-    """Drive a streaming frame through a foreachBatch sink to completion."""
-    q = stream_df.writeStream.outputMode("append").foreachBatch(fn).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def continuous_daily_rollup(
-    events: DataFrame,
-    target_path: str,
-    ts_col: str = "ts",
-    key_cols: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-    checkpoint: str | None = None,
-) -> None:
-    """Hypertable-style continuous aggregate: a date-partitioned parquet
-    rollup table incrementally maintained from the stream.
-
-    Per micro-batch: aggregate the batch to (date, keys) partials, merge
-    with the existing rollup rows FOR THE AFFECTED DATES ONLY, and
-    rewrite just those date partitions (dynamic partition overwrite).
-    Work per batch is proportional to the batch's date span — never a
-    full-table rewrite; untouched historical partitions are never read.
-
-    Counts and sums merge associatively, so the rollup equals the batch
-    recompute (asserted in tests). Average-style measures must be stored
-    as (sum, count) partials, which this does.
-
-    Exactly-once across crashes: additive merges are NOT naturally
-    idempotent — if an epoch's partition overwrite lands but the
-    checkpoint commit doesn't, Structured Streaming replays the epoch
-    and a naive merge would add its partials twice. Each stored row
-    therefore carries ``last_epoch`` (the epoch that last merged into
-    it); a replayed epoch sees ``max(last_epoch) >= epoch_id`` for an
-    already-merged date and skips that date's partials. The guard
-    assumes one checkpointed query lineage per target path (epoch ids
-    restart at 0 under a NEW checkpoint — point a fresh query at a
-    fresh rollup, or backfill batch-side).
-    """
-    writer = events.writeStream.outputMode("append").foreachBatch(
-        rollup_merge_fn(target_path, ts_col, key_cols, value_col)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def backfill_daily_rollup(
-    events: DataFrame,
-    target_path: str,
-    ts_col: str = "ts",
-    key_cols: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-) -> None:
-    """Batch bootstrap for :func:`continuous_daily_rollup`: compute the
-    same (date, keys) rollup schema from historical events in ONE batch
-    job and write it with ``last_epoch = -1`` — below any checkpoint's
-    epoch ids, so a NEW streaming query merges on top without tripping
-    the replay guard. This is the documented handoff for "epoch ids
-    restart under a new checkpoint": backfill history batch-side, then
-    point the fresh stream at events AFTER the backfill cutoff (the
-    caller partitions the timeline; overlapping events would be counted
-    twice, same as any additive rollup).
-    """
-    rollup = (
-        events.withColumn("date", F.to_date(ts_col))
-        .groupBy("date", *key_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.coalesce(F.col(value_col), F.lit(0.0))).alias("sum_value"),
-        )
-        .withColumn("last_epoch", F.lit(-1).cast("long"))
-    )
-    rollup.write.mode("overwrite").partitionBy("date").parquet(target_path)
-
-
-def rollup_merge_fn(
-    target_path: str,
-    ts_col: str = "ts",
-    key_cols: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body behind :func:`continuous_daily_rollup`,
-    exposed so tests can replay an epoch directly (crash-between-write-
-    and-commit simulation) against static micro-batch frames."""
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        partial = (
-            batch.withColumn("date", F.to_date(ts_col))
-            .groupBy("date", *key_cols)
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.coalesce(F.col(value_col), F.lit(0.0))).alias("sum_value"),
-            )
-            .withColumn("last_epoch", F.lit(epoch_id).cast("long"))
-        )
-        if partial.isEmpty():
-            return
-        dates = [r.date for r in partial.select("date").distinct().collect()]
-        try:
-            existing = spark.read.parquet(target_path).filter(F.col("date").isin(dates))
-        except AnalysisException as e:
-            # ONLY path-not-found means "first batch"; any other read
-            # failure must abort the batch (merging against a frame we
-            # failed to read would silently drop history)
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            existing = None
-        if existing is not None:
-            if "last_epoch" not in existing.columns:  # pre-guard table
-                existing = existing.withColumn("last_epoch", F.lit(-1).cast("long"))
-            # dates already merged by a completed attempt of THIS epoch
-            # (crash fell between partition write and checkpoint commit)
-            applied = [
-                r.date
-                for r in existing.groupBy("date")
-                .agg(F.max("last_epoch").alias("e"))
-                .filter(F.col("e") >= epoch_id)
-                .collect()
-            ]
-            if applied:
-                partial = partial.filter(~F.col("date").isin(applied))
-                existing = existing.filter(~F.col("date").isin(applied))
-                if partial.isEmpty():
-                    return
-        merged = partial if existing is None else (
-            partial.unionByName(existing)
-            .groupBy("date", *key_cols)
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value").alias("sum_value"),
-                F.max("last_epoch").alias("last_epoch"),
-            )
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                merged.write.mode("overwrite")
-                .partitionBy("date")
-                .parquet(target_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    return merge
-
-
-# ---------------------------------------------------------------------------
-# streaming face of the exact mergeable state (operators/mergeable.py)
-# ---------------------------------------------------------------------------
-
-
-def state_contribution_fn(
-    state_path: str,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> Callable[[DataFrame, int], None]:
-    """ForeachBatch body maintaining the exact mergeable KPI state
-    (``operators/mergeable.daily_state`` rows: additive counts/cents +
-    OR-mergeable exact user bitmaps) as EPOCH-PARTITIONED contributions.
-
-    Unlike ``continuous_daily_rollup``'s last_epoch guard, idempotence
-    here is structural: each epoch writes ONLY its own contribution
-    partition (dynamic overwrite on ``epoch``), so a replayed epoch
-    overwrites itself instead of double-adding — no read-modify-write
-    of prior state at all, which also makes concurrent backfill writers
-    safe as long as they use disjoint epoch ids. Readers merge
-    contributions at query time (``read_state_report``); a periodic
-    compaction can fold old epochs into one without changing results
-    (merge is associative — property-tested batch-side).
-    """
-    from ..operators.mergeable import daily_state
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        contrib = daily_state(
-            batch, ts_col=ts_col, user_col=user_col, value_col=value_col
-        ).withColumn("epoch", F.lit(epoch_id))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                contrib.write.mode("overwrite")
-                .partitionBy("epoch")
-                .parquet(state_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    return apply
-
-
-def streaming_state_refresh(
-    events: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> None:
-    """Run a stream to completion through ``state_contribution_fn`` —
-    the streaming twin of the batch ``incremental_kpi_refresh`` path."""
-    writer = events.writeStream.outputMode("append").foreachBatch(
-        state_contribution_fn(state_path, ts_col, user_col, value_col)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def read_state_report(spark, state_path: str) -> DataFrame:
-    """Merge all epoch contributions and collapse to the daily KPI
-    report — reads the (tiny) state table only, never raw history."""
-    from ..operators.mergeable import merge_states, state_report
-
-    raw = spark.read.parquet(state_path).drop("epoch")
-    return state_report(merge_states(raw))

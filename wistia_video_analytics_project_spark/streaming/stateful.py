@@ -245,78 +245,3 @@ def timeout_sessionize(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# TransformWithState (Spark 4 arbitrary-stateful API)
-# ---------------------------------------------------------------------------
-
-LIFETIME_OUT_SCHEMA = "user_id long, n_events long, total_value double"
-
-try:  # the TWS state-server protocol needs protobuf, absent here
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAVE_TWS_DEPS = True
-except ImportError:
-    HAVE_TWS_DEPS = False
-
-
-def lifetime_engagement_stats(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key LIFETIME running totals via ``transformWithStateInPandas``
-    — the Spark 4 replacement for ``applyInPandasWithState`` (typed
-    ValueState, explicit handle, timer support). Each micro-batch emits
-    the key's updated cumulative (n_events, total_value) snapshot.
-
-    State is one (count, sum) pair per key — O(keys), never O(events) —
-    and survives across micro-batches in the state store, so a restart
-    resumes from the checkpoint instead of rescanning history. The
-    pandas body only folds the current batch's rows; shuffle, state
-    routing, and checkpointing are Spark's.
-
-    REQUIRES protobuf at runtime (Spark's TWS state-server protocol) —
-    absent in this container (:data:`HAVE_TWS_DEPS`), so the pytest
-    skips and the `applyInPandasWithState` operators above remain the
-    tested arbitrary-stateful path; this operator documents and
-    exercises the Spark-4 API shape for deployments that have it.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LifetimeStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, v double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._agg.exists():
-                n, v = self._agg.get()
-            else:
-                n, v = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf[value_col].fillna(0.0).sum())
-            self._agg.update((n, v))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(v, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=LifetimeStats(),
-        outputStructType=LIFETIME_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
