@@ -511,7 +511,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (lag + running sum, single shuffle)."""
     events = _t(spark, sf_dir, "events")
     stats = temporal.session_stats(
-        events, "user_id", "ts", gap="30 minutes", tiebreakers=["event_id"]
+        events, "user_id", "ts", tiebreakers=["event_id"]
     )
     return stats.select(
         "user_id",
@@ -1195,7 +1195,6 @@ def q_view_purchase_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_ts="ts",
         right_ts="ts",
         window="1 hour",
-        strict=True,
     )
     per_purchase = matched.groupBy(
         F.col("__l.user_id").alias("user_id"), F.col("__l.event_id").alias("event_id")
@@ -1872,7 +1871,7 @@ def q_session_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence (analytics) with the session as the basket — which
     event types happen together within one user session."""
     events = _t(spark, sf_dir, "events")
-    s = temporal.sessionize(events, "user_id", "ts", "30 minutes", ["event_id"])
+    s = temporal.sessionize(events, "user_id", "ts", ["event_id"])
     items = s.select(
         F.concat_ws("#", F.col("user_id"), F.col("session_id")).alias("sk"),
         "event_type",
@@ -10390,7 +10389,7 @@ def q_sessionized_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce on session_date."""
     events = _t(spark, sf_dir, "events")
     stats = temporal.session_stats(
-        events, "user_id", "ts", gap="30 minutes", tiebreakers=["event_id"]
+        events, "user_id", "ts", tiebreakers=["event_id"]
     )
     per_day = stats.groupBy(
         F.to_date("session_start_ts").alias("session_date")

@@ -67,7 +67,7 @@ def sessionize(events):
     from wistia_video_analytics_project_spark.operators import temporal
 
     return temporal.session_stats(
-        events, "user_id", "ts", "30 minutes", tiebreakers=("event_id",)
+        events, "user_id", "ts", tiebreakers=("event_id",)
     )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from wistia_video_analytics_project_spark.operators import analytics, temporal
@@ -91,6 +92,22 @@ def test_cooccurrence_pairs_unordered_once(spark):
     assert out == {("a", "b"): 2, ("a", "c"): 1, ("b", "c"): 1}
 
 
+def _self_join_cooccurrence(df, max_basket_size=None):
+    """Reference form: self equi-join on the basket key with a < b, each
+    basket first cut to its max_basket_size smallest items."""
+    a = df.select(F.col("basket"), F.col("item").alias("item_a"))
+    if max_basket_size is not None:
+        w = Window.partitionBy("basket").orderBy("item_a")
+        a = a.withColumn("__rn", F.row_number().over(w)).filter(
+            F.col("__rn") <= max_basket_size).drop("__rn")
+    b = a.withColumnRenamed("item_a", "item_b")
+    return {
+        (r.item_a, r.item_b): r["count"]
+        for r in a.join(b, "basket").filter(F.col("item_a") < F.col("item_b"))
+        .groupBy("item_a", "item_b").count().collect()
+    }
+
+
 def test_cooccurrence_strategies_agree_with_duplicates(spark):
     # duplicate item in a basket: (a,a) never pairs, but each duplicate
     # occurrence pairs with other items -> multiplicity 2 for (a,b)
@@ -102,19 +119,13 @@ def test_cooccurrence_strategies_agree_with_duplicates(spark):
         (r.item_a, r.item_b): r.pair_count
         for r in analytics.cooccurrence_pairs(df, "basket", "item").collect()
     }
-    joined = {
-        (r.item_a, r.item_b): r.pair_count
-        for r in analytics.cooccurrence_pairs(
-            df, "basket", "item", strategy="join"
-        ).collect()
-    }
-    assert grouped == joined == {("a", "b"): 2, ("b", "c"): 1}
+    assert grouped == _self_join_cooccurrence(df) == {("a", "b"): 2, ("b", "c"): 1}
 
 
 def test_cooccurrence_max_basket_size_bounds_pairs(spark):
     """Mega-basket guard: a basket of m items contributes at most
     C(cap, 2) pairs, truncation keeps the cap SMALLEST items
-    (deterministic), and both strategies agree under the cap."""
+    (deterministic), and it equals the self-join under the cap."""
     rows = [(1, f"i{k:02d}") for k in range(10)] + [(2, "i00"), (2, "i01")]
     df = spark.createDataFrame(rows, "basket long, item string")
     capped = {
@@ -128,13 +139,7 @@ def test_cooccurrence_max_basket_size_bounds_pairs(spark):
     assert len(capped) == 6
     assert capped[("i00", "i01")] == 2
     assert all(a < "i04" and b < "i04" for a, b in capped)
-    joined = {
-        (r.item_a, r.item_b): r.pair_count
-        for r in analytics.cooccurrence_pairs(
-            df, "basket", "item", strategy="join", max_basket_size=4
-        ).collect()
-    }
-    assert joined == capped
+    assert _self_join_cooccurrence(df, max_basket_size=4) == capped
     # uncapped sanity: the mega-basket alone would emit C(10,2)=45 pairs
     full = analytics.cooccurrence_pairs(df, "basket", "item").count()
     assert full == 45
@@ -155,20 +160,16 @@ def test_preceding_window_join_bounds(spark):
         [
             (1, t0 + dt.timedelta(hours=1)),              # exactly -1h: included
             (1, t0 + dt.timedelta(minutes=90)),           # inside
-            (1, t0 + dt.timedelta(hours=2)),              # == left ts: excluded (strict)
+            (1, t0 + dt.timedelta(hours=2)),              # == left ts: excluded
             (1, t0 + dt.timedelta(minutes=59)),           # older than window
             (2, t0 + dt.timedelta(minutes=110)),          # other key
         ],
         "uid long, ts timestamp",
     )
     n = temporal.preceding_window_join(
-        left, right, ["uid"], "ts", "ts", "1 hour", strict=True
+        left, right, ["uid"], "ts", "ts", "1 hour"
     ).count()
     assert n == 2
-    n_incl = temporal.preceding_window_join(
-        left, right, ["uid"], "ts", "ts", "1 hour", strict=False
-    ).count()
-    assert n_incl == 3
 
 
 def test_funnel_single_pass_matches_sequential(spark):

@@ -75,34 +75,6 @@ def test_train_bpe_matches_reference_exactly(spark):
     assert got_vocab == ref_vocab
 
 
-def test_bpe_encode_roundtrip_and_oov(spark):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(50)
-    merges, wt = bpe.train_bpe(docs, num_merges=10)
-    enc = bpe.bpe_encode(docs, wt)
-    rows = {r.doc_id: r for r in enc.collect()}
-    texts = {
-        r.doc_id: r.text
-        for r in docs.select("doc_id", "text").collect()
-    }
-    for doc_id, r in rows.items():
-        toks = list(r.bpe_tokens)
-        assert r.n_tokens == len(toks)
-        # concatenating tokens and stripping sentinels reconstructs the
-        # normalized text (lossless segmentation)
-        rebuilt = "".join(toks).replace(bpe.EOW, " ").strip()
-        norm = re.sub(r"\s+", " ", texts[doc_id].strip().lower())
-        assert rebuilt == norm, doc_id
-        # every word ends with an EOW-terminated symbol
-        assert toks[-1].endswith(bpe.EOW)
-
-    # OOV word: encoded as raw chars + sentinel, no crash
-    oov = spark.createDataFrame(
-        [(999999, "zzyzxq")], "doc_id long, text string"
-    )
-    [row] = bpe.bpe_encode(oov, wt).collect()
-    assert list(row.bpe_tokens) == ["z", "z", "y", "z", "x", "q", bpe.EOW]
-
-
 def test_merges_frame_shape(spark):
     df = bpe.merges_frame(spark, [("a", "b", 5), ("ab", "c", 3)])
     assert [tuple(r) for r in df.collect()] == [

@@ -271,43 +271,6 @@ def test_doc_novelty_hashed_matches_string_path(spark):
     assert want and got == want
 
 
-def test_dsir_importance_favors_target_language(spark):
-    """Cross-scored LM importance: an English doc scores a higher
-    llr (more target-like) than same-corpus non-English docs on
-    average, and the self-trained path is unchanged by the train_docs
-    parameter default."""
-    from wistia_video_analytics_project_spark.operators import text as text_ops
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    target = docs.filter(F.col("lang") == "en")
-    corpus = {r.doc_id: r.bits_per_token
-              for r in text_ops.lm_bits_per_token(docs).collect()}
-    cross = {r.doc_id: r.bits_per_token
-             for r in text_ops.lm_bits_per_token(
-                 docs, train_docs=target).collect()}
-    assert set(corpus) == set(cross)
-    langs = {r.doc_id: r.lang for r in docs.select("doc_id", "lang").collect()}
-    llr = {d: corpus[d] - cross[d] for d in corpus}
-    import statistics
-
-    en = [v for d, v in llr.items() if langs[d] == "en"]
-    other = [v for d, v in llr.items() if langs[d] != "en"]
-    assert statistics.mean(en) > statistics.mean(other)
-
-
-def test_lm_cross_scoring_rejects_empty_training_corpus(spark):
-    from wistia_video_analytics_project_spark.operators import text as text_ops
-
-    docs = spark.createDataFrame(
-        [(1, "two tokens here")], "doc_id long, text string"
-    )
-    empty_train = spark.createDataFrame(
-        [(9, "one"), (10, None)], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="train_docs"):
-        text_ops.lm_bits_per_token(docs, train_docs=empty_train).collect()
-
-
 def test_readability_known_values(spark, tmp_path):
     """FRE on hand-computable texts: short simple sentences score far
     higher than a long vowel-dense run-on; null/empty rows drop."""

@@ -27,13 +27,6 @@ def test_exact_dedup_finds_synthesized_copies(spark, docs):
     assert flagged.filter("is_canonical AND doc_id >= 10000").count() == 0
 
 
-def test_shingles_short_doc(spark):
-    df = spark.createDataFrame([(1, "one two"), (2, "a b c d")], "doc_id long, text string")
-    got = dedup.shingles(df, n=3).collect()
-    assert all(r.doc_id == 2 for r in got)
-    assert sorted(r.shingle for r in got) == ["a b c", "b c d"]
-
-
 def test_minhash_lsh_recall_vs_exact(spark, docs):
     """Every strongly-similar pair (exact jaccard >= 0.3) must be recalled
     by the 8x4-banded MinHash at threshold 0.1."""
@@ -77,8 +70,30 @@ def test_simhash_identical_and_disjoint(spark):
     assert pairs == {(1, 2): 0}
 
 
+def _self_join_intersections(docs, max_df=None):
+    """Reference pair generation: a shingle self-join over the hashed
+    shingle stream, with stop shingles (df > max_df) removed first.
+    Returns (doc_id_a, doc_id_b, n_common, sza, szb)."""
+    sh = dedup._hashed_shingles(docs, "text", "doc_id", 3)
+    if max_df is not None:
+        hot = (sh.groupBy("shingle").count()
+               .filter(F.col("count") > max_df).select("shingle"))
+        sh = sh.join(hot, "shingle", "left_anti")
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a = sh.withColumnRenamed("doc_id", "doc_id_a")
+    b = sh.withColumnRenamed("doc_id", "doc_id_b")
+    return (
+        a.join(b, "shingle")
+        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        .groupBy("doc_id_a", "doc_id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+        .join(sizes.toDF("doc_id_a", "sza"), "doc_id_a")
+        .join(sizes.toDF("doc_id_b", "szb"), "doc_id_b")
+    )
+
+
 def test_ngram_jaccard_strategies_agree(spark, docs):
-    """Grouped in-place pair generation == streaming self-join, with and
+    """Grouped in-place pair generation == a shingle self-join, with and
     without the max_df guard."""
     for max_df in (None, 50):
         grouped = {
@@ -87,11 +102,14 @@ def test_ngram_jaccard_strategies_agree(spark, docs):
                 docs, threshold=0.1, max_df=max_df
             ).collect()
         }
+        jac = F.round(F.col("n_common").cast("double")
+                      / (F.col("sza") + F.col("szb") - F.col("n_common")), 4)
         joined = {
             (r.doc_id_a, r.doc_id_b): r.jaccard
-            for r in dedup.ngram_jaccard_pairs(
-                docs, threshold=0.1, max_df=max_df, strategy="join"
-            ).collect()
+            for r in _self_join_intersections(docs, max_df)
+            .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
+            .filter(F.col("jaccard") >= 0.1)
+            .collect()
         }
         assert grouped == joined
         assert grouped, "testdata should contain near-duplicate pairs"
@@ -129,7 +147,7 @@ def test_connected_components_chain_converges(spark):
 def test_connected_components_adversarial_chain(spark):
     """Pointer jumping makes a deep chain converge in O(log d) rounds;
     hitting the cap without a fixpoint raises instead of returning
-    silently wrong labels (strict=False keeps split-only partials)."""
+    silently wrong labels."""
     from wistia_video_analytics_project_spark.operators.dedup import (
         connected_components,
     )
@@ -147,16 +165,6 @@ def test_connected_components_adversarial_chain(spark):
     assert set(out.values()) == {0} and len(out) == n + 1
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, "doc_id_a", "doc_id_b", max_iterations=2)
-    partial = {
-        r.node: r.cluster_id
-        for r in connected_components(
-            pairs, "doc_id_a", "doc_id_b", max_iterations=2, strict=False
-        ).collect()
-    }
-    # partial labels only ever SPLIT a component (label = min of some
-    # reachable subset), never merge two components
-    assert all(lbl <= node for node, lbl in partial.items())
-    assert len(set(partial.values())) > 1
 
 
 def test_connected_components_clusters_are_shallow(spark):
@@ -301,7 +309,7 @@ def test_containment_catches_subset_copy_jaccard_misses(spark):
     filler = " ".join(f"w{i} x{i} y{i}" for i in range(60))
     rows = [(1, short), (2, f"{filler} {short} {filler}")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = dedup.containment_pairs(docs, threshold=0.9, max_df=None).collect()
+    got = dedup.containment_pairs(docs, threshold=0.9).collect()
     assert len(got) == 1
     r = got[0]
     assert (r.doc_id_a, r.doc_id_b) == (1, 2)
@@ -309,6 +317,19 @@ def test_containment_catches_subset_copy_jaccard_misses(spark):
     assert r.containment_b_in_a < 0.1    # tiny fraction of the long doc
     jac = dedup.ngram_jaccard_pairs(docs, threshold=0.1).collect()
     assert not jac  # symmetric Jaccard misses the subset copy
+
+
+def test_containment_matches_self_join(spark, docs):
+    """Grouped in-place pair generation behind the max_df guard == a
+    shingle self-join over the same guarded shingles."""
+    got = {(r.doc_id_a, r.doc_id_b, r.containment_a_in_b, r.containment_b_in_a)
+           for r in dedup.containment_pairs(docs, threshold=0.4, max_df=50).collect()}
+    c_ab = F.round(F.col("n_common") / F.col("sza"), 4)
+    c_ba = F.round(F.col("n_common") / F.col("szb"), 4)
+    ref = {tuple(r) for r in _self_join_intersections(docs, max_df=50)
+           .select("doc_id_a", "doc_id_b", c_ab, c_ba)
+           .filter(F.greatest(c_ab, c_ba) >= 0.4).collect()}
+    assert got == ref and got
 
 
 def test_containment_layout_independent(spark, docs):

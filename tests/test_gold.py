@@ -1,16 +1,15 @@
-"""Gold DECIMAL(5,2) boundary: overflow policy, half-up INT, DDL schema.
+"""Gold DECIMAL(5,2) boundary: overflow clamp, half-up INT, DDL schema.
 
 Mirrors the reference's silver→gold type conversion
 (`wistia-Azure-Data-Factory-ETL-Pipeline.json:437-450`,
 ``allowDataTruncation`` at `:204`; gold DDL PDF p.26) with an explicit,
-tested policy instead of silent copy-time truncation.
+tested clamp instead of silent copy-time truncation.
 """
 
 from __future__ import annotations
 
 from decimal import Decimal
 
-import pytest
 from pyspark.sql import functions as F, types as T
 
 from wistia_video_analytics_project_spark.operators import gold
@@ -43,17 +42,6 @@ def test_gold_overflow_clamp_saturates(spark):
     row = gold.to_gold_fact(_fact(spark, 1234.56, -7777.7, 1.0)).collect()[0]
     assert row.play_rate == Decimal("999.99")
     assert row.watched_percent == Decimal("-999.99")
-
-
-def test_gold_overflow_null_policy(spark):
-    row = gold.to_gold_fact(_fact(spark, 1234.56, 12.34, 1.0), overflow="null").collect()[0]
-    assert row.play_rate is None
-    assert row.watched_percent == Decimal("12.34")
-
-
-def test_gold_overflow_bad_policy_raises(spark):
-    with pytest.raises(ValueError, match="overflow"):
-        gold.decimal_5_2("x", overflow="truncate")
 
 
 def test_int_seconds_half_up(spark):

@@ -66,16 +66,6 @@ def test_pca_matches_numpy_eigh(spark):
     np.testing.assert_allclose(comps @ comps.T, np.eye(8), atol=1e-10)
 
 
-def test_projection_matches_numpy(spark):
-    emb, mat = _emb_matrix(spark)
-    _, _, comps = linalg.pca(emb, "embedding", 64, k=4)
-    out = linalg.project(emb, "embedding", comps, out_col="scores")
-    rows = out.select("vec_id", "scores").collect()
-    rows.sort(key=lambda r: r["vec_id"])
-    got = np.array([r["scores"] for r in rows])
-    np.testing.assert_allclose(got, mat @ comps.T, rtol=1e-5, atol=1e-6)
-
-
 def test_pca_reconstruction_improves_with_k(spark):
     """More components never explain less variance."""
     emb, _ = _emb_matrix(spark)

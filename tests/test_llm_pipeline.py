@@ -52,99 +52,6 @@ def test_prepare_training_corpus_dedups(spark):
     assert 900002 not in ids  # under min_tokens: dropped
 
 
-def test_prepare_training_corpus_full_cleaning_flow(spark):
-    """All opt-in stages on: PII scrubbed, boilerplate lines gone,
-    contaminated docs gated out — and the core invariants still hold."""
-    configure_runtime(spark)
-    docs = load_table(spark, SF_SMOKE, "documents").limit(120)
-    footer = "all rights reserved by example corp really truly"
-    dirty = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" reach admin@example.com\n"),
-            F.lit(footer),
-        ),
-    )
-    bench = docs.filter(F.col("doc_id") % 10 == 0)
-    out = prepare_training_corpus(
-        dirty.filter(F.col("doc_id") % 10 != 0),
-        scrub_pii=True,
-        boilerplate_min_df=2,
-        contamination_benchmark=bench,
-        max_contamination=0.5,
-    ).cache()
-    assert out.count() > 0
-    joined = " ".join(r.chunk_text for r in out.collect())
-    assert "admin@example.com" not in joined     # scrubbed
-    assert footer not in joined                  # boilerplate removed
-    assert "<EMAIL>" in joined                   # replacement token kept
-    # doc-granular split still holds after the extra stages
-    straddlers = (
-        out.groupBy("doc_id")
-        .agg(F.countDistinct("split").alias("k"))
-        .filter(F.col("k") > 1)
-        .count()
-    )
-    assert straddlers == 0
-    out.unpersist()
-
-
-def test_perplexity_gate_drops_noise_docs(spark):
-    """max_bits_per_token drops the out-of-domain noise doc while the
-    fluent docs survive to chunking."""
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(i, f"{base} round {i} of the story") for i in range(1, 9)]
-    rows.append((99, "zq9 kxv w0p qrr 7jn mm2 zq1 pf8 ee3 yy4 ab5 cd6"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    ungated = prepare_training_corpus(docs, jaccard_threshold=0.95)
-    # fluent docs score ~2.0 bits on this tiny corpus, the noise doc ~3.5
-    gated = prepare_training_corpus(
-        docs, jaccard_threshold=0.95, max_bits_per_token=3.0
-    )
-    ungated_ids = {r.doc_id for r in ungated.collect()}
-    gated_ids = {r.doc_id for r in gated.collect()}
-    assert 99 in ungated_ids
-    assert 99 not in gated_ids
-    assert gated_ids == ungated_ids - {99}
-
-
-def test_bpe_budgeting_stage(spark):
-    """Opt-in trained-tokenizer budgeting: every chunk carries
-    n_bpe_tokens equal to a direct bpe_encode of its chunk text."""
-    from wistia_video_analytics_project_spark.llm_pipeline import (
-        prepare_training_corpus,
-    )
-    from wistia_video_analytics_project_spark.operators import bpe
-    from wistia_video_analytics_project_spark.sources import load_table
-
-    from conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(40)
-    _, wt = bpe.train_bpe(docs, num_merges=8)
-    out = prepare_training_corpus(
-        docs, chunk_size=20, stride=20, bpe_word_table=wt
-    )
-    rows = out.collect()
-    assert rows and all(r.n_bpe_tokens > 0 for r in rows)
-    # spot-check three chunks against a direct encode
-    import random
-
-    rng = random.Random(7)
-    for r in rng.sample(rows, min(3, len(rows))):
-        one = spark.createDataFrame(
-            [(1, r.chunk_text)], "doc_id long, text string"
-        )
-        [enc] = bpe.bpe_encode(one, wt).collect()
-        assert enc.n_tokens == r.n_bpe_tokens, r.chunk_text
-    # BPE merges mean subword count <= character count, >= word count
-    from wistia_video_analytics_project_spark.operators.text import tokens as _t  # noqa
-    for r in rows:
-        assert r.n_bpe_tokens >= r.n_tokens  # at least one subword per word
-    wt.unpersist()
-
-
 def test_token_burstiness_detects_clumped_tokens(spark):
     from wistia_video_analytics_project_spark.operators import text as t
 

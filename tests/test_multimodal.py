@@ -112,24 +112,16 @@ def test_decoder_callable_contract():
             multimodal.real_decode(GOLDEN, "image")
 
 
-def test_resize_images(spark, assets):
-    out = {r.asset_id: r for r in
-           multimodal.resize_images(assets, max_width=320).collect()}
-    r1 = out[1]  # 640x480 image -> 320x240, payload transformed
-    assert (r1.width, r1.height) == (320, 240)
-    assert bytes(r1.payload) != b"img-bytes-a"
-    # non-image rows and small images pass through untouched
-    assert bytes(out[3].payload) == b"pcm-bytes"
-    assert out[4].width == 1920  # video untouched
-    # deterministic
-    again = {r.asset_id: bytes(r.payload) if r.payload is not None else None
-             for r in multimodal.resize_images(assets.repartition(3), max_width=320).collect()}
-    assert again[1] == bytes(r1.payload)
-
-
 # ---------------------------------------------------------------------------
 # Real decode: BMP / PPM (pure numpy, no codec libraries)
 # ---------------------------------------------------------------------------
+
+
+def _encode_ppm(px) -> bytes:
+    """(h, w, 3) uint8 RGB -> binary PPM (P6) bytes."""
+    h, w = px.shape[:2]
+    return b"P6\n%d %d\n255\n" % (w, h) + px.astype("uint8").tobytes()
+
 
 # 3x2 RGB test image, row-major top-down
 PIXELS = [
@@ -205,23 +197,6 @@ def test_extract_features_uses_real_pixels_for_decodable_payloads(spark):
     assert out[10] == want
     assert out[11] == want  # same content, different container
     assert out[12] == multimodal._fake_decode(b"not-an-image")  # fallback
-
-
-def test_resize_really_resamples_decodable_images(spark):
-    import numpy as np
-
-    # 8x4 gradient PPM: value = x * 32 in every channel
-    px = np.tile((np.arange(8, dtype=np.uint8) * 32)[None, :, None], (4, 1, 3))
-    payload = multimodal.encode_ppm(px)
-    df = spark.createDataFrame(
-        [(1, "image", payload, 8, 4, None, "ppm")], schemas.MEDIA_ASSETS
-    )
-    out = multimodal.resize_images(df, max_width=4).collect()[0]
-    assert (out.width, out.height) == (4, 2)
-    got = multimodal.decode_image(bytes(out.payload))
-    assert got.shape == (2, 4, 3)
-    # nearest-neighbor on a pure-x gradient keeps columns 0,2,4,6
-    assert np.array_equal(got[0, :, 0], np.array([0, 64, 128, 192], np.uint8))
 
 
 def _wav_bytes(freq=440.0, rate=8000, seconds=0.25, channels=1, width=2):
@@ -1736,7 +1711,7 @@ def test_gif_features_match_equivalent_ppm():
     idx = _gif_index_frame(8, 8, seed=1)
     px = np.array(_GIF_PALETTE, dtype=np.uint8)[idx]
     gif_feats = multimodal.real_decode(_gif_bytes([idx]), "image")
-    ppm_feats = multimodal.real_decode(multimodal.encode_ppm(px), "image")
+    ppm_feats = multimodal.real_decode(_encode_ppm(px), "image")
     assert gif_feats == ppm_feats
 
 

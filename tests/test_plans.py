@@ -557,6 +557,22 @@ def test_plan_report_reads_real_plans(spark):
     assert corr["n_nestedloop_joins"] == 0
 
 
+def test_dedup_hot_keys_dropped_before_collect(spark):
+    """max_df: the hot-key blacklist (a LeftAnti join) sits upstream of
+    every collect_list aggregate, so no aggregation buffer ever holds a
+    stop key's full doc list."""
+    for name in ("dedup_ngram_jaccard", "dedup_containment", "dedup_winnow"):
+        lines = plans.executed_plan(entrymod.queries()[name](spark, SF_SMOKE)).splitlines()
+        depth = [len(l) - len(l.lstrip(" :+-")) for l in lines]
+        aggs = [i for i, l in enumerate(lines) if "functions=[collect_list(" in l]
+        assert aggs, name
+        for i in aggs:
+            j = i + 1
+            while j < len(lines) and depth[j] > depth[i]:
+                j += 1
+            assert any("LeftAnti" in l for l in lines[i + 1:j]), (name, "\n".join(lines))
+
+
 def test_containment_no_cartesian_and_partial_agg(spark):
     """dedup_containment: the pair generator is a shingle-keyed
     equi-join (never a cartesian/BNL product), and the intersection

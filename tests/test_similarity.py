@@ -96,41 +96,6 @@ def test_ivf_assign_deterministic(spark, emb):
     assert a == b
 
 
-def test_brute_force_np_agrees_with_builtin(spark, emb):
-    queries = emb.filter("vec_id < 5")
-    builtin = {(r.query_id, r.neighbor_id)
-               for r in similarity.brute_force_topk(queries, emb, k=5).collect()}
-    vectorized = {(r.query_id, r.neighbor_id)
-                  for r in similarity.brute_force_topk_np(queries, emb, k=5).collect()}
-    # identical neighbor sets barring 6th-decimal ties (none in this data)
-    assert vectorized == builtin
-
-
-def test_brute_force_np_large_query_set_falls_back_to_join(spark, emb, monkeypatch):
-    """Query sets over the collect cap must never reach the driver: the
-    operator routes to the distributed join path (no broadcast hint —
-    AQE may still broadcast at toy scale) with identical results."""
-    queries = emb.filter("vec_id < 5")
-    want = {(r.query_id, r.neighbor_id)
-            for r in similarity.brute_force_topk(queries, emb, k=3).collect()}
-    calls = []
-    real = similarity.brute_force_topk
-
-    def spy(*args, **kwargs):
-        calls.append(kwargs)
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(similarity, "brute_force_topk", spy)
-    out = similarity.brute_force_topk_np(queries, emb, k=3, max_query_rows=2)
-    got = {(r.query_id, r.neighbor_id) for r in out.collect()}
-    assert got == want
-    assert calls == [{"broadcast_queries": False}]
-    # under the cap the numpy path runs: no fallback call
-    calls.clear()
-    similarity.brute_force_topk_np(queries, emb, k=3, max_query_rows=100)
-    assert calls == []
-
-
 def test_ivf_lloyd_refinement_runs_and_improves_or_holds(spark, emb):
     """Refined centroids must stay correct (full probe == brute force)
     and partial-probe recall should not collapse vs sampled centroids."""
@@ -263,11 +228,10 @@ def test_ivf_pq_recall_improves_with_nprobe(spark, emb):
 
 
 def test_topk_deterministic_at_score_ties(spark):
-    """Per-batch shortlist truncation must not depend on partition
-    layout at exact score ties (round-2 ADVICE: bare argpartition broke
-    ties arbitrarily). A corpus of many identical vectors ties every
-    score — the survivors must be the lowest neighbor_ids, on any
-    layout."""
+    """Top-k must not depend on partition layout at exact score ties
+    (round-2 ADVICE: bare argpartition broke ties arbitrarily). A corpus
+    of many identical vectors ties every score — the survivors must be
+    the lowest neighbor_ids, on any layout."""
     vec = [1.0, 0.0, 0.0, 0.0]
     corpus_rows = [(i, vec) for i in range(40)]
     corpus = spark.createDataFrame(
@@ -278,7 +242,7 @@ def test_topk_deterministic_at_score_ties(spark):
     def run(c):
         return {
             (r.query_id, r.neighbor_id, r.rnk)
-            for r in similarity.brute_force_topk_np(queries, c, k=5).collect()
+            for r in similarity.brute_force_topk(queries, c, k=5).collect()
         }
 
     want = {(0, n, n) for n in range(1, 6)}  # lowest ids win ties

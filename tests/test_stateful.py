@@ -3,11 +3,9 @@
 from __future__ import annotations
 
 import datetime as dt
-import math
 import os
 import time
 
-import pytest
 from pyspark.sql import types as T
 
 from wistia_video_analytics_project_spark.streaming import jobs, stateful
@@ -39,46 +37,6 @@ def _write_batches(spark, tmp_path, batches):
         .option("recursiveFileLookup", "true")
         .parquet(str(path))
     )
-
-
-def test_running_engagement_score_decays_across_batches(spark, tmp_path):
-    stream = _write_batches(
-        spark,
-        tmp_path,
-        [
-            [(T0, 1, 10.0)],
-            [(T0 + dt.timedelta(hours=1), 1, 4.0)],  # one half-life later
-        ],
-    )
-    out = stateful.running_engagement_score(stream, half_life_s=3600.0)
-    jobs.run_to_memory_sink(out, "scores", output_mode="append")
-    rows = sorted(
-        spark.sql("SELECT * FROM scores").collect(), key=lambda r: r.batch_max_ts
-    )
-    assert [r.n_events for r in rows] == [1, 1]
-    assert rows[0].score == 10.0
-    # 10 decayed by exactly one half-life (=5) plus the new 4
-    assert rows[1].score == pytest.approx(10.0 * 0.5 + 4.0, abs=1e-6)
-
-
-def test_streaming_sessionize_emits_closed_sessions(spark, tmp_path):
-    stream = _write_batches(
-        spark,
-        tmp_path,
-        [
-            [(T0, 1, 1.0), (T0 + dt.timedelta(minutes=10), 1, 1.0)],
-            # 40-min gap since the last event -> closes session 1
-            [(T0 + dt.timedelta(minutes=50), 1, 1.0)],
-        ],
-    )
-    out = stateful.streaming_sessionize(stream, gap_s=1800.0)
-    jobs.run_to_memory_sink(out, "sessions", output_mode="append")
-    rows = spark.sql("SELECT * FROM sessions").collect()
-    assert len(rows) == 1  # only the CLOSED session is emitted
-    r = rows[0]
-    assert r.n_events == 2
-    assert r.session_start == T0
-    assert r.session_end == T0 + dt.timedelta(minutes=10)
 
 
 def test_timeout_sessionize_flushes_and_bounds_state(spark, tmp_path):
@@ -167,14 +125,17 @@ def test_stateful_ops_run_on_rocksdb_state_store(spark, tmp_path):
                 [(T0 + dt.timedelta(minutes=50), 1, 1.0)],
             ],
         )
-        out = stateful.streaming_sessionize(stream, gap_s=1800.0)
+        out = stateful.timeout_sessionize(stream, gap_s=1800.0, watermark="1 hour")
         progress = jobs.run_to_memory_sink(
             out, "sessions_rocksdb", output_mode="append"
         )
         rows = spark.sql("SELECT * FROM sessions_rocksdb").collect()
-        assert len(rows) == 1
-        assert rows[0].n_events == 2
-        assert rows[0].session_start == T0
+        # the T0..T0+10min session is closed by its successor; the
+        # T0+50min one stays open (its timer is past the watermark)
+        assert [
+            (r.user_id, r.closed_by, r.n_events, r.session_end_us - r.session_start_us)
+            for r in rows
+        ] == [(1, "gap", 2, 600_000_000)]
         # a silent fallback to the default HDFS-backed provider must
         # FAIL here: only RocksDB emits rocksdb* custom state metrics
         rocksdb_metrics = {

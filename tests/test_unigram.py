@@ -178,20 +178,3 @@ def test_train_learns_frequent_word_as_piece(spark):
     top_pieces = [p for p, _ in multi[:6]]
     # the dominant 5/6-char words must surface as whole-ish pieces
     assert any(p in ("spark", "engine", "engin", "ngine") for p in top_pieces), multi[:10]
-
-
-def test_unigram_encode_fertility(spark):
-    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    probs, _ = unigram.train_unigram(
-        docs, max_piece_len=3, max_vocab=50, iterations=2
-    )
-    out = {r["doc_id"]: r for r in unigram.unigram_encode(docs, probs).collect()}
-    for did, text in CORPUS:
-        words = text.split()
-        r = out[did]
-        assert r["n_words"] == len(words)
-        assert r["n_pieces"] >= r["n_words"]
-        assert r["n_pieces"] <= sum(len(w) for w in words)
-        assert r["pieces_per_word"] == pytest.approx(
-            round(r["n_pieces"] / r["n_words"], 4)
-        )

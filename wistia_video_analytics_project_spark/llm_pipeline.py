@@ -1,15 +1,15 @@
 """End-to-end training-data preparation: the LLM-pipeline operators
 composed into the standard corpus flow —
 
-    [PII scrub] -> [boilerplate-line removal] -> quality filter
-      -> [contamination gate] -> exact dedup -> near-dup cluster dedup
+    quality filter -> exact dedup -> near-dup cluster dedup
       -> context-window chunking -> deterministic split
 
 Each stage is one of the engine's tested operators; this module only
 wires them, so the composition inherits their scale posture: the only
 shuffles are the dedup groupBys/joins and the CC iterations — filtering,
-scrubbing, chunking, and split assignment are map-only (bracketed stages
-are opt-in).
+chunking, and split assignment are map-only.  The registry runs the
+other cleaning stages (PII scrub, boilerplate lines, contamination,
+perplexity) as operators of their own.
 
 Split hygiene: the train/validation/test bucket is derived from the
 DOCUMENT id, not the chunk, so overlapping chunks of one document can
@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators import cleaning, dedup, text
+from .operators import dedup, text
 
 #: Knuth multiplicative-hash constant (same as the split query binding)
 _SPLIT_PRIME = 2654435761
@@ -39,82 +39,25 @@ def prepare_training_corpus(
     stride: int = 40,
     train_pct: int = 80,
     validation_pct: int = 10,
-    scrub_pii: bool = False,
-    boilerplate_min_df: int | None = None,
-    contamination_benchmark: DataFrame | None = None,
-    max_contamination: float = 0.2,
-    max_bits_per_token: float | None = None,
-    bpe_word_table: DataFrame | None = None,
 ) -> DataFrame:
     """Run the full prep flow; returns one row per chunk with
     (doc_id, chunk_id, chunk_text, n_tokens, split).
 
     Stages:
-    0. (opt-in) PII scrub — redact emails/phones/IPs in place.
-    0b. (opt-in) boilerplate-line removal — drop lines shared by
-       ``boilerplate_min_df``+ docs (C4 cleaning) before anything else
-       sees the text.
     1. quality gate — drop null/blank docs and those under
        ``min_tokens`` whitespace tokens (junk rows poison dedup).
-    1b. (opt-in) contamination gate — drop docs whose distinct-5-gram
-       overlap with ``contamination_benchmark`` exceeds
-       ``max_contamination`` (eval-set decontamination).
-    1c. (opt-in) perplexity gate — drop docs whose corpus-bigram-LM
-       cross-entropy exceeds ``max_bits_per_token`` (CCNet-style: high
-       bits = noise/out-of-domain text).
     2. exact dedup — one canonical row per identical normalized text.
     3. near-dup dedup — Jaccard candidate pairs -> connected components
        -> keep each cluster's canonical member.
     4. chunking — overlapping ``chunk_size``-token windows every
        ``stride`` tokens.
-    4b. (opt-in) trained-tokenizer budgeting — when ``bpe_word_table``
-       (from :func:`operators.bpe.train_bpe`) is given, each chunk also
-       carries ``n_bpe_tokens`` from a broadcast-join encode.
     5. split — ``(doc_id * prime) mod 100`` buckets into
        train / validation / test, document-granular.
     """
-    if scrub_pii:
-        docs = (
-            cleaning.pii_scrub(docs, text_col=text_col)
-            .drop(text_col)
-            .withColumnRenamed(f"{text_col}_scrubbed", text_col)
-            .drop("n_email", "n_phone", "n_ipv4")
-        )
-    if boilerplate_min_df is not None:
-        cleaned = cleaning.remove_boilerplate_lines(
-            docs, min_df=boilerplate_min_df, text_col=text_col, id_col=id_col
-        )
-        docs = docs.drop(text_col).join(
-            cleaned.select(
-                F.col("doc_id").alias(id_col),
-                F.col("text_clean").alias(text_col),
-            ),
-            id_col,
-        )
-
     gated = docs.filter(
         F.col(text_col).isNotNull()
         & (F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= min_tokens)
     )
-
-    if contamination_benchmark is not None:
-        contaminated = (
-            cleaning.ngram_contamination(
-                gated, contamination_benchmark, n=5,
-                text_col=text_col, id_col=id_col,
-            )
-            .filter(F.col("contamination_rate") > max_contamination)
-            .select(F.col("doc_id").alias(id_col))
-        )
-        gated = gated.join(contaminated, id_col, "left_anti")
-
-    if max_bits_per_token is not None:
-        noisy = (
-            text.lm_bits_per_token(gated, text_col=text_col, id_col=id_col)
-            .filter(F.col("bits_per_token") > max_bits_per_token)
-            .select(F.col("doc_id").alias(id_col))
-        )
-        gated = gated.join(noisy, id_col, "left_anti")
 
     exact = dedup.exact_dedup(gated, text_col=text_col, id_col=id_col)
     exact_kept = gated.join(
@@ -132,29 +75,6 @@ def prepare_training_corpus(
         kept, text_col=text_col, id_col=id_col,
         chunk_size=chunk_size, stride=stride,
     )
-
-    if bpe_word_table is not None:
-        # trained-tokenizer budgeting (opt-in): encode each chunk via
-        # the broadcast word->symbols table (operators/bpe.py) — counts
-        # reflect the REAL subword vocabulary, not the whitespace
-        # estimate; OOV chunk words fall back to character tokens
-        from .operators import bpe as _bpe
-
-        # chunk_id is per-document — key the encode on a composite hash
-        keyed = chunks.withColumn(
-            "__ck", F.xxhash64(F.col(id_col), F.col("chunk_id"))
-        )
-        enc = _bpe.bpe_encode(
-            keyed.select(
-                F.col("__ck").alias("doc_id"),
-                F.col("chunk_text").alias("text"),
-            ),
-            bpe_word_table,
-        ).select(
-            F.col("doc_id").alias("__ck"),
-            F.col("n_tokens").alias("n_bpe_tokens"),
-        )
-        chunks = keyed.join(enc, "__ck").drop("__ck")
 
     bucket = (F.col(id_col) * F.lit(_SPLIT_PRIME)) % 100
     split = (

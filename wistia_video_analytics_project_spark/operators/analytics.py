@@ -35,11 +35,9 @@ def enrich(
     dim: DataFrame,
     on: str | Sequence[str],
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """J1: fact ⋈ dim equi-join, dimension broadcast by default."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    """J1: fact ⋈ dim equi-join, dimension broadcast."""
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 # ---------------------------------------------------------------------------
@@ -121,13 +119,11 @@ def rank_in_group(
     order: Sequence[Column],
     keep: int | None = None,
     rank_name: str = "rank",
-    dense: bool = False,
 ) -> DataFrame:
     """W2: ranking within groups ("Top 10 Videos by Plays" per channel).
     ``keep=k`` retains the top k rows per group."""
-    fn = F.dense_rank() if dense else F.rank()
     w = Window.partitionBy(*partition_by).orderBy(*order)
-    out = df.withColumn(rank_name, fn.over(w))
+    out = df.withColumn(rank_name, F.rank().over(w))
     return out.filter(F.col(rank_name) <= keep) if keep is not None else out
 
 
@@ -452,7 +448,6 @@ def cooccurrence_pairs(
     df: DataFrame,
     basket_col: str,
     item_col: str,
-    strategy: str = "grouped",
     max_basket_size: int | None = None,
     distinct_items: bool = False,
 ) -> DataFrame:
@@ -460,43 +455,21 @@ def cooccurrence_pairs(
     appears in the same basket, the number of shared baskets (duplicate
     items count once per occurrence, matching the self-join semantics).
 
-    ``strategy='grouped'`` (default): ONE scan + one shuffle on the
-    basket key; each basket's sorted item array generates its pairs
-    in-place with JVM higher-order functions before the pair-count
-    aggregate. ~25% faster than the join form at sf0.1 and half the
-    scan IO. Per-task memory holds one basket's array — fine while
-    baskets are bounded (cap mega-baskets upstream).
+    ONE scan + one shuffle on the basket key; each basket's sorted item
+    array generates its pairs in place with JVM higher-order functions
+    before the pair-count aggregate. ~25% faster than a self equi-join
+    on the basket key at sf0.1 and half the scan IO. Per-task memory
+    holds one basket's full item array; ``max_basket_size`` caps the
+    pairs it emits.
 
-    ``strategy='join'``: self equi-join on the basket key with
-    ``a < b`` — streams instead of materializing the basket array, the
-    fallback when individual baskets can be pathologically large. Both
-    produce identical results (asserted in tests).
-
-    Either way the pair explosion is bounded by sum(c_i²) over basket
-    sizes; AQE skew handling splits oversized partitions at runtime.
+    The pair explosion is bounded by sum(c_i²) over basket sizes; AQE
+    skew handling splits oversized partitions at runtime.
 
     ``max_basket_size`` is the mega-basket guard (SCALE.md): baskets
     larger than the cap are deterministically truncated to their
     ``max_basket_size`` smallest items (by item sort order), bounding
-    any single basket's pair contribution at C(cap, 2). Truncation is a
-    multiset selection, so both strategies stay result-identical.
+    any single basket's pair contribution at C(cap, 2).
     """
-    if strategy == "join":
-        if distinct_items:
-            df = df.select(basket_col, item_col).distinct()
-        a = df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("item_a"))
-        if max_basket_size is not None:
-            w = Window.partitionBy("__b").orderBy(F.col("item_a").asc())
-            a = (
-                a.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= max_basket_size)
-                .drop("__rn")
-            )
-        b = a.select(F.col("__b"), F.col("item_a").alias("item_b"))
-        pairs = a.join(b, "__b").filter(F.col("item_a") < F.col("item_b"))
-        return pairs.groupBy("item_a", "item_b").agg(
-            F.count(F.lit(1)).alias("pair_count")
-        )
     items = F.array_sort(F.collect_list(F.col(item_col)))
     if max_basket_size is not None:
         items = F.slice(items, 1, max_basket_size)

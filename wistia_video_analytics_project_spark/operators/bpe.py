@@ -1,8 +1,7 @@
 """Distributed BPE tokenizer training (byte-pair-encoding merges).
 
-The LLM-pipeline capability: learn a subword vocabulary from the corpus
-and encode documents with it.  Designed the way production tokenizer
-training actually scales:
+The LLM-pipeline capability: learn a subword vocabulary from the corpus.
+Designed the way production tokenizer training actually scales:
 
 - **One corpus-sized pass, total.**  Training operates on the WORD
   FREQUENCY table (Sennrich et al., 2016 — merges depend only on word
@@ -11,23 +10,13 @@ training actually scales:
   word table (≪ corpus, checkpointed), never the corpus.
 - **Merge decisions are global argmaxes** — each iteration collects
   exactly ONE row (the best pair) to the driver; the symbol rewrite
-  runs distributed as an Arrow-batched pandas UDF over the word table.
-  The UDF is the documented exception to the JVM-only rule: adjacent-
-  pair replacement needs a lookahead fold that Spark's HOFs can't
-  express without quadratic slicing.
+  runs distributed as a JVM ``aggregate`` fold over the word table.
 - **Deterministic**: ties on pair count break lexicographically
   (left, right), so the learned merge sequence is reproducible across
   partitionings and engines (asserted exactly against a pure-Python
   reference implementation in tests/test_bpe.py).
-- **Encoding is a broadcast join**, not a per-token UDF: training
-  already produced the final symbol sequence for every vocab word, so
-  encode = explode words -> broadcast-join the word->symbols table ->
-  reassemble in position order.  OOV words fall back to characters +
-  the end-of-word sentinel (no merges applied — the conservative
-  untrained encoding).
 - For corpora whose word vocab itself is huge, pass ``min_freq`` to
-  drop hapax words from the merge table (standard practice; the
-  dropped words still encode via the OOV fallback).
+  drop hapax words from the merge table (standard practice).
 
 No counterpart in the reference repo (its pipeline stops at engagement
 analytics); this extends the LLM-data-pipeline tier alongside
@@ -37,10 +26,8 @@ budget-counts without training anything.
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .text import tokens
 
@@ -142,7 +129,7 @@ def train_bpe(
     """Learn ``num_merges`` BPE merges.  Returns the ordered merge list
     ``[(left, right, pair_count), ...]`` and the trained word table
     ``(word, freq, symbols)`` whose symbol sequences already reflect
-    every merge (ready for :func:`bpe_encode`'s broadcast join).
+    every merge.
 
     Stops early if no pair occurs more than once (nothing left worth
     merging).
@@ -186,38 +173,6 @@ def train_bpe(
         # constant-size; the final table materializes on first use)
         wt = _apply_merge(wt, left, right).localCheckpoint(eager=False)
     return merges, wt
-
-
-def bpe_encode(
-    docs: DataFrame,
-    word_table: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Encode documents with a trained word table: one broadcast join,
-    position-ordered reassembly, OOV fallback to raw characters.
-    Output: (doc_id, bpe_tokens array<string>, n_tokens)."""
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "word"),
-    ).filter(F.col("word") != "")
-    joined = words.join(
-        F.broadcast(word_table.select("word", "symbols")), "word", "left"
-    ).select(
-        "doc_id",
-        "pos",
-        F.coalesce("symbols", _char_symbols(F.col("word"))).alias("__sym"),
-    )
-    toks = F.flatten(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "__sym"))),
-            lambda x: x["__sym"],
-        )
-    )
-    return joined.groupBy("doc_id").agg(
-        toks.alias("bpe_tokens"),
-        F.size(toks).cast("long").alias("n_tokens"),
-    )
 
 
 def merges_frame(

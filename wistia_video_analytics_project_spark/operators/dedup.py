@@ -8,8 +8,9 @@ ladder, all as DataFrame compositions (no Python in the hot path):
 
 - **exact**      — md5 content fingerprint + hash groupBy. One shuffle on
   a 128-bit key; scales linearly.
-- **n-gram Jaccard** — exact pairwise similarity via a shingle self-join.
-  Quadratic in the worst case — the *oracle/verification* path.
+- **n-gram Jaccard** — exact pairwise similarity from each shingle's
+  grouped doc list. Quadratic in the worst case — the
+  *oracle/verification* path.
 - **MinHash + LSH** — 32 minhash slots, banded into 8×4; only documents
   sharing a band bucket become candidate pairs. The scale path: cost is
   O(docs × shingles) for signatures + a bucket-equi-join; no all-pairs.
@@ -91,27 +92,84 @@ def _shingle_arrays(
     )
 
 
-def shingles(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
+def _pair_counts(
+    keyed: DataFrame, key: str, max_df: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """Group ``(doc_id, key)`` rows (one per distinct pair) into each
+    key's sorted doc list ``__ms``, emit its C(df, 2) ``(a < b)`` pairs
+    in place with array HOFs — one pass, no self-join — and count the
+    keys each pair shares.
 
-    Built with ``sequence``/``slice``/``concat_ws``/``array_distinct``
-    array built-ins — no UDF, and distinct rows without any shuffle
-    (assumes ``id_col`` is unique per row, which every caller's document
-    table guarantees).
-
-    Uses ``explode_outer`` + a cheap null filter instead of ``explode``:
-    plain explode triggers InferFiltersFromGenerate, which pushes a
-    ``size(expr)>0 AND isnotnull(expr)`` scan filter that re-evaluates
-    the ENTIRE shingle lambda per row with the tokenizer inlined inside
-    it — O(tokens²) per doc, interpreted. explode_outer infers no such
-    filter; empty-array docs surface as one null row, dropped post-hoc.
+    Keys with df > ``max_df`` are dropped BEFORE the collect: their
+    df-count blacklist is tiny by definition (≤ rows/max_df entries), so
+    a broadcast ``left_anti`` join removes them without a shuffle of the
+    corpus, and no aggregation buffer ever holds a hot key's doc list.
+    Returns ``(grouped, counts)``: ``grouped`` holds the kept lists and
+    ``counts`` is ``(doc_id_a, doc_id_b, n_common)``.
     """
+    if max_df is not None:
+        hot = (
+            keyed.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .filter(F.col("__df") > max_df)
+            .select(key)
+        )
+        keyed = keyed.join(F.broadcast(hot), key, "left_anti")
+    grouped = keyed.groupBy(key).agg(
+        F.array_sort(F.collect_list("doc_id")).alias("__ms")
+    )
+    pairs = grouped.select(
+        F.explode(
+            F.expr(
+                """
+                flatten(transform(__ms, (x, i) ->
+                  transform(slice(__ms, i + 2, size(__ms)),
+                            y -> struct(x AS a, y AS b))))
+                """
+            )
+        ).alias("__p")
+    ).select("__p.a", "__p.b")
+    counts = pairs.groupBy(
+        F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
+    ).agg(F.count(F.lit(1)).alias("n_common"))
+    return grouped, counts
+
+
+def _hashed_shingles(
+    docs: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """(doc_id, shingle bigint): one row per distinct hashed shingle of
+    each doc.  ``explode_outer`` + a cheap null filter instead of
+    ``explode``: plain explode triggers InferFiltersFromGenerate, which
+    pushes a ``size(expr)>0 AND isnotnull(expr)`` scan filter that
+    re-evaluates the ENTIRE shingle lambda per row with the tokenizer
+    inlined inside it — O(tokens²) per doc, interpreted."""
     return (
         _shingle_arrays(docs, text_col, id_col, n)
-        .select("doc_id", F.explode_outer("__shingles").alias("shingle"))
+        .withColumn("__h", F.expr("transform(__shingles, s -> xxhash64(s))"))
+        .select("doc_id", F.explode_outer("__h").alias("shingle"))
         .filter(F.col("shingle").isNotNull())
+    )
+
+
+def _shingle_overlaps(
+    docs: DataFrame, text_col: str, id_col: str, n: int, max_df: int | None
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, n_common, sza, szb): shared shingles per doc
+    pair plus each doc's shingle count. Sizes come off the grouped frame
+    (shares its exchange; one row per doc — AQE broadcasts it while it
+    fits), so they are post-filter: stop shingles leave the similarity
+    universe entirely."""
+    grouped, counts = _pair_counts(
+        _hashed_shingles(docs, text_col, id_col, n), "shingle", max_df
+    )
+    sizes = (
+        grouped.select(F.explode("__ms").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("sz"))
+    )
+    return counts.join(sizes.toDF("doc_id_a", "sza"), "doc_id_a").join(
+        sizes.toDF("doc_id_b", "szb"), "doc_id_b"
     )
 
 
@@ -122,7 +180,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_df: int | None = None,
-    strategy: str = "grouped",
 ) -> DataFrame:
     """EXACT pairwise n-gram Jaccard (doc_id_a < doc_id_b).
 
@@ -137,126 +194,21 @@ def ngram_jaccard_pairs(
     distinct shingles collide in 64 bits (P ≈ m²/2⁶⁵, and a collision
     can only nudge one pair's n_common by 1).
 
-    ``strategy='grouped'`` (default): groupBy(shingle) collects each
-    shingle's sorted doc list and generates its C(df,2) pairs in-place
-    with array HOFs — ONE corpus pass, the ``max_df`` guard becomes a
-    free ``size(members)`` filter, and the pair stream is exactly the
-    intersection multiset (no join probe overhead). ~6× faster than the
-    self-join at sf0.1. Per-task memory holds one shingle's full doc
-    list: ``max_df`` filters the lists after aggregation, so it bounds
-    the pair output, not the buffer.
-
-    ``strategy='join'``: shingle self-join that streams instead of
-    materializing per-shingle doc lists — the fallback when ``max_df``
-    is None AND individual shingles may be pathologically hot. Both
-    strategies produce identical results (asserted in tests).
+    groupBy(shingle) collects each shingle's sorted doc list and
+    generates its C(df,2) pairs in place (:func:`_pair_counts`) — ONE
+    corpus pass, and the pair stream is exactly the intersection
+    multiset (no join probe overhead); ~6× faster than a shingle
+    self-join at sf0.1. ``max_df`` drops hot shingles before the
+    collect, so it bounds the aggregation buffer as well as the pair
+    output; with ``max_df=None`` one shingle's buffer holds its full
+    doc list.
     """
-    from pyspark.sql import Window
-
-    arr = _shingle_arrays(docs, text_col, id_col, n).withColumn(
-        "__h", F.expr("transform(__shingles, s -> xxhash64(s))")
-    )
     jac = F.col("n_common").cast("double") / (
         F.col("sza") + F.col("szb") - F.col("n_common")
     )
-    if strategy == "grouped":
-        sh = arr.select(
-            "doc_id", F.explode_outer("__h").alias("shingle")
-        ).filter(F.col("shingle").isNotNull())
-        grouped = sh.groupBy("shingle").agg(
-            F.array_sort(F.collect_list("doc_id")).alias("__ms")
-        )
-        if max_df is not None:
-            grouped = grouped.filter(F.size("__ms") <= max_df)
-        pairs = grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(__ms, (x, i) ->
-                      transform(slice(__ms, i + 2, size(__ms)),
-                                y -> struct(x AS a, y AS b))))
-                    """
-                )
-            ).alias("__p")
-        ).select("__p.a", "__p.b")
-        inter = pairs.groupBy(
-            F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
-        ).agg(F.count(F.lit(1)).alias("n_common"))
-        # post-filter doc sizes off the SAME grouped frame (shares its
-        # exchange); one row per doc — AQE broadcasts while it fits,
-        # falls back to a shuffled join beyond that
-        sizes = (
-            grouped.select(F.explode("__ms").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("sz"))
-        )
-        return (
-            inter.join(
-                sizes.select(
-                    F.col("doc_id").alias("doc_id_a"), F.col("sz").alias("sza")
-                ),
-                "doc_id_a",
-            )
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("doc_id_b"), F.col("sz").alias("szb")
-                ),
-                "doc_id_b",
-            )
-            .select("doc_id_a", "doc_id_b", F.round(jac, 4).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    if max_df is None:
-        # |shingles(doc)| straight off the per-doc array — fully narrow.
-        # explode_outer + null filter: see shingles() for why plain
-        # explode is a perf trap here.
-        sh = arr.select(
-            "doc_id",
-            F.size("__h").alias("sz"),
-            F.explode_outer("__h").alias("shingle"),
-        ).filter(F.col("shingle").isNotNull())
-    else:
-        # stop-shingle guard: shingles with df > max_df are heavy
-        # hitters, so the blacklist is tiny by definition (≤ total/max_df
-        # entries) — broadcast anti-join, never a shuffle of the corpus.
-        # Doc sizes are recomputed POST-filter (the stop-shingles are
-        # removed from the Jaccard universe entirely).
-        sh0 = arr.select(
-            "doc_id", F.explode_outer("__h").alias("shingle")
-        ).filter(F.col("shingle").isNotNull())
-        hot = (
-            sh0.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        sh = sh0.join(F.broadcast(hot), "shingle", "left_anti").withColumn(
-            "sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
-    # carrying sz on every row lets the pair aggregation compute Jaccard
-    # directly — no post-agg joins, and BOTH self-join sides are the same
-    # subtree hashed on the same key, so Spark reuses one exchange (one
-    # tokenize/explode pass, not three)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.min(F.col("a.sz")).alias("sza"),
-            F.min(F.col("b.sz")).alias("szb"),
-        )
-    )
     return (
-        inter.select(
-            "doc_id_a",
-            "doc_id_b",
-            F.round(jac, 4).alias("jaccard"),
-        )
+        _shingle_overlaps(docs, text_col, id_col, n, max_df)
+        .select("doc_id_a", "doc_id_b", F.round(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -510,7 +462,6 @@ def connected_components(
     a_col: str,
     b_col: str,
     max_iterations: int = 20,
-    strict: bool = True,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: every node gets
     ``cluster_id`` = the minimum node id reachable through the pair
@@ -527,11 +478,8 @@ def connected_components(
     plan doubles per iteration and the driver, not the data, becomes
     the bottleneck at scale.
 
-    If the fixpoint is NOT reached inside ``max_iterations``,
-    ``strict=True`` (default) raises instead of returning silently
-    wrong labels; ``strict=False`` keeps the partial labels (each
-    cluster may be split into several sub-labels, never merged
-    wrongly).
+    If the fixpoint is NOT reached inside ``max_iterations`` it raises
+    instead of returning silently wrong (split) labels.
 
     Returns (node, cluster_id) for every node appearing in ``pairs``.
     """
@@ -594,14 +542,12 @@ def connected_components(
         if changed == 0:
             break
     else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components did not converge within "
-                f"{max_iterations} iterations — the pair graph has a "
-                f"component of diameter > ~2^{max_iterations}; raise "
-                f"max_iterations or pass strict=False to accept "
-                f"partial (split, never wrongly merged) labels"
-            )
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"{max_iterations} iterations — the pair graph has a "
+            f"component of diameter > ~2^{max_iterations}; raise "
+            f"max_iterations"
+        )
     return labels.select(F.col("src").alias("node"), F.col("lbl").alias("cluster_id"))
 
 
@@ -682,47 +628,26 @@ def winnow_candidate_pairs(
     same way ``max_df`` guards the shingle strategies, so pair volume
     is bounded by Σ C(df≤max_df, 2) per fingerprint — never all-pairs.
 
-    r14: grouped in-place pair generation (the ``ngram_jaccard_pairs``
-    /``containment_pairs`` strategy) — groupBy(fp) collects each
-    fingerprint's sorted doc list, keeps the lists with
-    ``2 <= size <= max_df`` and emits their C(df, 2) pairs with array
-    HOFs.  The ``max_df`` filter bounds the OUTPUT, not the aggregation
-    buffer: each fingerprint's buffer holds its full doc list before the
-    filter runs, so memory per fingerprint is bounded only by the
-    corpus's fingerprint document-frequency distribution.  ONE pass
-    over the fingerprint stream instead of the previous df-count +
-    join-back + self-join, which re-derived the
-    md5 explode subtree three times; row-identical because
-    ``winnow_fingerprints`` emits each (doc_id, fp) once
-    (``array_distinct`` per doc), so each fp's doc list is a set.
+    Grouped in-place pair generation (:func:`_pair_counts`, shared
+    with ``ngram_jaccard_pairs``/``containment_pairs``): hot
+    fingerprints (df > ``max_df``) are dropped by a broadcast anti-join
+    BEFORE groupBy(fp) collects each fingerprint's sorted doc list, so
+    no aggregation buffer holds more than ``max_df`` docs; the C(df, 2)
+    pairs come off the lists with array HOFs. Row-identical to a
+    self-join because ``winnow_fingerprints`` emits each (doc_id, fp)
+    once (``array_distinct`` per doc), so each fp's doc list is a set.
     """
-    e = winnow_fingerprints(docs, k, w, text_col, id_col)
-    grouped = (
-        e.groupBy("fp")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("__ms"))
-        .filter((F.size("__ms") >= 2) & (F.size("__ms") <= max_df))
+    _, counts = _pair_counts(
+        winnow_fingerprints(docs, k, w, text_col, id_col), "fp", max_df
     )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                """
-                flatten(transform(__ms, (x, i) ->
-                  transform(slice(__ms, i + 2, size(__ms)),
-                            y -> struct(x AS a, y AS b))))
-                """
-            )
-        ).alias("__p")
-    ).select("__p.a", "__p.b")
-    return pairs.groupBy(
-        F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
-    ).agg(F.count(F.lit(1)).alias("n_shared"))
+    return counts.withColumnRenamed("n_common", "n_shared")
 
 
 def containment_pairs(
     docs: DataFrame,
     threshold: float = 0.4,
     n: int = 3,
-    max_df: int | None = 100,
+    max_df: int = 100,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -733,70 +658,16 @@ def containment_pairs(
     (diluted by the long doc's size), so a Jaccard-threshold dedup
     misses it.
 
-    Same scale shape as the Jaccard path: hashed shingles, ``max_df``
-    stop-shingle guard bounding join fan-out, one intersection
-    aggregate; emits pairs where either direction reaches
+    Same scale shape as the Jaccard path: hashed shingles, the
+    ``max_df`` stop-shingle guard applied before the collect, grouped
+    in-place pair generation (:func:`_pair_counts`) and one
+    intersection aggregate; emits pairs where either direction reaches
     ``threshold``.
-
-    r13: with ``max_df`` set this uses the SAME grouped in-place
-    pair generation as :func:`ngram_jaccard_pairs` ``strategy=
-    'grouped'`` — groupBy(shingle) collects each shingle's sorted doc
-    list (bounded by ``max_df``) and emits its C(df,2) pairs with
-    array HOFs, ONE corpus pass instead of the shingle self-join that
-    re-derived the explode subtree three times (the ~6x sf0.1 win
-    measured for the Jaccard port in round 3 applies identically).
-    ``max_df=None`` keeps the streaming self-join (a pathologically
-    hot shingle must not materialize its whole doc list in one
-    aggregation state).  Both shapes produce identical pairs.
     """
-    arr = _shingle_arrays(docs, text_col, id_col, n).withColumn(
-        "__h", F.expr("transform(__shingles, s -> xxhash64(s))")
-    )
-    sh = arr.select(
-        "doc_id", F.explode_outer("__h").alias("shingle")
-    ).filter(F.col("shingle").isNotNull())
-    if max_df is not None:
-        grouped = sh.groupBy("shingle").agg(
-            F.array_sort(F.collect_list("doc_id")).alias("__ms")
-        ).filter(F.size("__ms") <= max_df)
-        pairs = grouped.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(__ms, (x, i) ->
-                      transform(slice(__ms, i + 2, size(__ms)),
-                                y -> struct(x AS a, y AS b))))
-                    """
-                )
-            ).alias("__p")
-        ).select("__p.a", "__p.b")
-        inter = pairs.groupBy(
-            F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
-        ).agg(F.count(F.lit(1)).alias("n_common"))
-        # post-filter doc sizes off the SAME grouped frame (shares its
-        # exchange), exactly as the Jaccard grouped path does
-        sizes = (
-            grouped.select(F.explode("__ms").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("sz"))
-        )
-    else:
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-        a = sh.select(F.col("doc_id").alias("doc_id_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_id_b"), "shingle")
-        inter = (
-            a.join(b, ["shingle"])
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .groupBy("doc_id_a", "doc_id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("sz").alias("__sza"))
-    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("sz").alias("__szb"))
-    c_ab = F.round(F.col("n_common") / F.col("__sza"), 4)
-    c_ba = F.round(F.col("n_common") / F.col("__szb"), 4)
+    c_ab = F.round(F.col("n_common") / F.col("sza"), 4)
+    c_ba = F.round(F.col("n_common") / F.col("szb"), 4)
     return (
-        inter.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
+        _shingle_overlaps(docs, text_col, id_col, n, max_df)
         .select(
             "doc_id_a",
             "doc_id_b",
@@ -899,7 +770,7 @@ def duplicated_spans(
     transform — referencing the raw ``tokens()`` expression inside the
     lambda re-ran the regex split once PER POSITION (measured 3.2 s →
     0.5 s for the span build alone at sf0.1; the same trap
-    ``shingles()`` documents for InferFiltersFromGenerate)."""
+    ``_hashed_shingles()`` documents for InferFiltersFromGenerate)."""
     words = F.col("__toks")
 
     def span_stream(expr):
@@ -1002,7 +873,7 @@ def q_dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Headline binding runs the SCALE path: ``max_df=100`` drops
     stop-shingles (boilerplate n-grams shared by >100 docs) before the
-    self-join, bounding every shingle's join fan-out. The unguarded
+    grouped collect, bounding every shingle's pair fan-out. The unguarded
     exact path (``max_df=None``) stays as the recall oracle in
     tests/test_dedup.py; the DuckDB oracle below mirrors the guard, so
     this entry remains fully value-checked."""

@@ -14,10 +14,8 @@ silent:
 
 - doubles are cast to ``DECIMAL(5,2)`` (HALF_UP at 2 decimals, exactly
   what the SQL target stores);
-- out-of-range values (|x| > 999.99) follow a declared ``overflow``
-  policy — ``"clamp"`` (saturate to ±999.99, the default: an ADF
-  truncation-style load that never drops a PK row) or ``"null"``
-  (out-of-range becomes NULL so downstream audits can count them);
+- out-of-range values (|x| > 999.99) are clamped to ±999.99 — the
+  ADF truncation-style load, which never drops a PK row;
 - integer seconds use half-up ``floor(x + 0.5)`` — bit-exact across
   engines, unlike engine-native double→int casts (Spark truncates,
   most SQL engines round).
@@ -34,19 +32,13 @@ from pyspark.sql import Column, DataFrame, functions as F
 DECIMAL_5_2_MAX = 999.99
 
 
-def decimal_5_2(col: Column | str, overflow: str = "clamp") -> Column:
-    """Cast a double column to the gold ``DECIMAL(5,2)`` with an explicit
-    overflow policy (``"clamp"`` saturates to ±999.99; ``"null"`` maps
-    out-of-range to NULL). Plain-cast semantics (HALF_UP rounding) for
-    in-range values — parity with ``CAST(x AS DECIMAL(5,2))`` in the SQL
-    target."""
+def decimal_5_2(col: Column | str) -> Column:
+    """Cast a double column to the gold ``DECIMAL(5,2)``, clamping
+    out-of-range values to ±999.99. Plain-cast semantics (HALF_UP
+    rounding) for in-range values — parity with
+    ``CAST(x AS DECIMAL(5,2))`` in the SQL target."""
     c = F.col(col) if isinstance(col, str) else col
-    if overflow == "clamp":
-        c = F.least(F.greatest(c, F.lit(-DECIMAL_5_2_MAX)), F.lit(DECIMAL_5_2_MAX))
-    elif overflow == "null":
-        c = F.when(F.abs(c) <= F.lit(DECIMAL_5_2_MAX), c)
-    else:
-        raise ValueError(f"overflow must be 'clamp' or 'null', got {overflow!r}")
+    c = F.least(F.greatest(c, F.lit(-DECIMAL_5_2_MAX)), F.lit(DECIMAL_5_2_MAX))
     return c.cast("decimal(5,2)")
 
 
@@ -63,7 +55,6 @@ def to_gold_fact(
     rate_col: str = "play_rate",
     pct_col: str = "avg_percent_watched",
     watch_col: str = "total_watch_time_seconds",
-    overflow: str = "clamp",
 ) -> DataFrame:
     """Silver ``fact_media_engagement`` -> the gold DDL view (PDF p.26).
 
@@ -76,8 +67,8 @@ def to_gold_fact(
     instead of doubles.
     """
     return (
-        fact.withColumn(rate_col, decimal_5_2(rate_col, overflow))
-        .withColumn(pct_col, decimal_5_2(pct_col, overflow))
+        fact.withColumn(rate_col, decimal_5_2(rate_col))
+        .withColumn(pct_col, decimal_5_2(pct_col))
         .withColumn(watch_col, int_seconds(watch_col))
         .withColumnRenamed(pct_col, "watched_percent")
         .withColumnRenamed(watch_col, "total_watch_time")

@@ -124,24 +124,6 @@ def pca(df: DataFrame, vec_col: str, dim: int, k: int):
     return top_vals, ratios, comps
 
 
-def project(df: DataFrame, vec_col: str, components: np.ndarray,
-            out_col: str = "scores") -> DataFrame:
-    """Project each vector onto the given ``(k, dim)`` components —
-    pure JVM ``zip_with``/``aggregate`` dot products against literal
-    component arrays (broadcast by the plan), no UDF."""
-    scores = []
-    for comp in components:
-        lit = F.array(*[F.lit(float(x)) for x in comp])
-        scores.append(
-            F.aggregate(
-                F.zip_with(F.col(vec_col), lit, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    return df.withColumn(out_col, F.array(*scores))
-
-
 def zca_whiten(
     df: DataFrame,
     vec_col: str,
@@ -496,8 +478,8 @@ def logistic_margin(
     out_col: str = "margin",
 ) -> DataFrame:
     """Decision margin ``w·x + b`` per row — pure JVM ``zip_with`` +
-    ``aggregate`` against literal weights (the :func:`project` pattern):
-    scoring shuffles nothing and runs no Python."""
+    ``aggregate`` against literal weights: scoring shuffles nothing and
+    runs no Python."""
     lit_w = F.array(*[F.lit(float(v)) for v in np.asarray(weights)])
     dot = F.aggregate(
         F.zip_with(F.col(vec_col), lit_w, lambda a, b: a * b),

@@ -16,9 +16,7 @@ baseline/extended sequential (SOF0/SOF1) AND progressive (SOF2,
 spectral selection + successive approximation), grayscale or YCbCr at
 any sampling incl. 4:2:0, restart markers — huffman-decodes + IDCTs in
 pure numpy (:func:`_decode_jpeg`) — into actual pixel arrays, which
-featurize (:func:`_pixel_features`) and resample
-(:func:`resize_images`, nearest-neighbor + PPM re-encode) from real
-content. Audio decodes natively too: WAV through a hand-parsed RIFF
+featurize (:func:`_pixel_features`) from real content. Audio decodes natively too: WAV through a hand-parsed RIFF
 reader (integer PCM, IEEE float, G.711 mu-law/A-law, IMA ADPCM)
 and FLAC through a pure-Python subset decoder (:func:`_decode_flac`:
 rice residuals, FIXED + LPC predictors, all four stereo assignments,
@@ -2246,68 +2244,3 @@ def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
         )
         .select("asset_id", "frame_ms", "payload")
     )
-
-
-RESIZE_SCHEMA = (
-    "asset_id long, media_type string, payload binary, width int, height int"
-)
-
-
-def encode_ppm(px) -> bytes:
-    """(h, w, 3) uint8 RGB -> binary PPM (P6) bytes — the dependency-free
-    re-encode target for resized images."""
-    h, w = px.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + px.astype("uint8").tobytes()
-
-
-def resize_images(
-    assets: DataFrame, max_width: int = 256, batch_hint: int | None = None
-) -> DataFrame:
-    """Resize: image payloads wider than ``max_width`` are scaled to it
-    (aspect preserved). Natively decodable payloads (BMP/PPM/PNG) get a REAL
-    nearest-neighbor resample and re-encode as PPM P6; other formats use
-    the deterministic stub transform (payload re-hashed with the target
-    size) until codec libraries exist.
-    """
-    import hashlib as _hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": [],
-                   "width": [], "height": []}
-            for row in pdf.itertuples(index=False):
-                w, h, payload = row.width, row.height, row.payload
-                if (row.media_type == "image" and payload is not None
-                        and w and w > max_width):
-                    px = decode_image(bytes(payload))
-                    if px is not None:
-                        ih, iw = px.shape[:2]
-                        new_w = max_width
-                        new_h = max(int(ih * max_width / iw), 1)
-                        # nearest-neighbor index maps (deterministic)
-                        ys = (np.arange(new_h) * ih // new_h).clip(0, ih - 1)
-                        xs = (np.arange(new_w) * iw // new_w).clip(0, iw - 1)
-                        payload = encode_ppm(px[ys][:, xs])
-                        w, h = new_w, new_h
-                    else:
-                        scale = max_width / w
-                        new_w = max_width
-                        new_h = max(int(h * scale), 1) if h else None
-                        # stub transform: deterministic payload derived
-                        # from (content, target size)
-                        payload = _hashlib.sha256(
-                            bytes(payload) + f":{new_w}x{new_h}".encode()
-                        ).digest()
-                        w, h = new_w, new_h
-                for k, v in (("asset_id", row.asset_id),
-                             ("media_type", row.media_type),
-                             ("payload", payload), ("width", w), ("height", h)):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return assets.select(
-        "asset_id", "media_type", "payload", "width", "height"
-    ).mapInPandas(run, schema=RESIZE_SCHEMA)

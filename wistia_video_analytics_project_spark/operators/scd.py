@@ -54,7 +54,6 @@ def scd2_apply(
     key: str,
     tracked: Sequence[str],
     effective_ts: Column,
-    broadcast_updates: bool = True,
 ) -> DataFrame:
     """Apply an update batch to an SCD2 dimension; returns the new table.
 
@@ -72,9 +71,7 @@ def scd2_apply(
             "include them in `tracked` or drop them"
         )
 
-    upd = updates.select(key, *tracked).alias("u")
-    if broadcast_updates:
-        upd = F.broadcast(upd)
+    upd = F.broadcast(updates.select(key, *tracked).alias("u"))
 
     closed_rows = dim.filter(~F.col("is_current"))
     open_rows = dim.filter(F.col("is_current")).alias("c")

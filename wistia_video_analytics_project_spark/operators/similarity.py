@@ -74,7 +74,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
     label_col: str | None = None,
 ) -> DataFrame:
     """Top-k corpus neighbors per query vector by cosine similarity.
@@ -83,11 +82,6 @@ def brute_force_topk(
     rank with a per-query window. Similarity is rounded to 6 decimals
     BEFORE ranking, with the neighbor id as tiebreaker, so the result set
     is deterministic and engine-comparable.
-
-    ``broadcast_queries=False`` drops the broadcast hint for query sets
-    too large to ship to every executor — Spark then plans a distributed
-    cartesian join; the O(|Q|·|C|) work is inherent to brute force, but
-    neither side ever materializes on one node.
 
     ``label_col`` switches to hard-negative semantics: only corpus
     vectors whose label DIFFERS from the query's are candidates (the
@@ -104,7 +98,6 @@ def brute_force_topk(
     c = corpus.select(*c_cols)
     from pyspark.sql import Window
 
-    q_side = F.broadcast(q) if broadcast_queries else q
     if label_col is None:
         cond = F.col("query_id") != F.col("neighbor_id")
         out_cols = ["query_id", "neighbor_id"]
@@ -116,7 +109,7 @@ def brute_force_topk(
             "neighbor_id",
             F.col("__cl").alias("neighbor_label"),
         ]
-    scored = c.join(q_side, cond).select(
+    scored = c.join(F.broadcast(q), cond).select(
         *out_cols,
         F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine_sim"),
     )
@@ -236,7 +229,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query vector,
     the top-``k`` most-similar corpus vectors whose LABEL differs —
@@ -252,7 +244,6 @@ def hard_negatives(
         k=k,
         id_col=id_col,
         vec_col=vec_col,
-        broadcast_queries=broadcast_queries,
         label_col=label_col,
     )
 
@@ -401,82 +392,6 @@ def ann_lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rnk")
-    )
-
-
-def brute_force_topk_np(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_query_rows: int = 100_000,
-) -> DataFrame:
-    """Vectorized brute-force top-k: the query matrix is collected
-    driver-side (small by contract), closed over into a ``mapInPandas``
-    operator, and each corpus Arrow batch is scored with one numpy
-    matmul + per-batch partial top-k; a final per-query window merges
-    partial winners.
-
-    ~10-50x less per-row overhead than the expression-tree cosine at
-    large |corpus|; float summation order differs from the sequential
-    built-in path, so this variant is for serving, not oracle checks
-    (ties at the 6th decimal can rank differently).
-
-    The small-by-contract bound is ENFORCED: query sets larger than
-    ``max_query_rows`` are never collected — the operator falls back to
-    the fully distributed join path (:func:`brute_force_topk` without
-    the broadcast hint), so a mis-sized call degrades to a slower plan
-    instead of a driver OOM.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    if queries.limit(max_query_rows + 1).count() > max_query_rows:
-        return brute_force_topk(
-            queries, corpus, k, id_col, vec_col, broadcast_queries=False
-        )
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qmat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cmat = np.vstack(pdf[vec_col].map(np.asarray).values).astype(np.float64)
-            cnorm = np.linalg.norm(cmat, axis=1)
-            cnorm[cnorm == 0] = 1.0
-            sims = (qmat @ cmat.T) / qnorm[:, None] / cnorm[None, :]
-            nids = pdf[id_col].values
-            out_q, out_n, out_s = [], [], []
-            kk = min(k + 1, sims.shape[1])  # +1 allows dropping self-match
-            for qi in range(len(qids)):
-                # lexsort, not argpartition: at exact score ties the
-                # shortlist must not depend on partition layout —
-                # (sim desc, neighbor_id asc) mirrors the global re-rank
-                idx = np.lexsort((nids, -sims[qi]))[:kk]
-                out_q.extend([qids[qi]] * len(idx))
-                out_n.extend(nids[idx])
-                out_s.extend(np.round(sims[qi][idx], 6))
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine_sim": out_s}
-            )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cosine_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        partial.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine_sim", "rnk")
     )
@@ -807,7 +722,8 @@ def pq_topk(
             out_q, out_n, out_s = [], [], []
             kk = min(k + 1, sims.shape[1])
             for qi in range(len(qids)):
-                # deterministic at score ties (see brute_force_topk_np)
+                # lexsort, not argpartition: at exact score ties the
+                # shortlist must not depend on partition layout
                 idx = np.lexsort((nids, -sims[qi]))[:kk]
                 out_q.extend([qids[qi]] * len(idx))
                 out_n.extend(nids[idx])

@@ -41,7 +41,6 @@ def cms_build(
     key_col: str,
     depth: int = DEFAULT_DEPTH,
     width: int = DEFAULT_WIDTH,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Count-min sketch table: (row, bucket, cnt), at most depth*width
     rows. One explode (x depth) + one groupBy."""
@@ -51,11 +50,10 @@ def cms_build(
         )
         for d in range(depth)
     ]
-    w = F.col(weight_col) if weight_col else F.lit(1)
     return (
-        df.select(F.explode(F.array(*rows)).alias("rb"), w.alias("__w"))
+        df.select(F.explode(F.array(*rows)).alias("rb"))
         .groupBy(F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
-        .agg(F.sum("__w").alias("cnt"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 

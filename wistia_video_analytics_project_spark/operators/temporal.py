@@ -16,9 +16,7 @@ implemented with the union + last-ignorenulls window trick —
 
 Cost: ONE hash shuffle on the join keys + a per-key sort — same
 asymptotics as a sort-merge join, no range explosion, no per-key
-driver loop. This is the 100 TB form; ``pd.merge_asof`` via
-``applyInPandas`` (also provided, :func:`as_of_join_pandas`) is the
-per-group alternative when per-key data fits in memory.
+driver loop — the 100 TB form.
 
 **Sessionization**: lag-gap + running sum — two windows over one
 partitioning, single shuffle.
@@ -28,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -39,23 +37,12 @@ def as_of_join(
     left_ts: str,
     right_ts: str,
     right_cols: Sequence[str] | None = None,
-    tolerance: Column | None = None,
-    direction: str = "backward",
 ) -> DataFrame:
-    """For each left row: columns of the as-of right row with equal keys
-    (pandas ``merge_asof`` parity, all three directions, inclusive):
+    """For each left row: columns of the latest right row with equal keys
+    and ``rts <= lts`` (pandas ``merge_asof`` backward parity, inclusive).
 
-    - ``backward`` (default): latest right row with ``rts <= lts``;
-    - ``forward``: earliest right row with ``rts >= lts``;
-    - ``nearest``: whichever of the two is closer in time, ties going
-      to the backward match (deterministic).
-
-    Unmatched left rows keep NULLs. ``tolerance``: optional max time
-    distance (e.g. ``F.expr("INTERVAL 7 DAYS")``); farther matches are
-    nulled out. Single sort-window pass per direction — never a range
-    join."""
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(f"unknown direction {direction!r}")
+    Unmatched left rows keep NULLs. Single sort-window pass — never a
+    range join."""
     on = list(on)
     right_cols = [c for c in (right_cols or right.columns) if c not in on and c != right_ts]
     clashes = set(right_cols) & set(left.columns)
@@ -85,96 +72,12 @@ def as_of_join(
         .orderBy(F.col("__ts").asc(), F.col("__src").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # reversed tiebreak: left first at equal ts -> inclusive at-or-after
-    w_fwd = (
-        Window.partitionBy(*on)
-        .orderBy(F.col("__ts").asc(), F.col("__src").desc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    filled = unioned
-    if direction in ("backward", "nearest"):
-        filled = filled.withColumn(
-            "__mb", F.last("__rpay", ignorenulls=True).over(w_back)
-        )
-    if direction in ("forward", "nearest"):
-        filled = filled.withColumn(
-            "__mf", F.first("__rpay", ignorenulls=True).over(w_fwd)
-        )
-    if direction == "backward":
-        filled = filled.withColumn("__match", F.col("__mb"))
-    elif direction == "forward":
-        filled = filled.withColumn("__match", F.col("__mf"))
-    else:
-        # integer micros, never timestamp->double (CLAUDE.md: double
-        # casts round micros and can invert nearest at µs scale)
-        lts_us = F.unix_micros(F.col("__ts").cast("timestamp"))
-        back_dist = lts_us - F.unix_micros(F.col("__mb.__rts"))
-        fwd_dist = F.unix_micros(F.col("__mf.__rts")) - lts_us
-        filled = filled.withColumn(
-            "__match",
-            F.when(F.col("__mb").isNull(), F.col("__mf"))
-            .when(F.col("__mf").isNull(), F.col("__mb"))
-            # tie -> backward (<=)
-            .when(back_dist <= fwd_dist, F.col("__mb"))
-            .otherwise(F.col("__mf")),
-        )
-    out = filled.filter(F.col("__src") == 1)
-    if tolerance is not None:
-        # two-sided bound covers every direction: backward matches have
-        # rts <= lts (upper bound vacuous), forward the reverse
-        lts = F.col("__ts").cast("timestamp")
-        out = out.withColumn(
-            "__match",
-            F.when(
-                (F.col("__match.__rts") >= lts - tolerance)
-                & (F.col("__match.__rts") <= lts + tolerance),
-                F.col("__match"),
-            ),
-        )
-    keep = [c for c in left.columns]
+    out = unioned.withColumn(
+        "__match", F.last("__rpay", ignorenulls=True).over(w_back)
+    ).filter(F.col("__src") == 1)
     return out.select(
-        *keep,
+        *left.columns,
         *[F.col(f"__match.{c}").alias(c) for c in right_cols],
-    )
-
-
-def as_of_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_cols: Sequence[str],
-) -> DataFrame:
-    """Per-group ``pd.merge_asof`` via applyInPandas — the alternative
-    when per-key slices fit executor memory and pandas' tolerance /
-    direction options are wanted. Cogroups both sides on the key: one
-    shuffle each side."""
-    import pandas as pd
-
-    clashes = set(right_cols) & set(left.columns)
-    if clashes:
-        raise ValueError(
-            f"right columns {sorted(clashes)} collide with left columns — "
-            "rename or restrict right_cols"
-        )
-    out_schema = left.schema.simpleString()[7:-1] + ", " + ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in right.schema.fields
-        if f.name in right_cols
-    )
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        l_sorted = l_pdf.sort_values(left_ts)
-        r_sorted = r_pdf[[right_ts, *right_cols]].sort_values(right_ts)
-        return pd.merge_asof(
-            l_sorted, r_sorted, left_on=left_ts, right_on=right_ts, direction="backward"
-        ).drop(columns=[right_ts] if right_ts not in right_cols else [])
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
     )
 
 
@@ -185,12 +88,10 @@ def preceding_window_join(
     left_ts: str,
     right_ts: str,
     window: str = "1 hour",
-    strict: bool = True,
 ) -> DataFrame:
     """Interval/range join: pair each left row with every right row that
     shares the equi-keys and falls in the preceding time window
-    ``[left.ts - window, left.ts)`` (``strict=False`` closes the upper
-    bound).
+    ``[left.ts - window, left.ts)``.
 
     Spark plans this as an equi-join on ``on`` with the range predicate
     evaluated inside the join — one shuffle per side, co-partitioned on
@@ -208,8 +109,7 @@ def preceding_window_join(
         )
     iv = F.expr(f"INTERVAL {window}")
     l_ts, r_ts = F.col(f"__l.{left_ts}"), F.col(f"__r.{right_ts}")
-    upper = (r_ts < l_ts) if strict else (r_ts <= l_ts)
-    cond = (r_ts >= l_ts - iv) & upper
+    cond = (r_ts >= l_ts - iv) & (r_ts < l_ts)
     for k in on:
         cond = cond & (F.col(f"__l.{k}") == F.col(f"__r.{k}"))
     return left.alias("__l").join(right.alias("__r"), cond, "inner")
@@ -222,12 +122,11 @@ def binned_range_join(
     right_ts: str,
     window_seconds: int,
     on: Sequence[str] = (),
-    strict: bool = True,
 ) -> DataFrame:
     """Keyless-capable interval join via time binning: pair each left
     row with right rows where ``right_ts`` lies in the preceding
-    ``[left_ts - window, left_ts)`` (``strict=False`` closes the upper
-    bound). Optional ``on`` equi-keys compose with the bin key.
+    ``[left_ts - window, left_ts)``. Optional ``on`` equi-keys compose
+    with the bin key.
 
     The scale trick Spark lacks natively: bin both sides by
     ``floor(ts / window)``; a window of length W can only span TWO
@@ -248,8 +147,7 @@ def binned_range_join(
     l_bin = F.expr(f"unix_micros({left_ts}) div {w_us}")
     lb = left.withColumn("__bin", F.explode(F.array(l_bin, l_bin - 1)))
     rb = right.withColumn("__bin", F.expr(f"unix_micros({right_ts}) div {w_us}"))
-    upper = (r_us < l_us) if strict else (r_us <= l_us)
-    cond = (F.col("__l.__bin") == F.col("__r.__bin")) & upper & (
+    cond = (F.col("__l.__bin") == F.col("__r.__bin")) & (r_us < l_us) & (
         r_us >= l_us - F.lit(w_us)
     )
     for k in on:
@@ -308,15 +206,18 @@ def interpolate_linear(
     return df.withColumn(out, filled)
 
 
+#: inactivity gap that closes a session (the web-analytics convention)
+SESSION_GAP = "30 minutes"
+
+
 def sessionize(
     events: DataFrame,
     entity_col: str,
     ts_col: str,
-    gap: Column | str = "30 minutes",
     tiebreakers: Sequence[str] = (),
 ) -> DataFrame:
     """Assign session ids: a new session starts when the gap since the
-    entity's previous event exceeds ``gap``.
+    entity's previous event exceeds ``SESSION_GAP``.
 
     lag + conditional flag + running sum over one (entity, ts) window —
     single shuffle on the entity key. Output adds ``session_id``
@@ -325,11 +226,10 @@ def sessionize(
     the window order — and therefore the session assignment — is
     deterministic.
     """
-    gap_interval = F.expr(f"INTERVAL {gap}") if isinstance(gap, str) else gap
     w = Window.partitionBy(entity_col).orderBy(ts_col, *tiebreakers)
     prev_ts = F.lag(ts_col).over(w)
     is_new = (
-        prev_ts.isNull() | (F.col(ts_col) > prev_ts + gap_interval)
+        prev_ts.isNull() | (F.col(ts_col) > prev_ts + F.expr(f"INTERVAL {SESSION_GAP}"))
     ).cast("long")
     return events.withColumn("session_start", is_new).withColumn(
         "session_id",
@@ -374,11 +274,10 @@ def session_stats(
     events: DataFrame,
     entity_col: str,
     ts_col: str,
-    gap: Column | str = "30 minutes",
     tiebreakers: Sequence[str] = (),
 ) -> DataFrame:
     """Per-session aggregates: bounds, event count, duration seconds."""
-    s = sessionize(events, entity_col, ts_col, gap, tiebreakers)
+    s = sessionize(events, entity_col, ts_col, tiebreakers)
     return s.groupBy(entity_col, "session_id").agg(
         F.min(ts_col).alias("session_start_ts"),
         F.max(ts_col).alias("session_end_ts"),

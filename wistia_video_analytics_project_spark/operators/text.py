@@ -383,7 +383,6 @@ def lm_bits_per_token(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: float = 0.5,
-    train_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Bigram language-model cross-entropy per document — the
     CCNet/KenLM-style quality signal used to filter web corpora for LLM
@@ -403,58 +402,33 @@ def lm_bits_per_token(
     per-doc agg. No UDFs, no driver-side state — ``V`` rides along as a
     1-row broadcast cross join.
 
-    ``train_docs`` (default: ``docs`` itself) is the corpus the model
-    counts come from — pass a different frame to score one corpus under
-    another corpus's LM (the cross-scoring DSIR importance weighting
-    needs).  Bigrams/contexts unseen in training back off to the add-k
-    floor (count 0), which is exactly the smoothed formula with zero
-    counts; when training == scoring corpus every bigram is present and
-    the behavior is unchanged.
-
     Documents with fewer than two tokens have no bigrams and are
     excluded. Results round to 4 decimals (sum-of-logs noise ~1e-12).
     """
 
-    def _bigrams(frame):
-        toks = tokens(text_col)
-        base = frame.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("doc_id"), toks.alias("__t")
-        ).filter(F.size("__t") >= 2)
-        bg = base.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(__t) - 1), i -> "
-                    "struct(element_at(__t, i) AS w1, element_at(__t, i + 1) AS w2))"
-                )
-            ).alias("__b"),
-        ).select("doc_id", "__b.w1", "__b.w2")
-        return base, bg
-
-    score_base, bg = _bigrams(docs)
-    if train_docs is not None:
-        train_base, train_bg = _bigrams(train_docs)
-        # fail fast on an empty effective training corpus: V=0 would turn
-        # the smoothed probability into 0.5/0 (NULL bits for every doc,
-        # silently) — one bounded count job on the cross-scoring path only
-        if train_base.limit(1).count() == 0:
-            raise ValueError(
-                "train_docs has no document with >= 2 tokens — "
-                "cannot train the scoring LM"
+    toks = tokens(text_col)
+    base = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("doc_id"), toks.alias("__t")
+    ).filter(F.size("__t") >= 2)
+    bg = base.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(__t) - 1), i -> "
+                "struct(element_at(__t, i) AS w1, element_at(__t, i + 1) AS w2))"
             )
-    else:
-        train_base, train_bg = score_base, bg
-    bigram_counts = train_bg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("__cb")
+        ).alias("__b"),
+    ).select("doc_id", "__b.w1", "__b.w2")
+    bigram_counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__cb"))
+    context_counts = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("__cc"))
+    vocab = base.select(F.explode("__t").alias("w")).agg(
+        F.count_distinct("w").cast("double").alias("__v")
     )
-    context_counts = train_bg.groupBy("w1").agg(F.count(F.lit(1)).alias("__cc"))
-    vocab = (
-        train_base.select(F.explode("__t").alias("w"))
-        .agg(F.count_distinct("w").cast("double").alias("__v"))
+    # the model trains on the scored corpus, so every bigram and context
+    # has a count (nothing to coalesce)
+    p = (F.col("__cb").cast("double") + F.lit(k)) / (
+        F.col("__cc").cast("double") + F.lit(k) * F.col("__v")
     )
-    cb = F.coalesce(F.col("__cb"), F.lit(0)).cast("double")
-    cc = F.coalesce(F.col("__cc"), F.lit(0)).cast("double")
-    p = (cb + F.lit(k)) / (cc + F.lit(k) * F.col("__v"))
     return (
         bg.join(bigram_counts, ["w1", "w2"], "left")
         .join(context_counts, "w1", "left")

@@ -46,7 +46,6 @@ __all__ = [
     "candidate_vocab",
     "unigram_em",
     "unigram_viterbi_segment",
-    "unigram_encode",
     "train_unigram",
 ]
 
@@ -249,55 +248,6 @@ def unigram_viterbi_segment(
         pieces.append(word[j:i])
         i = j
     return pieces[::-1]
-
-
-def unigram_encode(
-    docs: DataFrame,
-    probs: dict[str, float],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = 6,
-) -> DataFrame:
-    """Viterbi-encode documents with a trained vocabulary: returns
-    (id, n_words, n_pieces, pieces_per_word) — the fertility metric
-    that decides whether a tokenizer is good enough to ship.  Broadcast
-    vocab + Arrow ``mapInPandas``; no shuffle."""
-    spark = docs.sparkSession
-    logp = {k: math.log(v) for k, v in probs.items() if v > 0.0}
-    bc = spark.sparkContext.broadcast(logp)
-    ml = int(max_piece_len)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lp = bc.value
-        for pdf in batches:
-            ids, n_words, n_pieces = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = str(text or "").lower().split()
-                np_ = sum(
-                    len(unigram_viterbi_segment(w, lp, ml)) for w in words
-                )
-                ids.append(did)
-                n_words.append(len(words))
-                n_pieces.append(np_)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_words": n_words,
-                    "n_pieces": n_pieces,
-                }
-            )
-
-    out = docs.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} long, n_words long, n_pieces long"
-    )
-    return out.withColumn(
-        "pieces_per_word",
-        F.round(
-            F.col("n_pieces").cast("double")
-            / F.greatest(F.col("n_words"), F.lit(1)).cast("double"),
-            4,
-        ),
-    )
 
 
 def train_unigram(

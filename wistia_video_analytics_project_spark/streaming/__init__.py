@@ -19,8 +19,4 @@ from .jobs import (  # noqa: F401
     stream_stream_window_join,
     windowed_engagement,
 )
-from .stateful import (  # noqa: F401
-    running_engagement_score,
-    streaming_sessionize,
-    timeout_sessionize,
-)
+from .stateful import timeout_sessionize  # noqa: F401

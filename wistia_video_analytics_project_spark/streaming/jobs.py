@@ -153,13 +153,11 @@ def stream_stream_window_join(
     right_ts: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    strict: bool = True,
     how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream join — the streaming twin of
     ``temporal.preceding_window_join`` (same pairing semantics:
-    right rows in ``[left.ts - window, left.ts)`` per equi-key, upper
-    bound closed when ``strict=False``).
+    right rows in ``[left.ts - window, left.ts)`` per equi-key).
 
     Both sides carry watermarks and the join condition bounds event-time
     distance, so each side's buffered state expires once the other
@@ -183,8 +181,7 @@ def stream_stream_window_join(
     l = left.withWatermark(left_ts, watermark).alias("__l")
     r = right.withWatermark(right_ts, watermark).alias("__r")
     l_ts, r_ts = F.col(f"__l.{left_ts}"), F.col(f"__r.{right_ts}")
-    upper = (r_ts < l_ts) if strict else (r_ts <= l_ts)
-    cond = (r_ts >= l_ts - F.expr(f"INTERVAL {window}")) & upper
+    cond = (r_ts >= l_ts - F.expr(f"INTERVAL {window}")) & (r_ts < l_ts)
     for k in on:
         cond = cond & (F.col(f"__l.{k}") == F.col(f"__r.{k}"))
     return l.join(r, cond, how)

@@ -1,18 +1,12 @@
 """Custom stateful streaming operators via applyInPandasWithState.
 
 The engine's escape hatch for streaming semantics the built-in windowed
-aggregates can't express (SURVEY.md §2.9 note; pyspark guide "Stateful").
-Two operators:
+aggregates can't express (SURVEY.md §2.9 note; pyspark guide "Stateful"):
+:func:`timeout_sessionize` keeps open sessions in state and flushes each
+one when an event-time timer passes its gap (the streaming analog of
+``temporal.sessionize``).
 
-- :func:`running_engagement_score` — per-user exponentially-decayed
-  engagement score maintained across micro-batches. The state is one
-  (score, last_ts) pair per user: O(users) state, watermark-free because
-  it never grows with event volume.
-- :func:`streaming_sessionize` — event-time sessionization with open
-  sessions kept in state and emitted when the gap timeout passes
-  (the streaming analog of ``temporal.sessionize``).
-
-Both keep the per-group pandas body tiny and vectorized; all routing /
+The per-group pandas body stays tiny and vectorized; all routing /
 shuffle / state management is Spark's.
 """
 
@@ -22,129 +16,6 @@ from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SCORE_OUT_SCHEMA = "user_id long, score double, n_events int, batch_max_ts timestamp"
-SCORE_STATE_SCHEMA = "score double, last_ts timestamp"
-
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, n_events int"
-)
-SESSION_STATE_SCHEMA = "session_start timestamp, session_end timestamp, n_events int"
-
-
-def running_engagement_score(
-    events: DataFrame,
-    half_life_s: float = 3600.0,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming per-user score: sum of event values, exponentially
-    decayed with the configured half-life. Emits one row per (user,
-    micro-batch) with the updated score."""
-    import math
-
-    import pandas as pd
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            score, last_ts = state.get
-            last_ts = pd.Timestamp(last_ts)
-        else:
-            score, last_ts = 0.0, None
-        n = 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ts = pd.Timestamp(ts)
-                if last_ts is not None:
-                    dt_s = max((ts - last_ts).total_seconds(), 0.0)
-                    score *= math.exp(-math.log(2.0) * dt_s / half_life_s)
-                score += float(v) if v == v else 0.0  # NaN-safe
-                last_ts = ts
-                n += 1
-        state.update((score, last_ts.to_pydatetime()))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "score": [round(score, 6)],
-                "n_events": [n],
-                "batch_max_ts": [last_ts],
-            }
-        )
-
-    return (
-        events.select(key_col, ts_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=SCORE_OUT_SCHEMA,
-            stateStructType=SCORE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_sessionize(
-    events: DataFrame,
-    gap_s: float = 1800.0,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Event-time sessionization with explicit state: a session closes
-    when a new event arrives more than ``gap_s`` after the session end;
-    the CLOSED session is emitted and the new one replaces it in state.
-
-    (Open sessions at stream end stay in state — production would add a
-    processing-time timeout to flush them; kept minimal here.)
-    """
-    import pandas as pd
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        closed: list[tuple] = []
-        if state.exists:
-            start, end, n = state.get
-            start, end = pd.Timestamp(start), pd.Timestamp(end)
-        else:
-            start = end = None
-            n = 0
-        for pdf in pdfs:
-            for ts in sorted(pd.Timestamp(t) for t in pdf[ts_col]):
-                if start is None:
-                    start = end = ts
-                    n = 1
-                elif (ts - end).total_seconds() > gap_s:
-                    closed.append((user_id, start, end, n))
-                    start = end = ts
-                    n = 1
-                else:
-                    end = max(end, ts)
-                    n += 1
-        state.update((start.to_pydatetime(), end.to_pydatetime(), n))
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["user_id", "session_start", "session_end", "n_events"]
-            )
-
-    return (
-        events.select(key_col, ts_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 TIMEOUT_SESSION_OUT_SCHEMA = (
     "user_id long, session_start_us long, session_end_us long, "
@@ -166,9 +37,8 @@ def timeout_sessionize(
     flatMapGroupsWithState pattern via ``applyInPandasWithState`` with
     ``GroupStateTimeout.EventTimeTimeout``.
 
-    Unlike :func:`streaming_sessionize` (NoTimeout: the last open
-    session per key is stranded in state forever), every open session
-    arms an event-time timer at ``session_end + gap``; when the
+    Unlike a NoTimeout state function (the last open session per key
+    would be stranded in state forever), every open session arms an event-time timer at ``session_end + gap``; when the
     watermark passes it, Spark invokes the group with ``hasTimedOut``
     on a no-data micro-batch and the session FLUSHES — so a
     run-to-completion drive emits a deterministic, oracle-checkable
