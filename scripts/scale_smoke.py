@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from wistia_video_analytics_project_spark.session import get_spark
+from wistia_video_analytics_project_spark.session import get_spark, scoped_conf
 from wistia_video_analytics_project_spark.sources import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -570,7 +570,6 @@ def abandon_ladder(spark, release_caches) -> None:
     events = load_table(spark, SF_DIR, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     for k in (1, 4, 8):
         ev = multiply(events, k)
         stage = os.path.join(
@@ -592,8 +591,7 @@ def abandon_ladder(spark, release_caches) -> None:
                 p, v, ["user_id"], "ts", "vts",
                 window="1 hour", watermark="2 hours", how="leftOuter",
             )
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            try:
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": 8}):
                 q = (
                     joined.writeStream.outputMode("append")
                     .format("memory")
@@ -612,8 +610,6 @@ def abandon_ladder(spark, release_caches) -> None:
                     )
                 finally:
                     q.stop()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
             return peak
 
         peaks: list[int] = []

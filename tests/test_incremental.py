@@ -5,6 +5,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
+
+import pytest
+from pyspark.errors import AnalysisException
 
 from wistia_video_analytics_project_spark import schemas
 from wistia_video_analytics_project_spark.sources import incremental
@@ -62,6 +66,51 @@ def test_read_new_runs_empty_delta(spark, tmp_path):
     )
     assert df.count() == 0 and folders == [] and max_ts is None
     assert [f.name for f in df.schema.fields] == ["hashed_id", "name", "created"]
+
+
+def _next_job_id(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _write_40_runs(base):
+    """40 run folders, more than Spark's default parallel-listing
+    threshold of 32."""
+    for i in range(40):
+        _write_run(base, f"m{i:02d}_20240102_00{i:02d}00",
+                   [{"hashed_id": f"h{i}", "name": f"N {i}", "created": i}])
+
+
+def test_read_new_runs_lists_on_driver(spark, tmp_path):
+    """Past the threshold the read still starts no job, and the threshold
+    is back at its prior value afterwards."""
+    base = str(tmp_path / "media")
+    _write_40_runs(base)
+    prior = spark.conf.get(incremental.LISTING_THRESHOLD)
+    before = _next_job_id(spark)
+    df, folders, _ = incremental.read_new_runs(
+        spark, base, dt.datetime(2024, 1, 1), schemas.RAW_MEDIA)
+    assert _next_job_id(spark) == before
+    assert spark.conf.get(incremental.LISTING_THRESHOLD) == prior
+    rows = sorted(df.collect())
+    assert [r.hashed_id for r in rows] == sorted(f"h{i}" for i in range(40))
+    assert rows == sorted(spark.read.schema(schemas.RAW_MEDIA).json(folders).collect())
+
+
+def test_read_new_runs_restores_threshold_on_error(spark, tmp_path, monkeypatch):
+    base = str(tmp_path / "media")
+    _write_40_runs(base)
+    listing = incremental.list_new_run_folders
+
+    def listing_then_delete(*a):
+        folders = listing(*a)
+        shutil.rmtree(folders[0])
+        return folders
+
+    monkeypatch.setattr(incremental, "list_new_run_folders", listing_then_delete)
+    prior = spark.conf.get(incremental.LISTING_THRESHOLD)
+    with pytest.raises(AnalysisException):
+        incremental.read_new_runs(spark, base, dt.datetime(2024, 1, 1), schemas.RAW_MEDIA)
+    assert spark.conf.get(incremental.LISTING_THRESHOLD) == prior
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Sources (REST ingester, watermark) and sinks (parquet, JDBC)."""
+"""Sources (REST ingester, watermark, parquet reader) and sinks (parquet, JDBC)."""
 
 from __future__ import annotations
 
@@ -6,10 +6,14 @@ import datetime as dt
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 
-from wistia_video_analytics_project_spark import sinks
+from wistia_video_analytics_project_spark import schemas, sinks
+from wistia_video_analytics_project_spark.sources import load_table
 from wistia_video_analytics_project_spark.sources.rest import RestIngester
 from wistia_video_analytics_project_spark.sources.watermark import WatermarkStore
+
+from conftest import SF_SMOKE
 
 
 def make_fake_transport(pages, fail_statuses=()):
@@ -200,3 +204,25 @@ def test_urllib_transport_real_http():
         assert status404 == 404 and payload404 is None
     finally:
         srv.shutdown()
+
+
+def test_load_table_declared_read_starts_no_job(spark):
+    """Every testdata table loads with its declared schema without a
+    footer-inference job, and equals an inferred read cast to that schema."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    for name, schema in schemas.TPCH.items():
+        before = sched.nextJobId()
+        got = load_table(spark, SF_SMOKE, name)
+        assert sched.nextJobId() == before, name
+        inferred = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet")
+        want = inferred.select(
+            *(inferred[f.name].cast(f.dataType).alias(f.name) for f in schema.fields)
+        )
+        assert got.schema == want.schema, name
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), name
+        assert got.count() == want.count(), name
+
+
+def test_load_table_missing_path_raises(spark, tmp_path):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "orders")

@@ -6,8 +6,9 @@ The reference relies on JSON schema inference everywhere
 (``if "events" in visitor_df.columns``, `notebool-03.py:215`). Inference
 can type ``created`` as string one run and long the next, defeating both
 predicate pushdown and oracle-stable hashing (SURVEY.md §1.3, §7.3) — so
-our engine declares every schema. Inference remains available only as an
-opt-in ingest convenience in ``sources.readers``.
+our engine declares every schema. The one read that still infers is
+``sources.readers.read_parquet`` called without a schema, over parquet
+the engine wrote itself.
 """
 
 from __future__ import annotations

@@ -12,11 +12,15 @@ Two entry points:
 - :func:`configure_runtime` — apply the runtime-settable subset to an
   EXISTING session (the verify driver hands us its own session; runtime
   confs like ``spark.sql.session.timeZone`` are safe to set post-hoc).
+
+:func:`scoped_conf` sets runtime confs for one block only.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -60,6 +64,23 @@ def configure_runtime(spark: SparkSession, shuffle_partitions: int | None = None
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str | int | bool]) -> Iterator[None]:
+    """Set runtime ``conf`` for the body of a ``with`` block, then restore
+    each key's prior value, also when the body raises."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from ..session import scoped_conf
+
 
 def windowed_engagement(
     events: DataFrame,
@@ -240,12 +242,8 @@ def foreach_batch_parquet_upsert(
                 F.broadcast(latest.select(*key_cols)), on=list(key_cols), how="left_anti"
             )
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
             out.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return apply
 
@@ -273,12 +271,10 @@ def run_to_memory_sink(
     The setting is captured when the query STARTS and persists through
     its checkpoint lineage, which is why it is applied around
     ``start()`` rather than per-batch."""
-    spark = stream_df.sparkSession
-    prev = None
+    conf = {}
     if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        conf["spark.sql.shuffle.partitions"] = state_partitions
+    with scoped_conf(stream_df.sparkSession, conf):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -290,7 +286,4 @@ def run_to_memory_sink(
             progress = [p for p in q.recentProgress if p is not None]
         finally:
             q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return progress
