@@ -19,10 +19,19 @@ Two entry points:
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """24g, capped at half of physical memory so the heap cannot grow past
+    the machine on a smaller or shared box."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
+
 
 # Confs that can only be set at session build time.
 _BUILD_TIME_CONF = {
@@ -35,7 +44,7 @@ _BUILD_TIME_CONF = {
     # starves 32 executor threads into constant GC/spill (observed:
     # GCLocker allocation stalls in wide aggregations). On a cluster this
     # knob is per-executor and set by the deployment, not here.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
 }
 
 # Runtime-settable confs — safe on a session we did not build.
@@ -66,21 +75,33 @@ def configure_runtime(spark: SparkSession, shuffle_partitions: int | None = None
     return spark
 
 
+# Serializes scoped_conf blocks: the runtime conf is session-wide, so two
+# threads scoping one key at once (concurrent pipeline stages) could
+# restore in the wrong order and leave it changed.
+_SCOPED_CONF_LOCK = threading.RLock()
+
+
 @contextmanager
 def scoped_conf(spark: SparkSession, conf: dict[str, str | int | bool]) -> Iterator[None]:
     """Set runtime ``conf`` for the body of a ``with`` block, then restore
-    each key's prior value, also when the body raises."""
-    prev = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    each key's prior value, also when the body raises.
+
+    The conf is session-wide: during the block the value is visible to
+    every job the session runs, from any thread. Blocks are serialized
+    across threads (one re-entrant lock), so do not wait in the body on
+    another thread that enters ``scoped_conf``."""
+    with _SCOPED_CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def get_spark(
