@@ -2481,7 +2481,8 @@ def q_priority_value_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fake_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize binary assets from documents: payload = utf8 bytes of
     the text, duration derived from n_chars — deterministic, lets the
-    multimodal plumbing run against driver testdata."""
+    multimodal metadata and frame-grid bindings run against driver
+    testdata. The payloads are plain text, not media bytes."""
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").alias("asset_id"),
@@ -2527,11 +2528,9 @@ def q_scd2_customer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column feature extraction (Arrow-batched mapInPandas):
-    the metadata outputs (byte length, content hash) are engine-agnostic
-    and oracle-checked; the feature vector itself is engine-internal."""
-    feats = multimodal.extract_features(_fake_assets(spark, sf_dir))
-    return feats.select("asset_id", "media_type", "n_bytes", "content_sha256")
+    """Binary-column metadata (byte length, content hash) computed with
+    Spark built-ins — engine-agnostic and oracle-checked."""
+    return multimodal.asset_metadata(_fake_assets(spark, sf_dir))
 
 
 def q_frame_grid(spark: SparkSession, sf_dir: str) -> DataFrame:

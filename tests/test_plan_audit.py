@@ -54,6 +54,20 @@ def test_python_stages_only_on_allowlist():
     assert _doc()["python_stages_off_allowlist"] == []
 
 
+def test_python_allowlist_is_exact():
+    """Every allowlisted query carries a Python stage in the committed
+    artifact: an entry whose query went JVM-side is stale and must be
+    removed from ``PYTHON_STAGE_ALLOWLIST``."""
+    from scripts.plan_audit import PYTHON_STAGE_ALLOWLIST
+
+    queries = _doc()["queries"]
+    stale = sorted(
+        n for n in PYTHON_STAGE_ALLOWLIST
+        if queries.get(n, {}).get("python_stages", 0) == 0
+    )
+    assert stale == []
+
+
 def test_no_unsafe_bnlj_anywhere():
     """Every BroadcastNestedLoopJoin build side must be provably tiny
     (scalar class) or explicitly allowlisted as a domain-bounded spine

@@ -361,37 +361,6 @@ def test_langid_features_unit_norm_and_pure_python_parity(texts):
 
 
 @given(
-    h=st.integers(4, 12),
-    w=st.integers(4, 12),
-    seed=st.integers(0, 2**31 - 1),
-    subsample=st.booleans(),
-)
-@settings(max_examples=20, deadline=None)
-def test_jpeg_roundtrip_property(h, w, seed, subsample):
-    """Any random RGB image survives the q=1 encode/decode roundtrip
-    within DCT+color-transform rounding error — exercises arbitrary
-    crop offsets, MCU paddings, and both sampling layouts."""
-    import numpy as np
-
-    from test_multimodal import _jpeg_bytes
-    from wistia_video_analytics_project_spark.operators import multimodal
-
-    rng = np.random.RandomState(seed)
-    # 4:2:0 genuinely loses chroma at color edges that straddle the
-    # 2x2 chroma grid (inherent, not a decoder defect), so the
-    # subsampled case uses constant-chroma (gray) content where the
-    # roundtrip must stay tight; 4:4:4 takes arbitrary color blocks
-    base = rng.randint(0, 256, size=(2, 2, 3))
-    if subsample:
-        base = base[:, :, :1].repeat(3, axis=2)
-    src = np.kron(base, np.ones((h, w, 1))).astype(np.uint8)[: 2 * h, : 2 * w]
-    px = multimodal.decode_image(_jpeg_bytes(src, subsample=subsample))
-    assert px.shape == src.shape
-    err = np.abs(px.astype(float) - src.astype(float))
-    assert err.max() <= 14, (err.max(), h, w, seed, subsample)
-
-
-@given(
     n=st.integers(5, 60),
     d=st.integers(2, 10),
     ell=st.integers(2, 8),
