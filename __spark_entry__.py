@@ -2528,9 +2528,11 @@ def q_scd2_customer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column metadata (byte length, content hash) computed with
-    Spark built-ins — engine-agnostic and oracle-checked."""
-    return multimodal.asset_metadata(_fake_assets(spark, sf_dir))
+    """Binary-column feature extraction (Arrow-batched mapInPandas):
+    the metadata outputs (byte length, content hash) are engine-agnostic
+    and oracle-checked; the feature vector itself is engine-internal."""
+    feats = multimodal.extract_features(_fake_assets(spark, sf_dir))
+    return feats.select("asset_id", "media_type", "n_bytes", "content_sha256")
 
 
 def q_frame_grid(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -854,11 +854,3 @@ def test_cohort_ltv_single_fact_shuffle_key(spark):
         df, "orders.parquet",
         {"o_custkey", "o_orderdate", "o_totalprice"},
     )
-
-
-def test_multimodal_metadata_no_python(spark):
-    """Payload length and content hash are Spark built-ins: the
-    metadata binding carries no Python stage."""
-    plan = plans.executed_plan(entrymod.q_multimodal_metadata(spark, SF_SMOKE))
-    for stage in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert stage not in plan, plan[:2000]
