@@ -558,9 +558,11 @@ def test_plan_report_reads_real_plans(spark):
 
 
 def test_dedup_hot_keys_dropped_before_collect(spark):
-    """max_df: the hot-key blacklist (a LeftAnti join) sits upstream of
-    every collect_list aggregate, so no aggregation buffer ever holds a
-    stop key's full doc list."""
+    """max_df: each key's df comes from a count window on the exchange
+    the collect reuses, and its filter sits upstream of every
+    collect_list aggregate, so no aggregation buffer ever holds a stop
+    key's full doc list. Each collect reads the corpus once: one scan
+    and one hash exchange below it, no anti-join blacklist."""
     for name in ("dedup_ngram_jaccard", "dedup_containment", "dedup_winnow"):
         lines = plans.executed_plan(entrymod.queries()[name](spark, SF_SMOKE)).splitlines()
         depth = [len(l) - len(l.lstrip(" :+-")) for l in lines]
@@ -570,7 +572,13 @@ def test_dedup_hot_keys_dropped_before_collect(spark):
             j = i + 1
             while j < len(lines) and depth[j] > depth[i]:
                 j += 1
-            assert any("LeftAnti" in l for l in lines[i + 1:j]), (name, "\n".join(lines))
+            sub = lines[i + 1:j]
+            msg = (name, "\n".join(lines))
+            assert any("Filter (__df" in l and "<=" in l for l in sub), msg
+            assert any("Window [count(1)" in l for l in sub), msg
+            assert sum("Scan parquet" in l for l in sub) == 1, msg
+            assert sum("Exchange hashpartitioning" in l for l in sub) == 1, msg
+            assert not any("LeftAnti" in l for l in sub), msg
 
 
 def test_containment_no_cartesian_and_partial_agg(spark):
@@ -854,3 +862,21 @@ def test_cohort_ltv_single_fact_shuffle_key(spark):
         df, "orders.parquet",
         {"o_custkey", "o_orderdate", "o_totalprice"},
     )
+
+
+def test_gold_queries_scan_memory_without_shuffle(spark, silver_frames):
+    """The dashboard's import step: over the 30-date fact, a gold query
+    scans the cached single-partition table in one task, so its
+    aggregates and joins need no hash exchange; the dims still reach
+    the joins by broadcast."""
+    from wistia_video_analytics_project_spark import sql
+
+    sql.register_star_schema(spark, *silver_frames)
+    for name in ("top_countries", "top10_videos", "new_vs_returning"):
+        df = sql.run_gold(spark, name)
+        df.collect()
+        plan = plans.executed_plan(df)
+        assert "Scan In-memory table" in plan, (name, plan)
+        assert "Exchange hashpartitioning" not in plan, (name, plan)
+        if name != "new_vs_returning":
+            assert "BroadcastExchange" in plan, (name, plan)

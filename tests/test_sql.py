@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
 from wistia_video_analytics_project_spark import schemas, sql
 from wistia_video_analytics_project_spark.operators import model
+from wistia_video_analytics_project_spark.sources import readers
 
 RUN_TS = dt.datetime(2024, 6, 1)
 
@@ -33,7 +35,9 @@ def star(spark):
     dv = model.build_dim_visitor(visitors, RUN_TS)
     fact = model.build_fact_engagement(visitors, RUN_TS)
     sql.register_star_schema(spark, dm, dv, fact)
-    return dm, dv, fact
+    yield dm, dv, fact
+    for name in sql.STAR_VIEWS:
+        spark.catalog.dropTempView(name)
 
 
 def test_gold_kpis(spark, star):
@@ -63,3 +67,43 @@ def test_gold_slices(spark, star):
 def test_all_gold_queries_run(spark, star):
     for name in sql.GOLD_QUERIES:
         assert sql.run_gold(spark, name).collect() is not None
+
+
+def test_import_step_matches_plain_views(spark, silver_star, silver_frames):
+    """The import step (coalesce + cache) returns the rows plain views
+    over the same 30 date directories return, for every gold query."""
+    assert len(os.listdir(silver_star["fact_engagement"])) >= 30
+    for name, df in zip(sql.STAR_VIEWS, silver_frames):
+        df.createOrReplaceTempView(name)
+    plain = {q: sorted(sql.run_gold(spark, q).collect()) for q in sql.GOLD_QUERIES}
+    assert not any(spark.catalog.isCached(n) for n in sql.STAR_VIEWS)
+    sql.register_star_schema(spark, *silver_frames)
+    assert all(spark.catalog.isCached(n) for n in sql.STAR_VIEWS)
+    assert spark.table("fact_engagement").rdd.getNumPartitions() == 1
+    for q in sql.GOLD_QUERIES:
+        assert sorted(sql.run_gold(spark, q).collect()) == plain[q], q
+
+
+def test_refresh_replaces_cached_views(spark, silver_star, silver_frames):
+    """A refresh uncaches the views it replaces: after two refreshes,
+    each followed by the whole dashboard, at most one cached relation
+    per view is held."""
+    for _ in range(2):
+        frames = [readers.read_parquet(spark, silver_star[n]) for n in sql.STAR_VIEWS]
+        sql.register_star_schema(spark, *frames)
+        for q in sql.GOLD_QUERIES:
+            sql.run_gold(spark, q).collect()
+    cached = [i.name() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+              if any(n in i.name() for n in sql.STAR_VIEWS)]
+    assert 0 < len(cached) <= 3, cached
+
+
+def test_unsized_frame_keeps_partitions(spark, star):
+    """A frame whose size Spark cannot estimate (an RDD-backed
+    createDataFrame reports Long.MAX_VALUE) is cached with the
+    partitions it has, not coalesced."""
+    dm, dv, fact = star
+    rdd = spark.sparkContext.parallelize(fact.collect(), 3)
+    sql.register_star_schema(spark, dm, dv, spark.createDataFrame(rdd, fact.schema))
+    assert spark.table("fact_engagement").rdd.getNumPartitions() == 3
+    assert sql.run_gold(spark, "total_plays").collect()[0].total_plays == 4

@@ -100,21 +100,18 @@ def _pair_counts(
     in place with array HOFs — one pass, no self-join — and count the
     keys each pair shares.
 
-    Keys with df > ``max_df`` are dropped BEFORE the collect: their
-    df-count blacklist is tiny by definition (≤ rows/max_df entries), so
-    a broadcast ``left_anti`` join removes them without a shuffle of the
-    corpus, and no aggregation buffer ever holds a hot key's doc list.
+    Keys with df > ``max_df`` are dropped BEFORE the collect: a
+    ``count over (partition by key)`` window computes each key's df on
+    the exchange the collect then reuses, so the input is read once, and
+    a hot key's rows sit in the window's spillable buffer, never in an
+    aggregation buffer.
     Returns ``(grouped, counts)``: ``grouped`` holds the kept lists and
     ``counts`` is ``(doc_id_a, doc_id_b, n_common)``.
     """
     if max_df is not None:
-        hot = (
-            keyed.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select(key)
-        )
-        keyed = keyed.join(F.broadcast(hot), key, "left_anti")
+        keyed = keyed.withColumn(
+            "__df", F.count(F.lit(1)).over(Window.partitionBy(key))
+        ).filter(F.col("__df") <= max_df)
     grouped = keyed.groupBy(key).agg(
         F.array_sort(F.collect_list("doc_id")).alias("__ms")
     )
@@ -199,7 +196,8 @@ def ngram_jaccard_pairs(
     corpus pass, and the pair stream is exactly the intersection
     multiset (no join probe overhead); ~6× faster than a shingle
     self-join at sf0.1. ``max_df`` drops hot shingles before the
-    collect, so it bounds the aggregation buffer as well as the pair
+    collect, with a df-count window on the collect's own exchange (still
+    one pass), so it bounds the aggregation buffer as well as the pair
     output; with ``max_df=None`` one shingle's buffer holds its full
     doc list.
     """
@@ -630,10 +628,10 @@ def winnow_candidate_pairs(
 
     Grouped in-place pair generation (:func:`_pair_counts`, shared
     with ``ngram_jaccard_pairs``/``containment_pairs``): hot
-    fingerprints (df > ``max_df``) are dropped by a broadcast anti-join
-    BEFORE groupBy(fp) collects each fingerprint's sorted doc list, so
-    no aggregation buffer holds more than ``max_df`` docs; the C(df, 2)
-    pairs come off the lists with array HOFs. Row-identical to a
+    fingerprints (df > ``max_df``) are dropped by a df-count window on
+    the same exchange BEFORE groupBy(fp) collects each fingerprint's
+    sorted doc list, so no aggregation buffer holds more than ``max_df``
+    docs; the C(df, 2) pairs come off the lists with array HOFs. Row-identical to a
     self-join because ``winnow_fingerprints`` emits each (doc_id, fp)
     once (``array_distinct`` per doc), so each fp's doc list is a set.
     """

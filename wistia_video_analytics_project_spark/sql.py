@@ -1,13 +1,24 @@
 """SQL surface: the gold analytics layer as plain Spark SQL.
 
 The reference serves its end-user queries as Power BI DAX measures over
-the star schema (PDF guide p.33, Step 11.3; SURVEY.md §3.4). This module
-is the same surface as SQL text over registered views — Catalyst compiles
-these to the identical plans as the DataFrame forms in
-``operators.analytics``, so users can pick either idiom.
+the star schema (PDF guide p.33, Step 11.3; SURVEY.md §3.4), which Power
+BI imports into memory first. :func:`register_star_schema` is that import
+step: each view is the table coalesced to the partitions its size needs
+(one for a dashboard's star schema) and cached, so a gold query scans
+in-memory columns in one task with no shuffle. Import semantics:
+
+- the dashboard is a snapshot taken at refresh: the views serve the
+  files listed when the tables were read, cached by the first query that
+  reads them, and a later write is not seen until the next refresh;
+- its cache lives until the next refresh replaces the views (replacing a
+  temp view uncaches the old one), so refreshes do not accumulate;
+- the cache is ``MEMORY_AND_DISK``, so a star schema too big for storage
+  memory spills to disk rather than fails.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -78,10 +89,22 @@ def register_star_schema(
     dim_visitor: DataFrame,
     fact_engagement: DataFrame,
 ) -> None:
-    """Expose the star schema as temp views for the SQL surface."""
-    dim_media.createOrReplaceTempView("dim_media")
-    dim_visitor.createOrReplaceTempView("dim_visitor")
-    fact_engagement.createOrReplaceTempView("fact_engagement")
+    """Import the star schema: register each table as a cached temp view
+    over ``ceil(size / spark.sql.files.maxPartitionBytes)`` partitions.
+
+    The size is the optimized plan's estimate, so sizing starts no job.
+    The cache is lazy: the first query to read a view fills it, inside
+    the scan it runs anyway (filling it eagerly at refresh made a whole
+    refresh-plus-queries pass slower). A frame whose size Spark cannot
+    estimate reports ``Long.MAX_VALUE``; the count is clamped to a Java
+    int, more partitions than any frame has, so such a frame keeps its
+    own."""
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    for name, df in zip(STAR_VIEWS, (dim_media, dim_visitor, fact_engagement)):
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        n = min(max(1, math.ceil(size / split)), 2**31 - 1)
+        df.coalesce(n).createOrReplaceTempView(name)
+        spark.catalog.cacheTable(name)
 
 
 def run_gold(spark: SparkSession, name: str) -> DataFrame:
