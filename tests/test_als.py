@@ -240,6 +240,17 @@ def test_recommend_topk_ann_recall_on_clustered_factors(spark):
     assert recall >= 0.8, (recall, sorted(want - got))
 
 
+def test_recommend_topk_ann_empty_catalog(spark):
+    """An empty item catalog trains no cells: ANN serving recommends
+    nothing instead of failing."""
+    user_f, item_f = _clustered_factors(spark)
+    seen = spark.createDataFrame([], "user long, item long")
+    out = als.recommend_topk_ann(
+        user_f, item_f.filter("false"), seen, n=3, n_centroids=8, nprobe=2
+    )
+    assert out.collect() == []
+
+
 def test_recommend_topk_auto_routes_by_catalog_size(spark, ratings_df):
     """auto == exact under the threshold; over it, auto produces the
     ANN result (same frame shape, unseen-only, ranked)."""

@@ -426,3 +426,22 @@ def test_ivf_assign_carry_passthrough(spark):
         assert [float(x) for x in r.payload] == [
             float(r.vec_id), float(r.vec_id + 1)
         ]
+
+
+def test_ann_on_empty_corpus_returns_no_rows(spark, emb):
+    """An empty corpus trains no IVF cells and no PQ codebooks: the
+    assignment and every IVF/PQ top-k return no rows, in the columns
+    and types a non-empty corpus gives, instead of failing in numpy."""
+    empty = emb.filter(F.lit(False))
+    cells = similarity.ivf_assign(empty, [], carry=["embedding"])
+    assert cells.dtypes == [("vec_id", emb.schema["vec_id"].dataType.simpleString()),
+                            ("cell", "bigint"),
+                            ("embedding", emb.schema["embedding"].dataType.simpleString())]
+    assert cells.collect() == []
+    assert similarity.pq_train(empty) == []
+    queries = emb.filter("vec_id < 3")
+    for topk in (similarity.ann_ivf_topk, similarity.ann_pq_topk,
+                 similarity.ann_ivf_pq_topk):
+        out = topk(queries, empty, k=5)
+        assert out.columns == ["query_id", "neighbor_id", "cosine_sim", "rnk"], topk
+        assert out.collect() == [], topk

@@ -6,6 +6,7 @@ import datetime as dt
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from wistia_video_analytics_project_spark import schemas, sql
 from wistia_video_analytics_project_spark.operators import model
@@ -107,3 +108,86 @@ def test_unsized_frame_keeps_partitions(spark, star):
     sql.register_star_schema(spark, dm, dv, spark.createDataFrame(rdd, fact.schema))
     assert spark.table("fact_engagement").rdd.getNumPartitions() == 3
     assert sql.run_gold(spark, "total_plays").collect()[0].total_plays == 4
+
+
+#: Spark jobs per gold query over the imported star schema: one, plus
+#: one for the broadcast of a dimension join
+GOLD_JOBS = {q: 2 if "JOIN dim_" in text else 1 for q, text in sql.GOLD_QUERIES.items()}
+
+
+def test_dashboard_job_budget(spark, silver_star, silver_frames):
+    """A refresh (three silver reads and the import step) starts no Spark
+    job. Once a first pass has filled the cache (a refresh over unchanged
+    files keeps it), each gold query starts one job and a dimension join
+    one more: 13 jobs a pass."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn) -> int:
+        before = sched.nextJobId()
+        fn()
+        return sched.nextJobId() - before
+
+    def refresh():
+        frames = [readers.read_parquet(spark, silver_star[n]) for n in sql.STAR_VIEWS]
+        sql.register_star_schema(spark, *frames)
+
+    assert sum(v == 2 for v in GOLD_JOBS.values()) == 3
+    refresh()
+    for q in sql.GOLD_QUERIES:
+        sql.run_gold(spark, q).collect()
+    got = {"refresh": jobs(refresh)}
+    got.update((q, jobs(lambda q=q: sql.run_gold(spark, q).collect())) for q in sql.GOLD_QUERIES)
+    assert got == {"refresh": 0, **GOLD_JOBS}
+
+
+def test_read_parquet_footer_schema_equals_inferred(spark, silver_star, tmp_path):
+    """Without a schema, each silver table reads with the schema Spark's
+    own inference gives (names, order, types, nullability), the fact's
+    ``date`` partition column and its ``_SUCCESS`` marker included; a
+    path with no data file or no path fails as a Spark read does."""
+    assert os.path.exists(os.path.join(silver_star["fact_engagement"], "_SUCCESS"))
+    for name, path in silver_star.items():
+        assert readers.read_parquet(spark, path).schema == spark.read.parquet(path).schema, name
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").touch()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        readers.read_parquet(spark, str(empty))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        readers.read_parquet(spark, str(tmp_path / "missing"))
+
+
+#: ``new_vs_returning`` as a self-join of the fact to its first dates
+SELF_JOIN_NEW_VS_RETURNING = (
+    "WITH firsts AS (SELECT visitor_id, min(date) AS first_date "
+    "                FROM fact_engagement GROUP BY visitor_id) "
+    "SELECT f.date, "
+    "       CASE WHEN f.date = x.first_date THEN 'new' ELSE 'returning' END "
+    "         AS visitor_status, "
+    "       count(DISTINCT f.visitor_id) AS visitors "
+    "FROM fact_engagement f JOIN firsts x USING (visitor_id) "
+    "GROUP BY 1, 2"
+)
+
+
+def test_new_vs_returning_window_equals_self_join(spark, silver_frames):
+    """The window form returns the self-join's rows over the silver star
+    schema and over a fact with NULL visitor ids and NULL dates."""
+    def both():  # one row per (date, status), so sets lose nothing
+        want = spark.sql(SELF_JOIN_NEW_VS_RETURNING).collect()
+        got = sql.run_gold(spark, "new_vs_returning").collect()
+        assert len(got) == len({tuple(r) for r in got})
+        return {tuple(r) for r in got}, {tuple(r) for r in want}
+
+    sql.register_star_schema(spark, *silver_frames)
+    got, want = both()
+    assert got == want and len(want) > 30
+    d = [dt.date(2024, 1, day) for day in (1, 2, 3)]
+    spark.createDataFrame(
+        [("v1", d[0]), ("v1", d[1]), ("v2", d[1]), (None, d[0]), (None, d[2]),
+         ("v3", None), ("v3", d[2]), ("v4", None)],
+        "visitor_id string, date date",
+    ).createOrReplaceTempView("fact_engagement")
+    got, want = both()
+    assert got == want
+    assert (None, "returning", 2) in got and (d[2], "returning", 0) not in got

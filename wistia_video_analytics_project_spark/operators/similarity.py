@@ -485,12 +485,22 @@ def ivf_assign(
     import numpy as np
     import pandas as pd
 
+    # the output id column inherits the INPUT id type: a hard-coded
+    # "id long" broke string/decimal ids the moment the ALS auto-router
+    # switched a catalog onto the ANN path
+    id_type = vecs.schema[id_col].dataType.simpleString()
+    carry = list(carry or [])
+    carry_schema = "".join(
+        f", {c} {vecs.schema[c].dataType.simpleString()}" for c in carry
+    )
+    schema = f"id {id_type}, cell long{carry_schema}"
+    if not centroids:  # an empty corpus trains no cell to assign
+        return vecs.sparkSession.createDataFrame([], schema).withColumnRenamed("id", id_col)
     cmat = np.array([c for _, c in centroids], dtype=np.float64)  # k x dim
     cnorm = np.linalg.norm(cmat, axis=1)
     cnorm[cnorm == 0] = 1.0
     cells = np.array([cid for cid, _ in centroids], dtype=np.int64)
     k = min(nprobe, len(centroids))
-    carry = list(carry or [])
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -507,16 +517,7 @@ def ivf_assign(
                 out[c] = np.repeat(pdf[c].values, k)
             yield pd.DataFrame(out)
 
-    # the output id column inherits the INPUT id type (round-7 ADVICE:
-    # a hard-coded "id long" broke string/decimal ids the moment the
-    # ALS auto-router switched a catalog onto the ANN path)
-    id_type = vecs.schema[id_col].dataType.simpleString()
-    carry_schema = "".join(
-        f", {c} {vecs.schema[c].dataType.simpleString()}" for c in carry
-    )
-    out = vecs.select(id_col, vec_col, *carry).mapInPandas(
-        assign, schema=f"id {id_type}, cell long{carry_schema}"
-    )
+    out = vecs.select(id_col, vec_col, *carry).mapInPandas(assign, schema=schema)
     return out.withColumnRenamed("id", id_col)
 
 
@@ -603,7 +604,7 @@ def pq_train(
     tiny (m x n_codes x dim/m floats) and k-means over a sample is the
     standard, published PQ recipe — the full corpus is never collected.
     Deterministic: hash-ordered init, fixed iteration count, argmin
-    ties broken by lowest code id.
+    ties broken by lowest code id. An empty corpus trains no codebooks.
     """
     import numpy as np
 
@@ -613,6 +614,8 @@ def pq_train(
         .limit(sample_size)
         .collect()
     )
+    if not rows:
+        return []
     mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     nrm = np.linalg.norm(mat, axis=1)
     nrm[nrm == 0] = 1.0
@@ -773,9 +776,16 @@ def ann_pq_topk(
 
     L = shortlist if shortlist is not None else 10 * k
     books = pq_train(corpus, m, n_codes, id_col=id_col, vec_col=vec_col)
+    if not books:
+        return _exact_rerank(_no_pairs(corpus, id_col), queries, corpus, k, id_col, vec_col)
     codes = pq_encode(corpus, books, id_col, vec_col)
     short = pq_topk(queries, codes, books, k=L, id_col=id_col, vec_col=vec_col)
     return _exact_rerank(short, queries, corpus, k, id_col, vec_col)
+
+
+def _no_pairs(corpus: DataFrame, id_col: str) -> DataFrame:
+    """The (query_id, neighbor_id) shortlist of an empty corpus: none."""
+    return corpus.select(F.col(id_col).alias("query_id"), F.col(id_col).alias("neighbor_id"))
 
 
 def _exact_rerank(
@@ -862,6 +872,8 @@ def ann_ivf_pq_topk(
     else:
         cents = ivf_centroids(corpus, n_centroids, id_col, vec_col)
     books = pq_train(corpus, m, n_codes, id_col=id_col, vec_col=vec_col)
+    if not books:
+        return _exact_rerank(_no_pairs(corpus, id_col), queries, corpus, k, id_col, vec_col)
     codes = pq_encode(corpus, books, id_col, vec_col)
     corpus_cells = ivf_assign(corpus, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
     coded = codes.join(corpus_cells, id_col).select(

@@ -6,9 +6,10 @@ The reference relies on JSON schema inference everywhere
 (``if "events" in visitor_df.columns``, `notebool-03.py:215`). Inference
 can type ``created`` as string one run and long the next, defeating both
 predicate pushdown and oracle-stable hashing (SURVEY.md §1.3, §7.3) — so
-our engine declares every schema. The one read that still infers is
-``sources.readers.read_parquet`` called without a schema, over parquet
-the engine wrote itself.
+our engine declares every schema. The one read without a declared
+schema is ``sources.readers.read_parquet`` called without one, over
+parquet the engine wrote itself: it takes the schema Spark wrote into a
+file's footer.
 """
 
 from __future__ import annotations

@@ -5,13 +5,21 @@ the star schema (PDF guide p.33, Step 11.3; SURVEY.md §3.4), which Power
 BI imports into memory first. :func:`register_star_schema` is that import
 step: each view is the table coalesced to the partitions its size needs
 (one for a dashboard's star schema) and cached, so a gold query scans
-in-memory columns in one task with no shuffle. Import semantics:
+in-memory columns in one task with no shuffle. The import step starts
+no Spark job, and neither does a refresh: ``readers.read_parquet`` takes
+the silver schema from a footer read on the driver. A single-table query
+is then one job; a dimension join adds one for its broadcast. Import
+semantics:
 
 - the dashboard is a snapshot taken at refresh: the views serve the
   files listed when the tables were read, cached by the first query that
-  reads them, and a later write is not seen until the next refresh;
-- its cache lives until the next refresh replaces the views (replacing a
-  temp view uncaches the old one), so refreshes do not accumulate;
+  reads them, and a later write is not seen before the next refresh;
+- a refresh that changes a view's plan uncaches the old one, so
+  refreshes do not accumulate; one over the same paths and schema keeps
+  the cache (the plans are equal), so its queries fill none. Plan
+  equality does not see the files: rows rewritten under the same paths
+  by another application or a file move are still served from the old
+  cache;
 - the cache is ``MEMORY_AND_DISK``, so a star schema too big for storage
   memory spills to disk rather than fails.
 """
@@ -70,15 +78,20 @@ GOLD_QUERIES: dict[str, str] = {
         "FROM fact_engagement f JOIN dim_visitor v USING (visitor_id) "
         "GROUP BY v.country"
     ),
+    # a visitor is new on the date of their first engagement, found by a
+    # window over their visit dates (a self-join's broadcast is a job of
+    # its own); one row per visitor and date, so count(*) counts distinct
+    # visitors, and rows without a visitor_id count for no one
     "new_vs_returning": (
-        "WITH firsts AS (SELECT visitor_id, min(date) AS first_date "
-        "                FROM fact_engagement GROUP BY visitor_id) "
-        "SELECT f.date, "
-        "       CASE WHEN f.date = x.first_date THEN 'new' ELSE 'returning' END "
+        "WITH visits AS (SELECT DISTINCT visitor_id, date FROM fact_engagement "
+        "                WHERE visitor_id IS NOT NULL), "
+        "     firsts AS (SELECT date, min(date) OVER (PARTITION BY visitor_id) AS first_date "
+        "                FROM visits) "
+        "SELECT date, "
+        "       CASE WHEN date = first_date THEN 'new' ELSE 'returning' END "
         "         AS visitor_status, "
-        "       count(DISTINCT f.visitor_id) AS visitors "
-        "FROM fact_engagement f JOIN firsts x USING (visitor_id) "
-        "GROUP BY 1, 2"
+        "       count(*) AS visitors "
+        "FROM firsts GROUP BY 1, 2"
     ),
 }
 
