@@ -4,8 +4,11 @@ raw fixtures (FIXTURES.md §A; reference `notebool-03.py` semantics)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from wistia_video_analytics_project_spark import schemas
 from wistia_video_analytics_project_spark.operators import model, quality
@@ -80,6 +83,45 @@ def test_fact_engagement(spark, raw_visitors):
     # empty/null event arrays contribute nothing
     assert not any(m == "m2" for (m, _, _) in rows)
     quality.assert_unique(fact, ["media_id", "visitor_id", "date"])
+
+
+def _build_all(raw_media, raw_visitors, run_ts):
+    return (model.build_dim_media(raw_media, run_ts),
+            model.build_dim_visitor(raw_visitors, run_ts),
+            model.build_fact_engagement(raw_visitors, run_ts))
+
+
+def test_run_ts_is_utc_in_any_local_zone(spark, raw_media, raw_visitors):
+    """A naive ``run_ts`` is stamped as UTC wall time whatever the Python
+    process's local zone (``F.lit`` of a naive datetime converts through
+    it)."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Tokyo"
+    time.tzset()
+    try:
+        frames = _build_all(raw_media, raw_visitors, RUN_TS)
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    for df, col in zip(frames, ("processed_at", "processed_at", "loaded_at")):
+        stamps = {r[0] for r in df.select(F.col(col).cast("string")).collect()}
+        assert stamps == {str(RUN_TS)}, col
+
+
+def test_new_run_ts_compiles_no_code(spark, raw_media, raw_visitors):
+    """The run timestamp is not inlined into generated code: building and
+    collecting the star schema for a second run timestamp compiles no
+    class (Spark's codegen cache serves the first run's)."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for df in _build_all(raw_media, raw_visitors, RUN_TS):
+        df.collect()
+    before = compiles.getCount()
+    for df in _build_all(raw_media, raw_visitors, RUN_TS + dt.timedelta(days=1)):
+        df.collect()
+    assert compiles.getCount() == before
 
 
 def test_fact_schema_matches_declared(spark, raw_visitors):

@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
@@ -110,16 +113,23 @@ def test_unsized_frame_keeps_partitions(spark, star):
     assert sql.run_gold(spark, "total_plays").collect()[0].total_plays == 4
 
 
-#: Spark jobs per gold query over the imported star schema: one, plus
-#: one for the broadcast of a dimension join
+#: Spark jobs per gold query on its first run after a version change:
+#: one, plus one for the broadcast of a dimension join
 GOLD_JOBS = {q: 2 if "JOIN dim_" in text else 1 for q, text in sql.GOLD_QUERIES.items()}
+#: the first query to read each view after a version change also runs
+#: the job that fills its cache
+CACHE_FILLERS = {next(q for q, text in sql.GOLD_QUERIES.items() if v in text)
+                 for v in sql.STAR_VIEWS}
 
 
 def test_dashboard_job_budget(spark, silver_star, silver_frames):
     """A refresh (three silver reads and the import step) starts no Spark
-    job. Once a first pass has filled the cache (a refresh over unchanged
-    files keeps it), each gold query starts one job and a dimension join
-    one more: 13 jobs a pass."""
+    job. The first pass after a version change starts one job per gold
+    query, one more for each dimension join's broadcast and one more for
+    each view's cache: 16 jobs. A refresh over unchanged files keeps the
+    version, its cache, its prepared queries and their broadcasts, so a
+    repeat pass runs the same query objects again, each with its one scan
+    job: 10 jobs."""
     sched = spark.sparkContext._jsc.sc().dagScheduler()
 
     def jobs(fn) -> int:
@@ -131,13 +141,123 @@ def test_dashboard_job_budget(spark, silver_star, silver_frames):
         frames = [readers.read_parquet(spark, silver_star[n]) for n in sql.STAR_VIEWS]
         sql.register_star_schema(spark, *frames)
 
-    assert sum(v == 2 for v in GOLD_JOBS.values()) == 3
-    refresh()
-    for q in sql.GOLD_QUERIES:
-        sql.run_gold(spark, q).collect()
+    assert sum(v == 2 for v in GOLD_JOBS.values()) == 3 and len(CACHE_FILLERS) == 3
+    for name in sql.STAR_VIEWS:  # whatever an earlier test registered
+        spark.catalog.dropTempView(name)
     got = {"refresh": jobs(refresh)}
-    got.update((q, jobs(lambda q=q: sql.run_gold(spark, q).collect())) for q in sql.GOLD_QUERIES)
-    assert got == {"refresh": 0, **GOLD_JOBS}
+    prepared = {q: sql.run_gold(spark, q) for q in sql.GOLD_QUERIES}
+    got.update((q, jobs(df.collect)) for q, df in prepared.items())
+    assert got == {"refresh": 0, **{q: n + (q in CACHE_FILLERS) for q, n in GOLD_JOBS.items()}}
+    got = {"refresh": jobs(refresh)}
+    assert all(sql.run_gold(spark, q) is df for q, df in prepared.items())
+    got.update((q, jobs(df.collect)) for q, df in prepared.items())
+    assert got == {"refresh": 0, **dict.fromkeys(sql.GOLD_QUERIES, 1)}
+
+
+def _write_star(spark, root, rows: int) -> None:
+    """A star schema of ``rows`` rows a table under ``root``, one play per
+    fact row, written by Spark."""
+    ids = spark.range(rows)
+    ids.selectExpr("concat('m', id) AS media_id", "'clip' AS title", "'Wistia' AS channel"
+                   ).write.parquet(str(root / "dim_media"))
+    ids.selectExpr("concat('v', id) AS visitor_id", "'US' AS country"
+                   ).write.parquet(str(root / "dim_visitor"))
+    ids.selectExpr("concat('m', id) AS media_id", "concat('v', id) AS visitor_id",
+                   "DATE'2024-06-01' AS date", "1L AS play_count",
+                   "60.0D AS total_watch_time_seconds", "50.0D AS avg_percent_watched",
+                   ).write.parquet(str(root / "fact_engagement"))
+
+
+@pytest.fixture
+def tiny_star(spark, tmp_path):
+    """A 5-row star schema under ``tmp_path / "live"`` -> (its root, a
+    refresh that reads it into a session and registers it). The views the
+    test registers in ``spark`` are dropped after it."""
+    root = tmp_path / "live"
+    _write_star(spark, root, 5)
+
+    def refresh(session=spark):
+        sql.register_star_schema(
+            session, *(readers.read_parquet(session, str(root / n)) for n in sql.STAR_VIEWS))
+
+    yield root, refresh
+    for name in sql.STAR_VIEWS:
+        spark.catalog.dropTempView(name)
+
+
+def _total_plays(session) -> int:
+    return sql.run_gold(session, "total_plays").collect()[0].total_plays
+
+
+def test_refresh_sees_tables_moved_in_place(spark, tiny_star, tmp_path):
+    """The three tables rewritten by Spark under other paths and moved in
+    place: the views keep serving their snapshot until the next refresh,
+    which serves the new rows (plan equality alone kept the old cache:
+    a parquet relation's plan holds its root paths, not its files)."""
+    root, refresh = tiny_star
+    refresh()
+    assert _total_plays(spark) == 5
+    _write_star(spark, tmp_path / "next", 7)
+    for name in sql.STAR_VIEWS:
+        shutil.rmtree(root / name)
+        shutil.move(tmp_path / "next" / name, root / name)
+    assert _total_plays(spark) == 5
+    refresh()
+    assert _total_plays(spark) == 7
+    assert sorted(sql.run_gold(spark, "top10_videos").collect())[-1].media_id == "m6"
+
+
+def test_refresh_sees_same_name_rewrite(spark, tiny_star):
+    """A fact file rewritten under its own name by another writer (its
+    size and modification time change, its name does not) is read again
+    by the next refresh."""
+    root, refresh = tiny_star
+    refresh()
+    assert _total_plays(spark) == 5
+    part = next(p for p in sorted((root / "fact_engagement").glob("part-*.parquet"))
+                if pq.read_metadata(p).num_rows)
+    table = pq.read_table(part)
+    pq.write_table(pa.concat_tables([table, table]), part)
+    # Hadoop's local file system checks a file against its ``.crc``
+    # sidecar, which the other writer does not rewrite
+    (part.parent / f".{part.name}.crc").unlink()
+    refresh()
+    assert _total_plays(spark) == 5 + table.num_rows
+
+
+def test_replaced_or_dropped_view_is_planned_again(spark, tiny_star):
+    """A view replaced or dropped after registration is not served from
+    the prepared query: ``run_gold`` plans over the session's views as
+    they are, and the next refresh prepares anew."""
+    root, refresh = tiny_star
+    refresh()
+    prepared = sql.run_gold(spark, "total_plays")
+    assert prepared.collect()[0].total_plays == 5
+    spark.createDataFrame([(3,)], "play_count long").createOrReplaceTempView("fact_engagement")
+    replaced = sql.run_gold(spark, "total_plays")
+    assert replaced is not prepared and replaced.collect()[0].total_plays == 3
+    spark.catalog.dropTempView("fact_engagement")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        sql.run_gold(spark, "total_plays")
+    refresh()
+    assert sql.run_gold(spark, "total_plays") is not prepared
+    assert _total_plays(spark) == 5
+
+
+def test_new_session_inherits_nothing(spark, tiny_star):
+    """Registrations and prepared queries belong to one session: a new
+    session has no star views, and its own refresh prepares its own
+    queries."""
+    root, refresh = tiny_star
+    refresh()
+    prepared = sql.run_gold(spark, "total_plays")
+    other = spark.newSession()
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        sql.run_gold(other, "total_plays")
+    refresh(other)
+    mine = sql.run_gold(other, "total_plays")
+    assert mine is not prepared and mine is sql.run_gold(other, "total_plays")
+    assert _total_plays(other) == 5 and sql.run_gold(spark, "total_plays") is prepared
 
 
 def test_read_parquet_footer_schema_equals_inferred(spark, silver_star, tmp_path):

@@ -8,8 +8,8 @@ the domain constant ``play_rate = play_count / 10.0`` at
 the *mechanics* are corrected for determinism and scale:
 
 - ``processed_at``/``loaded_at`` are stamped from a caller-supplied run
-  timestamp literal, not ``current_timestamp()`` (which re-evaluates per
-  action and breaks frame-to-frame comparisons, SURVEY.md §7.3).
+  timestamp, not ``current_timestamp()`` (which re-evaluates per action
+  and breaks frame-to-frame comparisons, SURVEY.md §7.3).
 - surrogate keys are content hashes, not ``monotonically_increasing_id``.
 - dedup uses a deterministic ordering, never ``orderBy(lit(1))``.
 """
@@ -28,8 +28,19 @@ from . import conform, quality
 PLAY_RATE_DENOMINATOR = 10.0
 
 
-def _ts_lit(run_ts: dt.datetime):
-    return F.lit(run_ts).cast("timestamp")
+def _with_run_ts(df: DataFrame, run_ts: dt.datetime, name: str) -> DataFrame:
+    """``df`` plus a column ``name`` holding ``run_ts``; a naive ``run_ts``
+    is UTC (``F.lit`` alone reads it in the Python process's local zone).
+
+    The value enters the plan as a one-element array literal exploded
+    beside each row. A scalar timestamp literal is inlined into the
+    generated Java, so each new run timestamp missed Spark's codegen
+    cache (8 Janino compiles a daily run); an array literal is passed to
+    the generated code as a reference, so the code is the same for every
+    run timestamp."""
+    if run_ts.tzinfo is None:
+        run_ts = run_ts.replace(tzinfo=dt.timezone.utc)
+    return df.select("*", F.explode(F.array(F.lit(run_ts))).alias(name))
 
 
 def build_dim_media(raw_media: DataFrame, run_ts: dt.datetime) -> DataFrame:
@@ -42,14 +53,14 @@ def build_dim_media(raw_media: DataFrame, run_ts: dt.datetime) -> DataFrame:
     shuffle.
     """
     dim = conform.select_rename(
-        raw_media,
+        _with_run_ts(raw_media, run_ts, "processed_at"),
         {
             "media_id": "hashed_id",
             "title": F.coalesce(F.col("name"), F.lit("Untitled")),
             "url": conform.media_url("hashed_id"),
             "channel": conform.classify_channel("name"),
-            "created_at": conform.epoch_to_timestamp("created", fallback=_ts_lit(run_ts)),
-            "processed_at": _ts_lit(run_ts),
+            "created_at": conform.epoch_to_timestamp("created", fallback=F.col("processed_at")),
+            "processed_at": "processed_at",
         },
     )
     dim = conform.repair_key(dim, "media_id", "media", ["title", "url", "created_at"])
@@ -62,12 +73,12 @@ def build_dim_visitor(raw_visitors: DataFrame, run_ts: dt.datetime) -> DataFrame
     Same shape as :func:`build_dim_media`: PK repair, then keep-first
     dedup on visitor_id, which also drops exact duplicates."""
     dim = conform.select_rename(
-        raw_visitors,
+        _with_run_ts(raw_visitors, run_ts, "processed_at"),
         {
             "visitor_id": "visitor_key",
             "ip_address": F.coalesce(F.col("ip_address"), F.lit("Unknown")),
             "country": F.coalesce(F.col("country"), F.lit("Unknown")),
-            "processed_at": _ts_lit(run_ts),
+            "processed_at": "processed_at",
         },
     )
     dim = conform.repair_key(dim, "visitor_id", "visitor", ["ip_address", "country"])
@@ -121,8 +132,8 @@ def build_fact_engagement(
                 F.avg(F.coalesce(F.col("event.percent_watched").cast("double"), F.lit(0.0))), 2
             ).alias("avg_percent_watched"),
         )
-        .withColumn("loaded_at", _ts_lit(run_ts))
     )
+    fact = _with_run_ts(fact, run_ts, "loaded_at")
     return conform.all_keys_present(fact, ["media_id", "visitor_id"]).filter(
         F.col("date").isNotNull()
     )
