@@ -113,7 +113,7 @@ def q_gold_fact_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r2 hash mismatch with rows+schema matching), and the decimal cast
     is lossless here (inputs pre-rounded to 2dp) so the double view is
     value-identical. ``gold.to_gold_fact`` itself keeps true decimals
-    for the JDBC sink path (tested in tests/test_gold.py)."""
+    (tested in tests/test_gold.py)."""
     fact = q_fact_engagement_build(spark, sf_dir)
     g = gold.to_gold_fact(fact)
     return g.select(
@@ -2482,7 +2482,8 @@ def _fake_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize binary assets from documents: payload = utf8 bytes of
     the text, duration derived from n_chars — deterministic, lets the
     multimodal metadata and frame-grid bindings run against driver
-    testdata. The payloads are plain text, not media bytes."""
+    testdata. The payloads are plain text, not media bytes; nothing
+    decodes them, only their length and hash are read."""
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").alias("asset_id"),
@@ -2528,11 +2529,9 @@ def q_scd2_customer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column feature extraction (Arrow-batched mapInPandas):
-    the metadata outputs (byte length, content hash) are engine-agnostic
-    and oracle-checked; the feature vector itself is engine-internal."""
-    feats = multimodal.extract_features(_fake_assets(spark, sf_dir))
-    return feats.select("asset_id", "media_type", "n_bytes", "content_sha256")
+    """Binary-column payload metadata: byte length and SHA-256 content
+    hash, both Spark built-ins (no Python stage)."""
+    return multimodal.asset_metadata(_fake_assets(spark, sf_dir))
 
 
 def q_frame_grid(spark: SparkSession, sf_dir: str) -> DataFrame:

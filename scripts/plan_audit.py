@@ -19,8 +19,8 @@ viability:
                      raw builds fail the audit.
 - ``python_stages``  Arrow/Pandas UDF stages (slow path — only the
                      queries in PYTHON_STAGE_ALLOWLIST may carry them:
-                     vector math, the multimodal feature stage, the
-                     count-min sketch merge and sequence packing)
+                     vector math, the count-min sketch merge and
+                     sequence packing)
 - ``unpart_window_unbounded``  an unpartitioned (single-task) window
                      whose input is a raw scan (``raw``) or an
                      aggregate keyed on an ENTITY id (``entity`` —
@@ -76,9 +76,6 @@ PYTHON_STAGE_ALLOWLIST = {
     "ann_lsh", "ann_ivf", "ann_pq", "ann_ivf_pq", "ann_mmr",
     "ann_ivf_full_probe", "als_ann_recommender", "semantic_dedup_lsh",
     "embedding_mahalanobis",
-    # the multimodal binding still runs extract_features' audio-decode
-    # mapInPandas stage and keeps only its metadata columns
-    "multimodal_metadata",
     # count-min sketch candidates merge in an Arrow-batched UDAF by
     # design (exact verification stays JVM-side)
     "heavy_hitter_users",

@@ -880,3 +880,11 @@ def test_gold_queries_scan_memory_without_shuffle(spark, silver_frames):
         assert "Exchange hashpartitioning" not in plan, (name, plan)
         if name != "new_vs_returning":
             assert "BroadcastExchange" in plan, (name, plan)
+
+
+def test_multimodal_metadata_no_python(spark):
+    """Payload length and content hash are Spark built-ins: the
+    metadata binding carries no Python stage."""
+    plan = plans.executed_plan(entrymod.q_multimodal_metadata(spark, SF_SMOKE))
+    for stage in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert stage not in plan, plan[:2000]

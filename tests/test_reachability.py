@@ -34,8 +34,6 @@ DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 KNOWN_TEST_ONLY = {
-    # the gold truncate-then-load SQL copy of the reference (PAPER.md §0)
-    "sinks/__init__.py:jdbc_truncate_load",
     # the streaming tier's distributed merge sink
     "streaming/jobs.py:foreach_batch_parquet_upsert",
 }

@@ -1,4 +1,4 @@
-"""Sources (REST ingester, watermark, parquet reader) and sinks (parquet, JDBC)."""
+"""Sources (REST ingester, watermark, parquet reader) and the parquet sink."""
 
 from __future__ import annotations
 
@@ -119,52 +119,26 @@ def test_parquet_sink_partitioned(spark, tmp_path):
     assert back.count() == 2
 
 
-def test_jdbc_truncate_load_roundtrip(spark):
-    """S8 gold load against Spark's bundled Derby: write, overwrite with
-    truncate semantics (idempotent rerun), read back."""
-    url = "jdbc:derby:memory:goldtest;create=true"
-    df1 = spark.createDataFrame(
-        [("m1", 5), ("m2", 7)], "media_id string, plays int"
-    )
-    sinks.jdbc_truncate_load(df1, url, "stg_fact", num_partitions=2)
-    df2 = spark.createDataFrame([("m3", 9)], "media_id string, plays int")
-    sinks.jdbc_truncate_load(df2, url, "stg_fact", num_partitions=2)  # rerun
-    back = (
-        spark.read.format("jdbc")
-        .option("url", "jdbc:derby:memory:goldtest")
-        .option("dbtable", "stg_fact")
-        .load()
-    )
-    assert [(r.media_id, r.plays) for r in back.collect()] == [("m3", 9)]
-
-
-def test_jdbc_gold_decimal_boundary(spark):
-    """S8 + gold DDL boundary: to_gold_fact types survive the JDBC write —
-    Derby stores and returns DECIMAL(5,2)/INT, including a clamped
-    >999.99 overflow row (`...ETL-Pipeline.json:437-450`)."""
+def test_gold_fact_decimal_boundary(spark):
+    """Gold DDL boundary: to_gold_fact gives DECIMAL(5,2)/INT columns,
+    rounds half up, and clamps a >999.99 overflow row
+    (`...ETL-Pipeline.json:437-450`)."""
     from decimal import Decimal
+
+    from pyspark.sql import types as T
 
     from wistia_video_analytics_project_spark.operators import gold
 
-    url = "jdbc:derby:memory:golddec;create=true"
     silver = spark.createDataFrame(
         [("m1", "v1", 1.3, 52.35, 123.6), ("m2", "v2", 5000.0, 12.0, 1.4)],
         "media_id string, visitor_id string, play_rate double, "
         "avg_percent_watched double, total_watch_time_seconds double",
     )
-    sinks.jdbc_truncate_load(gold.to_gold_fact(silver), url, "gold_fact", num_partitions=1)
-    back = (
-        spark.read.format("jdbc")
-        .option("url", "jdbc:derby:memory:golddec")
-        .option("dbtable", "gold_fact")
-        .load()
-    )
-    by_name = {f.name: f.dataType for f in back.schema.fields}
-    from pyspark.sql import types as T
-
+    out = gold.to_gold_fact(silver)
+    by_name = {f.name: f.dataType for f in out.schema.fields}
     assert by_name["play_rate"] == T.DecimalType(5, 2)
     assert by_name["total_watch_time"] == T.IntegerType()
-    rows = {r.media_id: r for r in back.collect()}
+    rows = {r.media_id: r for r in out.collect()}
     assert rows["m1"].play_rate == Decimal("1.30")
     assert rows["m1"].total_watch_time == 124
     assert rows["m2"].play_rate == Decimal("999.99")  # clamped overflow

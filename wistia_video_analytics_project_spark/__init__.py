@@ -15,7 +15,7 @@ Layout (see SURVEY.md §7.1):
 - ``schemas``    — explicit StructTypes for every table (no silent inference)
 - ``sources``    — schema-enforced parquet reader, incremental bronze JSON
   reads, REST ingester, watermark
-- ``sinks``      — parquet (partitioned), jdbc truncate-load
+- ``sinks``      — parquet (partitioned)
 - ``operators``  — named, tested DataFrame -> DataFrame operators:
   ``conform`` (projections/casts/scalar funcs), ``model`` (dim/fact
   builders), ``quality`` (Q1-Q5), ``analytics`` (gold queries, windows,

@@ -12,7 +12,8 @@ Each module groups one family from the operator inventory:
 - ``dedup``      — exact + near-duplicate detection (extensions)
 - ``similarity`` — embedding similarity search (extensions)
 - ``text``       — text analysis: lang-id, quality, tokens, fingerprints
-- ``multimodal`` — binary-column decode/feature plumbing (extensions)
+- ``multimodal`` — binary-column payload metadata and frame grid
+                   (extensions)
 
 An operator needs a caller other than a test: the registry in
 ``__spark_entry__.py``, the pipeline, ``bench.py``, ``scripts/`` or

@@ -62,9 +62,8 @@ def to_gold_fact(
     ``total_watch_time_seconds`` -> ``total_watch_time`` to match the
     SQL DDL, applies the decimal/int boundary casts, and leaves key
     columns untouched (so partition pruning and PK semantics survive).
-    Apply this immediately before ``sinks.jdbc_truncate_load`` so the
-    JDBC writer creates/loads true ``DECIMAL(5,2)`` / ``INT`` columns
-    instead of doubles.
+    The result carries true ``DECIMAL(5,2)`` / ``INT`` columns instead
+    of doubles.
     """
     return (
         fact.withColumn(rate_col, decimal_5_2(rate_col))

@@ -134,7 +134,7 @@ def wistia_pipeline(
     """The reference DAG shape: ingest -> transform -> 3 parallel loads.
 
     ``sink(table_name, df, ctx)`` is called for each star-schema table —
-    wire it to ``sinks.write_parquet`` / ``sinks.jdbc_truncate_load``.
+    wire it to ``sinks.write_parquet``.
     The three calls run concurrently, each on its own stage thread.
     """
     from .operators import model
